@@ -1069,7 +1069,8 @@ object SparkEntry {
       Similarity.lshTopK(emb, emb.filter(col("vec_id") < 5),
         "embedding", "vec_id", k = 5, bits = 8)
     },
-    // Full value oracle despite the MLlib k-means: training isn't
+    // Full value oracle despite the driver-side k-means: training (a
+    // seeded k-means++ + Lloyd over a collected sample) isn't
     // SQL-replayable, but the RUN exports its trained centroids
     // (ivfTopK exportDir) and everything downstream — raw-dot argmax
     // assignment (normalization provably drops out of the argsort),

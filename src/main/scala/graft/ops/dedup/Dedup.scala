@@ -281,8 +281,13 @@ final case class MinHashDeduplicateFilter(inputKey: String = "text",
     *    min-orderKey member(s) the moment the bucket overflows the cap
     *    (sorted input: the min rows are the buffer's head) and verifies
     *    the rest against that pool — the same documented approximation.
+    *    The pool holds at most cap+1 rows: min-key rows streamed after
+    *    the overflow are kept but never pooled, so when more than cap+1
+    *    rows share the minimum key, a later row matching only one of
+    *    those unpooled rows survives (the join would drop it).
     *  - rows sharing an orderKey value never pair (the join's strict
-    *    i < j); the walk skips equal-key pairs explicitly. */
+    *    i < j); the walk skips equal-key pairs explicitly, in both
+    *    bucket modes. */
   private[graft] def bandVerifyDups(banded: DataFrame): DataFrame = {
     val parted = banded
       .select(col("__band"), col(orderKey), col("__sh"))
@@ -314,14 +319,17 @@ final case class MinHashDeduplicateFilter(inputKey: String = "text",
               a
             }
             if (nMin > 0) {
-              // big bucket: stream against the frozen min pool
-              var k = 0; var hit = false
-              while (!hit && k < nMin) {
-                if (graft.functions.kernels.jaccardSorted(shs(k), sh) >= th)
-                  hit = true
-                k += 1
+              // big bucket: stream against the frozen min pool; a row
+              // sharing the pool's (minimum) orderKey never pairs
+              if (id != ids(0)) {
+                var k = 0; var hit = false
+                while (!hit && k < nMin) {
+                  if (graft.functions.kernels.jaccardSorted(shs(k), sh) >= th)
+                    hit = true
+                  k += 1
+                }
+                if (hit) out.enqueue(Row(id))
               }
-              if (hit) out.enqueue(Row(id))
             } else {
               ids += id; shs += sh
               if (ids.length > cap) {
@@ -419,9 +427,12 @@ final case class MinHashDeduplicateFilter(inputKey: String = "text",
     * shuffle files can be reclaimed before the next wave shuffles. Peak
     * scratch ≈ single-pass footprint / groups; the result is EXACTLY the
     * single-pass result (bands partition into waves; every band bucket —
-    * hence every candidate pair — lives wholly inside one wave). */
+    * hence every candidate pair — lives wholly inside one wave).
+    * `afterWave` is called with 0 once the shared inputs are
+    * materialized and with g once wave g's shuffles are removed (a test
+    * probe of the per-wave reclamation; production callers omit it). */
   private[graft] def groupedDuplicateIds(withSh: DataFrame,
-      groups: Int): DataFrame = {
+      groups: Int, afterWave: Int => Unit = _ => ()): DataFrame = {
     val sc = withSh.sparkSession.sparkContext
     val (identDups, reps) = collapseIdentical(withSh)
     // DISK_ONLY, deliberately: this cache exists only when the corpus
@@ -440,6 +451,7 @@ final case class MinHashDeduplicateFilter(inputKey: String = "text",
       // all that survives for later waves to read
       val identIds = identDups.localCheckpoint() // eager
       repsB.count()
+      afterWave(0)
       val per = bands / groups
       val extra = bands % groups
       // wave g covers [start, start+len) of the band-key array
@@ -487,6 +499,7 @@ final case class MinHashDeduplicateFilter(inputKey: String = "text",
         org.apache.spark.graftbridge.ShuffleCleanup.removeShuffles(sc, created)
         println(s"""{"metric":"minhash_wave","wave":${g + 1},"of":$groups,""" +
           s""""bands":$len,"shuffles_removed":${created.size}}""")
+        afterWave(g + 1)
         ids
       }
       (identIds +: waves).reduce(_ union _).distinct()

@@ -41,10 +41,14 @@ object CorpusEvaluators {
     // the side tag is POSITIONAL (pos < |pred words| = pred side), not a
     // per-token struct/string: one concat of the two existing token
     // arrays and an int compare per token — a struct-wrapping variant
-    // measured ~2× the per-token CPU at ×10
+    // measured ~2× the per-token CPU at ×10. A null text is an empty
+    // token list, so a null-pred pair still adds its ref tokens to
+    // dfreq and scores 0 (concat of a null side would be null and drop
+    // the whole pair).
+    val none = array().cast("array<string>")
     val tagged = parted
-      .select(col(idKey), words(col(predKey)).as("__wp"),
-        words(col(refKey)).as("__wr"))
+      .select(col(idKey), coalesce(words(col(predKey)), none).as("__wp"),
+        coalesce(words(col(refKey)), none).as("__wr"))
       .select(col(idKey), size(col("__wp")).as("__np"),
         posexplode(concat(col("__wp"), col("__wr"))).as(Seq("__pos", "tok")))
     val tf = tagged.groupBy(idKey, "tok").agg(

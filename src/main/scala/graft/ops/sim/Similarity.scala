@@ -46,6 +46,18 @@ object Similarity {
     * corpus ran 546 s un-healed vs 78 s at full width. */
   val MinHealQueries: Long = 1024L
 
+  /** [[ivfTopK]] training rows per list (FAISS's
+    * `max_points_per_centroid`): the sample is capped at
+    * `MaxTrainPerList × nLists` rows, which bounds driver memory. */
+  private[graft] val MaxTrainPerList: Int = 256
+
+  /** Most Lloyd rounds after k-means++ seeding in [[trainIvf]]. A round
+    * costs m × nLists × dim multiply-adds on the driver (4.2 M at
+    * 4096 × 16 × 64). Over 12 seeds of RecallSpec's uniform corpus,
+    * 20 rounds lifted the mean nProbe=4/16 recall@10 from 0.642 (5
+    * rounds) to 0.661. */
+  private[graft] val IvfLloydRounds: Int = 20
+
   /** Sequential-fold cosine via the native codegen'd expression — same
     * IEEE op order as a left-fold SQL oracle, bit-reproducible. */
   def cosine(a: Column, b: Column): Column =
@@ -307,9 +319,20 @@ object Similarity {
     * of all of it; `nProbe = nLists` degrades to exact brute force
     * (the recall test's invariant).
     *
-    * Centroids come from MLlib KMeans over L2-normalized vectors (fixed
-    * seed) — nearest-by-dot-product on normalized inputs orders the same
-    * as cosine, matching the exact cosine rank inside each list.
+    * Training runs on the driver: the first
+    * `min(maxTrain, MaxTrainPerList × nLists)` non-null corpus vectors
+    * are collected in ONE job as primitive `double[]` rows, L2-normalized
+    * in place, seeded with k-means++ (`scala.util.Random(seed)`) and
+    * refined by [[IvfLloydRounds]] Lloyd rounds (see [[trainIvf]]).
+    * Driver memory is bounded by the sample: at most
+    * `nLists × 256 × dim × 8` bytes — 2 MiB at 16 lists × 64 dims —
+    * whatever the corpus size. The cap follows FAISS's
+    * `max_points_per_centroid`, which subsamples k-means input to 256
+    * rows per centroid. Any centroid set gives
+    * exact-ranked results inside the probed lists; centroid quality only
+    * shapes recall at a given `nProbe`. A sample with fewer distinct
+    * vectors than `nLists` yields fewer lists; an empty one yields none
+    * (and an empty result).
     *
     * `exportDir`: when set, the trained centroids are written to
     * `$exportDir/rows_<corpusCount>` as (list_id, center, sf_rows) —
@@ -323,28 +346,15 @@ object Similarity {
       seed: Long = 42L, maxTrain: Int = 100000,
       exportDir: Option[String] = None,
       minHealQueries: Long = MinHealQueries): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
+    require(nLists >= 1 && maxTrain >= 1,
+      s"nLists and maxTrain must be positive, got $nLists and $maxTrain")
     val c = corpus.select(col(idKey).as("neighbor_id"),
       col(embKey).cast("array<double>").as("__ce"))
     val q = queries.select(col(idKey).as("query_id"),
       col(embKey).cast("array<double>").as("__qe"))
-    val unit = udf { v: Seq[Double] =>
-      val n = math.sqrt(v.map(x => x * x).sum)
-      if (n == 0) v.toArray else v.map(_ / n).toArray
-    }
-    // few iterations: centroid quality only shapes recall-per-probe, the
-    // exact in-list ranking is centroid-agnostic — 5 Lloyd rounds is the
-    // IVF sweet spot, not convergence
-    val km = new KMeans().setK(nLists).setSeed(seed).setMaxIter(5)
-      .setFeaturesCol("__nv").setPredictionCol("__list")
-    // quantizer trains on a bounded sample — full-corpus k-means at scale
-    // is wasted work; ANY centroid set yields correct (exact-ranked)
-    // results, centroid quality only shapes recall at a given nProbe
-    val trainDf = c.limit(maxTrain)
-      .select(array_to_vector(unit(col("__ce"))).as("__nv"))
-    val centers: Array[Array[Double]] =
-      km.fit(trainDf).clusterCenters.map(_.toArray)
+    // trained on the UNHEALED c: `limit` on a repartitioned corpus would
+    // pick different rows, and centroids must not depend on a heal
+    val centers = trainIvf(ivfSample(c, "__ce", nLists, maxTrain), nLists, seed)
     exportDir.foreach { base =>
       val spark = corpus.sparkSession
       import spark.implicits._
@@ -383,10 +393,8 @@ object Similarity {
     // query set starves exactly as lshTopK did pre-heal. The query
     // count (one job over the ids-only projection — the sideCounts
     // cost class) is paid only when the scan is actually starved
-    // (by-name in [[probeHealWidth]]). The k-means TRAINING slice and
-    // the centroid export stay on the unhealed `c`: `limit(maxTrain)`
-    // on a repartitioned corpus would pick different training rows,
-    // and centroids must not depend on a parallelism heal.
+    // (by-name in [[probeHealWidth]]). The training sample and the
+    // centroid export stay on the unhealed `c` (see above).
     // oneJobCount is shuffle-safe since r16 (ADVICE): a query set with
     // shuffle lineage falls back to an AQE-managed count instead of
     // finalizing its exchanges through toRdd.
@@ -408,6 +416,95 @@ object Similarity {
       .where(col("neighbor_id") =!= col("query_id"))
       .withColumn("cos", cosine(col("__qe"), col("__ce")))
     rankTopK(scored, k)
+  }
+
+  /** The [[ivfTopK]] training sample: the first
+    * `min(maxTrain, MaxTrainPerList × nLists)` non-null vectors of
+    * `c(key)`, collected in one job through a primitive `double[]`
+    * encoder and L2-normalized in place. Rows whose squared norm is not
+    * finite are dropped; shorter rows are zero-padded to the longest
+    * row's width. */
+  private[graft] def ivfSample(c: DataFrame, key: String, nLists: Int,
+      maxTrain: Int): Array[Array[Double]] = {
+    val spark = c.sparkSession
+    import spark.implicits._
+    val cap = math.min(maxTrain.toLong, MaxTrainPerList.toLong * nLists).toInt
+    val rows = c.select(col(key)).where(col(key).isNotNull).limit(cap)
+      .as[Array[Double]].collect()
+      .filter { v =>
+        var s = 0.0; var i = 0
+        while (i < v.length) { s += v(i) * v(i); i += 1 }
+        if (s > 0 && !s.isInfinite) {
+          val n = math.sqrt(s)
+          i = 0; while (i < v.length) { v(i) /= n; i += 1 }
+        }
+        !s.isNaN && !s.isInfinite
+      }
+    val dim = if (rows.isEmpty) 0 else rows.map(_.length).max
+    rows.map(v => if (v.length < dim) java.util.Arrays.copyOf(v, dim) else v)
+  }
+
+  /** Seeded k-means over equal-width rows: k-means++ seeding (each next
+    * centre drawn with probability ∝ squared distance to the nearest
+    * chosen one), then up to [[IvfLloydRounds]] Lloyd rounds under
+    * squared Euclidean distance, stopping early once no row changes
+    * list. An empty cluster keeps its previous centre. Returns
+    * `min(nLists, distinct rows)` centres — none for an empty sample. */
+  private[graft] def trainIvf(pts: Array[Array[Double]], nLists: Int,
+      seed: Long): Array[Array[Double]] = {
+    val m = pts.length
+    if (m == 0) return Array.empty
+    val dim = pts(0).length
+    def sq(a: Array[Double], b: Array[Double]): Double = {
+      var s = 0.0; var i = 0
+      while (i < dim) { val d = a(i) - b(i); s += d * d; i += 1 }
+      s
+    }
+    val rnd = new scala.util.Random(seed)
+    val seeded = scala.collection.mutable.ArrayBuffer(pts(rnd.nextInt(m)).clone())
+    val d2 = pts.map(sq(_, seeded(0)))
+    var total = d2.sum
+    while (seeded.length < nLists && total > 0) {
+      // walk the D² mass; `last` absorbs rounding past the final row
+      var r = rnd.nextDouble() * total
+      var pick = -1; var last = -1; var i = 0
+      while (pick < 0 && i < m) {
+        if (d2(i) > 0) { last = i; if (r < d2(i)) pick = i else r -= d2(i) }
+        i += 1
+      }
+      val ct = pts(if (pick < 0) last else pick).clone()
+      seeded += ct
+      i = 0; while (i < m) { d2(i) = math.min(d2(i), sq(pts(i), ct)); i += 1 }
+      total = d2.sum
+    }
+    val cs = seeded.toArray
+    val k = cs.length
+    val assign = Array.fill(m)(-1)
+    var round = 0; var moved = true
+    while (moved && round < IvfLloydRounds) {
+      moved = false
+      val sums = Array.ofDim[Double](k, dim)
+      val counts = new Array[Int](k)
+      var i = 0
+      while (i < m) {
+        var best = 0; var bd = sq(pts(i), cs(0)); var j = 1
+        while (j < k) {
+          val d = sq(pts(i), cs(j)); if (d < bd) { bd = d; best = j }; j += 1
+        }
+        if (assign(i) != best) { assign(i) = best; moved = true }
+        counts(best) += 1
+        val s = sums(best); val v = pts(i)
+        j = 0; while (j < dim) { s(j) += v(j); j += 1 }
+        i += 1
+      }
+      var j = 0
+      while (j < k) {
+        if (counts(j) > 0) cs(j) = sums(j).map(_ / counts(j))
+        j += 1
+      }
+      round += 1
+    }
+    cs
   }
 
   /** Bucket-width auto-sizing for [[similarityJoin]] (`bits = 0`): with

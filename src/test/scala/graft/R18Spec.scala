@@ -15,7 +15,8 @@ import graft.ops.dedup.MinHashDeduplicateFilter
   *    PRESERVED — a pair of later members that would match under
   *    all-pairs semantics must NOT drop (the documented recall cap),
   *    even when the bucket overflows mid-stream.
-  * 3. Equal-orderKey rows never pair (the join's strict i < j).
+  * 3. Equal-orderKey rows never pair (the join's strict i < j), in
+  *    small buckets and past a big bucket's frozen pool alike.
   * 4. The walk's emissions stay ids-only and bucket-local: several
   *    buckets hashed into one partition don't leak witnesses across
   *    bucket boundaries.
@@ -89,6 +90,15 @@ class R18Spec extends AnyFunSuite {
     // but a later distinct id still drops against either equal-key row
     val rows2 = Seq((1L, a, 2L), (1L, a, 2L), (2L, a, 2L))
     assert(walk(banded(rows2)) == Set(2L))
+  }
+
+  test("witness walk: equal minimum orderKeys never pair in a big bucket") {
+    // cap 3: the first cap+1 rows (all key 1) overflow the buffer and
+    // freeze the pool; the two key-1 rows streamed after it must be
+    // skipped, not tested against their equal-key pool
+    val a = sh(0, 100)
+    val rows = Seq.fill(6)((1L, a, 3L)) :+ ((2L, a, 3L))
+    assert(walk(banded(rows), cap = 3) == Set(2L))
   }
 
   test("witness walk: buckets are independent across and within partitions") {

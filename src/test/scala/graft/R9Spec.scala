@@ -39,33 +39,25 @@ class R9Spec extends AnyFunSuite {
     val op = graft.ops.dedup.MinHashDeduplicateFilter()
     val withSh = op.shingled(docs).persist()
     try {
-      val before0 = ShuffleCleanup.liveShuffleIds(spark.sparkContext)
       val single = op.duplicateIds(withSh).collect().map(_.getLong(0)).toSet
-      // the single-pass plan's OWN shuffle count, measured — the leak
-      // assertion below is relative to it, so a benign planner/AQE change
-      // that adds an exchange moves both sides instead of flaking a
-      // hard-coded constant (round-9 ADVICE)
-      val singleCreated =
-        (ShuffleCleanup.liveShuffleIds(spark.sparkContext) -- before0).size
+      // live shuffles after the shared prologue (index 0) and after each
+      // wave: every wave must reclaim ALL of its own shuffles, so no
+      // post-wave snapshot holds a shuffle the prologue's lacks — one
+      // stranded wave shuffle fails. (The prologue's own shuffles may
+      // go earlier, through ContextCleaner, so the check is a subset.)
       val before = ShuffleCleanup.liveShuffleIds(spark.sparkContext)
-      val waved = op.groupedDuplicateIds(withSh, groups = 3)
+      val snaps = scala.collection.mutable.ArrayBuffer.empty[Set[Int]]
+      val waved = op.groupedDuplicateIds(withSh, groups = 3, afterWave = g => {
+        assert(g == snaps.length)
+        snaps += ShuffleCleanup.liveShuffleIds(spark.sparkContext) -- before
+      })
       val got = waved.collect().map(_.getLong(0)).toSet
       assert(got == single, "waved ids diverge from single-pass")
-      // every wave's shuffles were removed inside groupedDuplicateIds;
-      // what remains is at most the shared prologue (identical-set
-      // window behind identIds AND repsB — two plan instances) and the
-      // final union-distinct. Since the r18 witness walk the single-pass
-      // plan is itself small (ident window + band exchange + distinct —
-      // the merge-join sides it used to register are gone), so the waved
-      // remainder can EQUAL the single-pass count; the reclamation
-      // signal is proportional instead: a wave whose cleanup broke
-      // leaks its band exchange AND its pre-checkpoint distinct (≥ 2
-      // shuffles per broken wave), so even ONE broken wave pushes the
-      // count to singleCreated + 2.
-      val leaked = ShuffleCleanup.liveShuffleIds(spark.sparkContext) -- before
-      assert(leaked.size < singleCreated + 2,
-        s"expected wave shuffles to be reclaimed eagerly: ${leaked.size} new " +
-          s"live shuffles vs $singleCreated from the single-pass plan")
+      assert(snaps.length == 4, s"expected prologue + 3 wave snapshots: $snaps")
+      snaps.zipWithIndex.tail.foreach { case (s, g) =>
+        assert((s -- snaps.head).isEmpty, s"wave $g left shuffles " +
+          s"${s -- snaps.head} registered (prologue: ${snaps.head})")
+      }
     } finally withSh.unpersist(false)
   }
 

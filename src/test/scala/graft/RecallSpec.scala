@@ -6,10 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Round-6 gate: LSH/IVF recall quantified as DATA, not comments.
   *
   * Everything here is deterministic — the corpus is seeded, the LSH
-  * hyperplanes derive from md5 nibbles, and IVF's KMeans runs with a
-  * fixed seed — so the measured recalls are exact reproducible numbers.
-  * The asserted bands allow only for harmless re-measurement drift
-  * (e.g. a different Spark row order feeding KMeans' sample); the
+  * hyperplanes derive from md5 nibbles, and IVF's driver-side k-means
+  * runs with a fixed seed — so the measured recalls are exact
+  * reproducible numbers. The asserted bands allow only for harmless
+  * re-measurement drift (e.g. a different Spark row order feeding the
+  * k-means sample); the
   * measured values are recorded in COVERAGE.md.
   *
   * Theory for the LSH paths (8 sign-bits x 4 OR-amplified tables):
