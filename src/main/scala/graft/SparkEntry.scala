@@ -1309,13 +1309,11 @@ object SparkEntry {
           expr(s"least((__ns - ${lo}L) * 3 div ${hi - lo + 1}L, 2L)")).drop("__ns")
         val dirP = java.nio.file.Files.createTempDirectory("graft_sdh")
         val qn = "sdh_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        // r17 (guide §2.4/§2.3 — measured with dev.StreamDedupProbe): the
-        // old staging ran THREE serial filter+coalesce(1) write jobs, each
-        // a single-threaded full scan of events (~0.9 s/pass warm). One
-        // hash-repartition on the tier value + partitionBy writes all
-        // three tier files in one job (the scan stays parallel; each tier
-        // lands wholly in one task, so each __pt dir holds exactly one
-        // file): ~0.5 s/pass warm, identical bytes per tier.
+        // One hash-repartition on the tier value + partitionBy writes all
+        // three tier files in one job: the scan stays parallel, and each
+        // tier lands wholly in one task, so each __pt dir holds exactly
+        // one file (one filter+coalesce(1) write per tier would scan
+        // events three times, single-threaded).
         var ss: SparkSession = null
         try {
           val w = java.nio.file.Files.createTempDirectory("graft_sdh_w")
@@ -1343,24 +1341,20 @@ object SparkEntry {
               }
             }
           } finally deleteRecursively(w)
-          // State width derived from the staged volume (guide §2.2 "fewer,
-          // larger partitions", measured with dev.StreamDedupProbe): a
-          // stateful streaming query pins its state width to
+          // State width derived from the staged volume: a stateful
+          // streaming query pins its state width to
           // spark.sql.shuffle.partitions at start, and every micro-batch
           // pays a per-partition state-store load + commit (delta file +
-          // fsync) REGARDLESS of rows — at the bench's 2 MB staged input,
-          // 32-wide state made each of the 4 micro-batches (3 data + the
-          // watermark-eviction batch) a 2-4 s addBatch of almost pure
-          // store-commit overhead. Width scales with the bytes each
-          // micro-batch actually carries (one staged tier file), capped at
-          // the session's own shuffle width so a big-corpus run keeps the
-          // deployment's configured parallelism — nothing here is a
-          // local[32] constant. The kept SET is state-width-invariant
-          // (DISTINCT keys), so the oracle hash is unchanged.
+          // fsync) regardless of rows, so a wide state on a small input is
+          // almost pure commit overhead. Width is one partition per 32 MiB
+          // of the largest staged tier file (one micro-batch), capped at
+          // the session width so a big corpus keeps the deployment's
+          // parallelism. The kept SET is state-width-invariant (DISTINCT
+          // keys), so the oracle hash is unchanged.
           val maxFileBytes = (0 to 2).map(i => dirP.resolve(f"b$i%02d.parquet"))
             .filter(p => java.nio.file.Files.exists(p))
             .map(java.nio.file.Files.size(_)).foldLeft(0L)(math.max)
-          val sessionW = s.conf.get("spark.sql.shuffle.partitions").toInt
+          val sessionW = graft.core.Partitioning.sessionWidth(s)
           val stateW = math.max(1L, math.min(sessionW.toLong,
             (maxFileBytes + (32 << 20) - 1) / (32 << 20))).toInt
           // a sibling session scopes the width to THIS streaming query —

@@ -3,6 +3,7 @@ package graft.ops.eval
 import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Partitioning
 import graft.functions.text._
 
 /** Corpus-dependent evaluators — the two-pass family. */
@@ -24,20 +25,14 @@ object CorpusEvaluators {
     // carry exchanges (the callers self-join), so the one-job toRdd path
     // would forfeit AQE on a real plan to save two ~55 ms job floors
     val n = pairs.count().toDouble
-    // ONE tagged explode+aggregate yields both tf vectors per (id, tok) —
-    // replaces two separate exploded aggregates + a full-outer join.
-    // r18 (guide §2.3/§2.4/§2.5, the ciderD shape): the pair rows are
-    // exchanged BY id BEFORE one combined explode, instead of a
-    // two-branch union whose exploded token stream fed a (id, tok)
-    // exchange: HashPartitioning(id) satisfies both the (id, tok)
-    // aggregate and the final per-id cosine aggregate, so the corpus is
-    // exchanged ONCE (as text, ~2.3× fewer bytes than the tagged token
-    // stream), the explode runs at the derived width rather than the
-    // corpus scan's split count, and the union that defeated
-    // partitioning reuse is gone.
-    val width = graft.ops.sim.Similarity.autoEnumPartitions(
-      n.toLong, pairs.sparkSession)
-    val parted = pairs.repartition(width, col(idKey))
+    // ONE tagged explode+aggregate yields both tf vectors per (id, tok).
+    // The pair rows are exchanged by id, at [[Partitioning.widthFor]] the
+    // pair count, BEFORE the explode: HashPartitioning(id) satisfies both
+    // the (id, tok) aggregate and the final per-id cosine aggregate, so
+    // the corpus is exchanged once, as text, and the explode runs at
+    // that width rather than the scan's.
+    val parted = pairs.repartition(
+      Partitioning.widthFor(n.toLong, pairs.sparkSession), col(idKey))
     // the side tag is POSITIONAL (pos < |pred words| = pred side), not a
     // per-token struct/string: one concat of the two existing token
     // arrays and an int compare per token — a struct-wrapping variant
@@ -102,35 +97,19 @@ object CorpusEvaluators {
     // final per-(id, n, gram) tf table — the exploded ~2.3x-wider tagged
     // stream of earlier forms never enters the plan.
     //
-    // r18 (guide §2.3/§2.5, measured): the pair rows are EXCHANGED BY id
-    // BEFORE the generator instead of shipping the generated gram stream
-    // into a (id, n, gram) exchange after it. Three effects, all scale
-    // directions favorable:
-    //  - the corpus exchange carries the pair TEXTS (~10× fewer bytes
-    //    than the ~4-rows-per-token × ~40 B gram stream the old exchange
-    //    moved — §2.3 "project before the exchange" in reverse: generate
-    //    AFTER the exchange);
-    //  - the generator's md5-per-gram CPU runs at the repartition's
-    //    width instead of the corpus SCAN's split count (sf0.1's single
-    //    parquet split ran the whole gram pass on one core: cpu_ratio
-    //    1.46, 8→32-core scaling ratio 1.04 — §2.5 input starvation; the
-    //    width is nDocs-derived and clamped exactly like the sim
-    //    family's heals, so a real cluster's wide scan is NOT narrowed
-    //    and AQE's byte-based coalescing cannot starve a CPU-bound
-    //    stage it can't see);
-    //  - HashPartitioning(id) satisfies the groupBy(id, n, gram)
-    //    clustering, so the aggregate runs in the SAME exchange — plan
-    //    exchange count is unchanged — and `lens` below derives from the
-    //    same repartitioned child, so ReuseExchange serves tf and lens
-    //    from ONE pairs evaluation (the old shape computed the caller's
-    //    pairs join twice).
-    // The id keying keeps every corpus pass balanced (ids are uniform;
-    // the round-8 formC lesson about gram-skewed repartition(n, gram)
-    // partitions stands — the dfreq window below still re-exchanges by
-    // (n, gram) exactly as before).
-    val width = graft.ops.sim.Similarity.autoEnumPartitions(
-      nDocs.toLong, pairs.sparkSession)
-    val parted = pairs.repartition(width, col(idKey))
+    // The pair rows are exchanged by id, at [[Partitioning.widthFor]]
+    // the pair count, BEFORE the generator:
+    //  - the exchange carries the pair texts, ~10× fewer bytes than the
+    //    generated gram stream;
+    //  - the md5-per-gram CPU runs at that width, not at the scan's, and
+    //    AQE's byte-based coalescing cannot narrow it;
+    //  - HashPartitioning(id) satisfies the groupBy(id, n, gram), and
+    //    `lens` below derives from the same child, so one exchange (and
+    //    one pairs evaluation, via ReuseExchange) serves tf and lens.
+    // Ids are uniform, so every pass is balanced; the dfreq window below
+    // re-exchanges by (n, gram).
+    val parted = pairs.repartition(
+      Partitioning.widthFor(nDocs.toLong, pairs.sparkSession), col(idKey))
     val tf = parted.select(col(idKey),
       graft.functions.hashExpressions.pairNgramTf(
         words(col(predKey)), words(col(refKey)), maxN))
@@ -148,19 +127,14 @@ object CorpusEvaluators {
     // left to mis-plan. ~1.2× faster at ×100 (see BASELINE.md) and two
     // fewer corpus-sized Exchanges in the plan.
     //
-    // KNOWN CLUSTER-SCALE HAZARD (accepted, measured): WindowExec
-    // buffers each (n, gram) group in full before emitting, and a
-    // zipf-head unigram's group is corpus-sized — one task's
-    // spill-backed buffer that AQE skew handling cannot split. The
-    // skew-free alternative (dfreq as a partial aggregate merge-joined
-    // back, which STREAMS the skewed side) is exactly the pre-r7 shape;
-    // round-8's interleaved ×100 A/B re-measured it plus two
-    // single-exchange variants (CiderAB formC/formD: 79.2/78.2 s vs
-    // 61.8 s for this form), so the hazard is documented rather than
-    // traded for a measured 1.27× local regression. If a real-cluster
-    // run ever stalls on a head-gram window task, flip to the formD
-    // join-back shape in CiderAB — it buffers nothing group-sized, and
-    // row-identity at sf0.01 is pinned by `CiderAB --check`.
+    // KNOWN CLUSTER-SCALE HAZARD (accepted): WindowExec buffers each
+    // (n, gram) group in full before emitting, and a zipf-head unigram's
+    // group is corpus-sized — one task's spill-backed buffer that AQE
+    // skew handling cannot split. The skew-free alternative (dfreq as a
+    // partial (n, gram) aggregate merge-joined back onto tf, which
+    // streams the skewed side and buffers nothing group-sized) gives the
+    // same rows but ran ~1.27× slower at ×100 (79.2 vs 61.8 s). If a
+    // cluster run stalls on a head-gram window task, switch to it.
     val w = tf
       .withColumn("dfreq", sum(when(col("tf_r") > 0, 1L).otherwise(0L))
         .over(Window.partitionBy("n", "gram")))

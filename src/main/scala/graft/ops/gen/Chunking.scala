@@ -2,7 +2,7 @@ package graft.ops.gen
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.core.Op
+import graft.core.{Op, Partitioning}
 import graft.functions.text._
 
 /** Document chunking — the KBC chunk generator's four modes
@@ -85,21 +85,11 @@ final case class ChunkSplitter(inputKey: String = "text",
     val sentences = df.select(col(idKey),
       posexplode(filter(transform(split(col(inputKey), "[.!?]+"), s => trim(s)),
         s => s =!= "")).as(Seq("__sp", "__sent")))
-    // r18 (guide §2.2/§2.5, measured): when the corpus scan is NARROWER
-    // than the session's shuffle width, the per-sentence embed runs at
-    // the scan's split count (sf0.1's single parquet split: cpu_ratio
-    // 1.51 on 32 cores) because mapPartitions chains on the scan — the
-    // downstream id window re-exchanges anyway, so moving that exchange
-    // BEFORE the embed parallelizes the mock-embed at unchanged
-    // exchange count, and the exchange carries raw sentences instead of
-    // sentence+embedding rows. Zero-job gate (lazyScanWidth answers
-    // from planning alone); a cluster-scale wide scan is never
-    // narrowed — its plan is untouched.
-    val shufW = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    val parted = graft.ops.sim.Similarity.lazyScanWidth(sentences) match {
-      case Some(w) if w < shufW => sentences.repartition(shufW, col(idKey))
-      case _ => sentences
-    }
+    // The embed chains on the scan and runs at its width; the id window
+    // below exchanges by id anyway, so spreading a narrow scan by id
+    // moves that exchange before the embed (same exchange count, raw
+    // sentences instead of sentence+embedding rows on the wire).
+    val parted = Partitioning.spread("ChunkSplitter", sentences, col(idKey))(true)
     val embedded = graft.serving.LLMMap.embedded(parted, "__sent", "__emb", client)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(idKey).orderBy("__sp")

@@ -2,6 +2,7 @@ package graft.ops.sim
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Partitioning
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -20,9 +21,9 @@ object Similarity {
     *
     * This default is a per-deployment tuning surface, and the r14/r15
     * A/Bs priced both branches (BASELINE.md, digests identical):
-    *   - ×100 (200k vectors, 50k queries, single node): broadcast+heal
+    *   - ×100 (200k vectors, 50k queries, single node): broadcast+spread
     *     110.7 s vs merge fallback 116.4 s — a wash.
-    *   - ×1000 (2M vectors, 50k queries, single node): broadcast+heal
+    *   - ×1000 (2M vectors, 50k queries, single node): broadcast+spread
     *     434.8 s vs fallback 224.5 s — the FALLBACK wins 1.94× locally
     *     (shared-heap GC + hash-probe overhead at near-dup match
     *     multiplicity; the corpus shuffle it pays costs only local disk).
@@ -36,14 +37,12 @@ object Similarity {
     * raise it as far as executor memory tolerates the query build. */
   val MaxBroadcastQueries: Long = 100000L
 
-  /** Query-count floor for [[lshTopK]]'s broadcast-path parallelism
-    * heal (r14): below this, probe work per corpus row is light enough
-    * that an extra corpus shuffle costs more than the starvation — the
-    * sf0.1 bench shape (a handful of queries, 1-split corpus) must not
-    * pay a new exchange for nothing. Above it, probe work (qCount x
-    * bucket collisions per corpus row) dwarfs one pre-explode
-    * round-robin pass: measured at x100, 50k queries on a 2-split
-    * corpus ran 546 s un-healed vs 78 s at full width. */
+  /** Query-count floor below which [[lshTopK]] and [[ivfTopK]] never
+    * [[Partitioning.spread]] a narrow corpus: with few queries the probe
+    * work per corpus row is lighter than one extra corpus shuffle. Above
+    * it, probe work (queries × collisions per corpus row) dominates: at
+    * 50k queries on a 2-split 500k-vector corpus the probe stage ran
+    * 546 s at scan width vs 78 s at full width (32 cores). */
   val MinHealQueries: Long = 1024L
 
   /** [[ivfTopK]] training rows per list (FAISS's
@@ -116,7 +115,7 @@ object Similarity {
     * aggregator's input encoder already did, and `query_id` passes
     * through untouched (its type is part of the output schema). The
     * `mapPartitions` is narrow — it runs at the probe stage's own
-    * width, so the r14/r15 parallelism heals above it are unaffected. */
+    * width, so a [[Partitioning.spread]] above it still applies. */
   private[graft] def partialTopK(scored: DataFrame, k: Int): DataFrame = {
     val slim = scored.select(col("query_id"),
       col("neighbor_id").cast("long").as("neighbor_id"),
@@ -165,25 +164,20 @@ object Similarity {
   }
 
   /** Brute-force cosine top-k: for each query row, the k nearest corpus
-    * rows (excluding itself), ties broken by corpus id.
+    * rows (excluding itself), ties broken by corpus id. A null corpus
+    * vector is never a neighbour and a null query vector gets no rows
+    * (the semantics of every top-k here).
     *
-    * Parallelism boundary (r14, stated honestly): like every
-    * broadcast-probe shape, this map stage's task count equals the
-    * corpus scan's split count — a compact single-file corpus probed by
-    * a LARGE query set would starve exactly as [[lshTopK]] did before
-    * its heal. No heal here, deliberately: the gate needs a query
-    * count this signature doesn't have (adding one costs a job on the
-    * pinned baseline path), and brute force is BY CONTRACT the
-    * small-query exact baseline — a big query set belongs on
-    * [[lshTopK]] or [[ivfTopK]], both of which self-heal a
-    * split-starved probe stage (r14/r15; the rankTopK exchange below
-    * them parallelizes only the aggregation, not the probe work). */
+    * The probe stage runs at the corpus scan's width and is never
+    * spread: the gate would need a query count (one more job), and brute
+    * force is the small-query exact baseline — a big query set belongs on
+    * [[lshTopK]] or [[ivfTopK]]. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, embKey: String,
       idKey: String, k: Int): DataFrame = {
     val c = corpus.select(col(idKey).as("neighbor_id"),
-      col(embKey).cast("array<double>").as("__ce"))
+      col(embKey).cast("array<double>").as("__ce")).where(col("__ce").isNotNull)
     val q = queries.select(col(idKey).as("query_id"),
-      col(embKey).cast("array<double>").as("__qe"))
+      col(embKey).cast("array<double>").as("__qe")).where(col("__qe").isNotNull)
     val scored = c.crossJoin(broadcast(q))
       .where(col("neighbor_id") =!= col("query_id"))
       .withColumn("cos", cosine(col("__qe"), col("__ce")))
@@ -220,53 +214,26 @@ object Similarity {
     // fall back to a shuffle join (merge hint — both sides corpus-scale,
     // a static-estimate broadcast must not resurface) and say so loudly.
     //
-    // ONE job feeds both auto knobs (r13): r11 ran the auto-bits corpus
-    // count and this gate count as two separate eager DataFrame counts,
-    // and the r10-vs-r12 same-day A/B measured them as the one real
-    // code regression in the cross-round drift — a DataFrame count()
-    // under AQE is itself 2 jobs (stage materialization + final), so
-    // every lshTopK call paid 4 scheduling floors at bench scale, and
-    // two corpus-side passes where one suffices at any scale. A tagged
-    // ids-only union counted in a single runJob fixes both; when `bits`
-    // is explicit the corpus side isn't scanned at all.
+    // ONE job feeds both auto knobs: a tagged ids-only union counted in
+    // a single runJob (a DataFrame count() is 2 jobs under AQE); when
+    // `bits` is explicit the corpus side isn't scanned at all.
     val qIds = q0.select(lit(1).as("__side"))
     val (corpusN, qCount) = sideCounts(
       if (bits == 0) corpus.select(lit(0).as("__side")).unionAll(qIds)
       else qIds)
     val b = if (bits == 0) autoBits(corpusN) else bits
     val broadcastPath = qCount <= maxBroadcastQueries
-    // Parallelism self-heal (r14, measured): on the broadcast path the
-    // probe stage's task count equals the corpus SCAN's split count —
-    // there is no exchange to re-parallelize it — and probe work scales
-    // with qCount x bucket collisions, not with scan bytes. A compact
-    // corpus (x100 bench: 500k near-dup vectors = ONE 4.6 MB snappy
-    // file = 2 splits) then runs ~2000 core-s of cosine+dedup on 2 of
-    // 32 cores: 546 s wall vs 78 s for the merge fallback, SAME work,
-    // identical result digests (stage trace in BASELINE.md Round-14).
-    // When the scan is split-starved AND the query side is big enough
-    // for probe work to dominate, round-robin the corpus BEFORE the
-    // explode (pre-explode bytes, 1/tables of the exploded shuffle).
-    // On a real cluster a big corpus has thousands of splits, so this
-    // never fires and the no-corpus-shuffle contract stands; the merge
-    // fallback needs no heal (its own exchange re-parallelizes).
+    // On the broadcast path the probe stage runs at the corpus scan's
+    // width and its work grows with queries × collisions, so a large
+    // query set spreads a narrow corpus before the explode (pre-explode
+    // bytes, 1/tables of the exploded rows). The query floor is checked
+    // first: the width probe runs no job but still plans the corpus. The
+    // merge fallback's own exchange already runs at full width.
     val c0 = corpus.select(col(idKey).as("neighbor_id"),
       col(embKey).cast("array<double>").as("__ce"))
-    // qCount is already known here, so short-circuit BEFORE the gate:
-    // probeHealWidth's width probe is zero jobs but not zero cost (it
-    // builds a full QueryExecution for the corpus projection), and the
-    // small-query bench shape must stay plan-construction-identical to
-    // r14 (the r15 canary measured the dropped short-circuit as +80 ms
-    // on sim_lsh_topk — the only touched-family flag; restored).
-    val cPre = if (broadcastPath && qCount >= MinHealQueries) {
-      probeHealWidth(c0, qCount) match {
-        case Some(w) =>
-          org.slf4j.LoggerFactory.getLogger(getClass).info(
-            s"lshTopK: split-starved corpus under $qCount broadcast " +
-              s"queries — repartitioning to $w (probe-stage heal)")
-          c0.repartition(w)
-        case None => c0
-      }
-    } else c0
+    val cPre =
+      if (broadcastPath && qCount >= MinHealQueries) Partitioning.spread("lshTopK", c0)(true)
+      else c0
     val c = cPre
       .withColumn("__ba", CosineLsh.buckets(col("__ce"), b, dim, tables))
       .withColumn("__bucket", explode(col("__ba")))
@@ -332,7 +299,8 @@ object Similarity {
     * exact-ranked results inside the probed lists; centroid quality only
     * shapes recall at a given `nProbe`. A sample with fewer distinct
     * vectors than `nLists` yields fewer lists; an empty one yields none
-    * (and an empty result).
+    * (and an empty result). A null corpus vector is never a neighbour and
+    * a null query vector gets no rows.
     *
     * `exportDir`: when set, the trained centroids are written to
     * `$exportDir/rows_<corpusCount>` as (list_id, center, sf_rows) —
@@ -344,23 +312,21 @@ object Similarity {
   def ivfTopK(corpus: DataFrame, queries: DataFrame, embKey: String,
       idKey: String, k: Int, nLists: Int = 16, nProbe: Int = 4,
       seed: Long = 42L, maxTrain: Int = 100000,
-      exportDir: Option[String] = None,
-      minHealQueries: Long = MinHealQueries): DataFrame = {
+      exportDir: Option[String] = None): DataFrame = {
     require(nLists >= 1 && maxTrain >= 1,
       s"nLists and maxTrain must be positive, got $nLists and $maxTrain")
     val c = corpus.select(col(idKey).as("neighbor_id"),
       col(embKey).cast("array<double>").as("__ce"))
     val q = queries.select(col(idKey).as("query_id"),
-      col(embKey).cast("array<double>").as("__qe"))
-    // trained on the UNHEALED c: `limit` on a repartitioned corpus would
-    // pick different rows, and centroids must not depend on a heal
+      col(embKey).cast("array<double>").as("__qe")).where(col("__qe").isNotNull)
+    // trained on the unspread c: `limit` over a repartitioned corpus
+    // would pick different rows, and centroids must not depend on width
     val centers = trainIvf(ivfSample(c, "__ce", nLists, maxTrain), nLists, seed)
     exportDir.foreach { base =>
       val spark = corpus.sparkSession
       import spark.implicits._
-      // oneJobCount, not count(): c is an exchange-free projection, and
-      // even an oracle-only path shouldn't model 2-job gate counts as
-      // acceptable (r13 verdict #5 — the sideCounts treatment, applied)
+      // oneJobCount, not count(): one job on an exchange-free projection;
+      // every corpus row counts, matching the oracle's count(*)
       val nRows = oneJobCount(c)
       centers.zipWithIndex.toSeq
         .map { case (ct, i) => (i, ct.toSeq, nRows) }
@@ -383,31 +349,12 @@ object Similarity {
         (dot, i)
       }.sortBy(-_._1).take(probes).map(_._2)
     }
-    // Probe-stage parallelism heal (r15 — the r14 lshTopK heal, applied
-    // to its sibling, closing the r14 verdict's one weak mark):
-    // `assigned.join(broadcast(probed))` has no exchange below the
-    // cosine + partial-top-k stage, so that stage's task count equals
-    // the corpus SCAN's split count — the rankTopK exchange below it
-    // parallelizes only the aggregation, never the probe work above. A
-    // compact single-file corpus probed by a large nProbe-exploded
-    // query set starves exactly as lshTopK did pre-heal. The query
-    // count (one job over the ids-only projection — the sideCounts
-    // cost class) is paid only when the scan is actually starved
-    // (by-name in [[probeHealWidth]]). The training sample and the
-    // centroid export stay on the unhealed `c` (see above).
-    // oneJobCount is shuffle-safe since r16 (ADVICE): a query set with
-    // shuffle lineage falls back to an AQE-managed count instead of
-    // finalizing its exchanges through toRdd.
-    // minHealQueries: the gate floor as a knob (Long.MaxValue disables —
-    // the A/B switch, mirroring lshTopK's maxBroadcastQueries role)
-    val cProbe = probeHealWidth(c, oneJobCount(q), minHealQueries) match {
-      case Some(w) =>
-        org.slf4j.LoggerFactory.getLogger(getClass).info(
-          s"ivfTopK: split-starved corpus under a large broadcast query " +
-            s"set — repartitioning to $w (probe-stage parallelism heal)")
-        c.repartition(w)
-      case None => c
-    }
+    // The broadcast-probe stage runs at the corpus scan's width (the
+    // rankTopK exchange below parallelizes only the aggregation), so a
+    // large query set spreads a narrow corpus; the query count is one
+    // job, paid only when the corpus is narrow.
+    val cProbe = Partitioning.spread("ivfTopK", c.where(col("__ce").isNotNull))(
+      oneJobCount(q) >= MinHealQueries)
     val assigned = cProbe.withColumn("__list",
       nearestLists(col("__ce"), lit(1))(0))
     val probed = q.withColumn("__list",
@@ -529,166 +476,17 @@ object Similarity {
     math.min(24, math.max(8, needed))
   }
 
-  /** Partition count for [[similarityJoin]]'s enumerate stage (r12).
-    * The stage's task time is Σ C(bucket, 2) over the buckets a
-    * partition holds — quadratic per near-dup cluster — while its
-    * SHUFFLE BYTES are linear, so byte-driven machinery (AQE coalesce,
-    * AQE skew split at 5×-median/256 MB) mis-sizes it in both
-    * directions; the r11 ×1000 run measured the result: 23/32 tasks
-    * done at hour 7, a 9-task tail of ~60-cluster bundles (~325 CPU-s
-    * per cluster) pinning the stage to 9 cores for hours. Target ~512
-    * exploded source rows per partition — at autoBits occupancy that is
-    * a handful of buckets, so the tail is set by the largest single
-    * bucket, not by bundling variance — clamped to
-    * [spark.sql.shuffle.partitions, 8 × defaultParallelism] (floor:
-    * never plan COARSER than the session default; cap: bounded task
-    * count on small clusters while still 8× the slot count at any
-    * scale). local[32] examples: sf0.1 (2k vectors) → 32, unchanged;
-    * ×100 (200k) → 256; ×1000 (2M) → 256 (capped), a ~9× shorter tail
-    * than the measured 32-partition run. */
-  private[graft] def autoEnumPartitions(n: Long,
-      spark: org.apache.spark.sql.SparkSession): Int = {
-    val base = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    val cap = math.max(base, 8 * spark.sparkContext.defaultParallelism)
-    // clamp in Long BEFORE narrowing: (n / 512L).toInt overflows negative
-    // past n ≈ 1.1e12, and max(base, negative) would silently return the
-    // session base — the opposite of the intended scaling direction
-    math.min(cap.toLong, math.max(base.toLong, n / 512L)).toInt
-  }
-
-  /** The broadcast-probe parallelism-heal gate shared by [[lshTopK]] and
-    * [[ivfTopK]]: Some(width) = round-robin the corpus to `width` before
-    * the broadcast-probe join (its probe stage otherwise runs at the
-    * corpus SCAN's split count — the r14 7×, 546→78 s at ×100); None =
-    * leave the plan alone. Two deliberate refusals:
-    *   - `qCount` is BY-NAME: a gate count job (or any other cost the
-    *     caller's expression carries) is paid ONLY when the scan is
-    *     actually starved — the common big-cluster path (thousands of
-    *     splits) answers from pure planning, zero jobs.
-    *   - shuffle-lineage corpora are never healed ([[lazyScanWidth]] =
-    *     None): probing their width would EXECUTE their exchanges under
-    *     AQE (r14 advice). Documented boundary: a shuffle usually lands
-    *     at the session's shuffle width, but AQE may coalesce a compact
-    *     post-shuffle corpus back to few partitions; that residual
-    *     starvation is accepted rather than a double-execution gate —
-    *     a caller feeding a compact shuffle-derived corpus to a large
-    *     query set should materialize or repartition it explicitly. */
-  private[graft] def probeHealWidth(c: DataFrame, qCount: => Long,
-      minQueries: Long = MinHealQueries): Option[Int] = {
-    val floor = c.sparkSession.sparkContext.defaultParallelism
-    lazyScanWidth(c) match {
-      case Some(w) if w < floor && qCount >= minQueries => Some(floor)
-      case _ => None
-    }
-  }
-
-  /** True iff `plan` is non-adaptive and exchange-free — the
-    * precondition for driving its RDD directly ([[lazyScanWidth]],
-    * [[oneJobCount]], [[sideCounts]]): `toRdd` on a plan AQE wrapped in
-    * `AdaptiveSparkPlanExec` finalizes the adaptive plan, which
-    * MATERIALIZES every exchange in the lineage (real shuffle jobs, not
-    * reusable by the later full query), and even without AQE a direct
-    * runJob over an exchange plan forfeits runtime re-planning. */
-  private def exchangeFree(plan: org.apache.spark.sql.execution.SparkPlan): Boolean = {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.exchange.Exchange
-    !plan.exists {
-      case _: AdaptiveSparkPlanExec => true
-      case _: Exchange => true
-      case _ => false
-    }
-  }
-
-  /** Scan width (RDD partition count) of an exchange-free plan WITHOUT
-    * executing anything; `None` when the plan has shuffle lineage.
-    *
-    * Why the guard (r15, ADVICE): `Dataset.rdd`/`toRdd` on a plan AQE
-    * wrapped in `AdaptiveSparkPlanExec` finalizes the adaptive plan,
-    * which MATERIALIZES every exchange in the lineage — real shuffle
-    * jobs, not reusable by the later full query — just to read a
-    * partition count. AQE only wraps plans containing exchanges or
-    * subqueries, so a non-adaptive executed plan is narrow over its
-    * scan and building its RDD graph is pure planning (zero jobs); for
-    * those, and only those, the width is read directly. (With AQE
-    * disabled an exchange plan's RDD is also lazy, but then its width
-    * is the static shuffle partition count — never scan-starved — so
-    * returning None for it too costs nothing.)
-    *
-    * Cache boundary (r16, ADVICE): a CACHED corpus surfaces as
-    * `InMemoryTableScanExec`, and (Spark 4.1) AQE wraps ANY plan over a
-    * cache scan, so such a corpus used to be refused wholesale. Probing
-    * an UNMATERIALIZED cache would execute the cache build (the cached
-    * plan's own AQE shell + exchanges — real jobs), so it answers None
-    * (the same accepted residual as shuffle lineage: materialize or
-    * repartition explicitly). A MATERIALIZED cache answers its width
-    * from the existing cached RDD — pure metadata, zero jobs — which
-    * the r15 guard's blanket AQE refusal left on the table. The AQE
-    * shell is unwrapped for INSPECTION only (via `inputPlan`, never
-    * finalized); any exchange, unbuilt cache, or other AQE trigger
-    * (e.g. a subquery) under the shell still refuses.
-    *
-    * Width-changing narrow nodes (r16 ADVICE, closed r17): the cached
-    * RDD's partition count answers for the ROOT's width only while
-    * every node between the cache scan and the root preserves
-    * partition count — `coalesce` (CoalesceExec) and `union`
-    * (UnionExec) don't, and a cartesian product multiplies widths, so
-    * a 32-partition cache coalesced to 1 used to report 32 and skip a
-    * needed heal (perf-only, results stayed correct). Those nodes are
-    * now hazards in the AQE branch; the metadata answer is taken only
-    * when the cache scan is the sole partitioning-relevant node.
-    * R17Spec pins coalesce and union over a built cache → None. */
-  private[graft] def lazyScanWidth(df: DataFrame): Option[Int] = {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.exchange.Exchange
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.{CoalesceExec, UnionExec}
-    import org.apache.spark.sql.execution.joins.CartesianProductExec
-    def unbuilt(s: InMemoryTableScanExec): Boolean =
-      !s.relation.cacheBuilder.isCachedColumnBuffersLoaded
-    df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec =>
-        // driving toRdd would finalize the adaptive plan; the one shape
-        // still answerable with zero jobs is a BUILT cache scan under
-        // narrow WIDTH-PRESERVING operators (width = the cached RDD's
-        // partition count)
-        val in = a.inputPlan
-        val hazard = in.exists {
-          case _: Exchange => true
-          case _: AdaptiveSparkPlanExec => true
-          case s: InMemoryTableScanExec => unbuilt(s)
-          case _: CoalesceExec => true
-          case _: UnionExec => true
-          case _: CartesianProductExec => true
-          case _ => false
-        }
-        if (hazard) None
-        else in.collectFirst { case s: InMemoryTableScanExec =>
-          s.relation.cacheBuilder.cachedColumnBuffers.getNumPartitions
-        } // no cache ⇒ AQE wrapped for another reason (subquery) ⇒ None
-      case p =>
-        val hazard = p.exists {
-          case _: Exchange => true
-          case s: InMemoryTableScanExec => unbuilt(s)
-          case _ => false
-        }
-        if (hazard) None else Some(df.queryExecution.toRdd.getNumPartitions)
-    }
-  }
-
   /** Row count in exactly ONE Spark job when the plan allows it — the
     * single-side sibling of [[sideCounts]] (same reasoning: a DataFrame
     * `count()` is 2+ jobs under AQE, each a ~55 ms scheduling floor).
     * The fast path drives `toRdd` directly, which is only legal on an
-    * exchange-free plan (r16, ADVICE: on a shuffle-lineage input —
-    * e.g. ivfTopK gating a query set built by a groupBy — `toRdd`
-    * would finalize the plan's exchanges under AQE as non-reusable
-    * shuffle jobs, the exact hazard class [[lazyScanWidth]] guards on
-    * the corpus side), so a shuffled input falls back to a plain
-    * AQE-managed `count()` — 2+ jobs, the documented cost of gating a
-    * shuffle-derived input, but never a contract violation. */
+    * [[Partitioning.exchangeFree]] plan; a shuffle-lineage input (e.g.
+    * an ivfTopK query set built by a groupBy) falls back to a plain
+    * AQE-managed `count()` — 2+ jobs, never its exchanges finalized
+    * through `toRdd`. */
   private[graft] def oneJobCount(df: DataFrame): Long = {
     val narrow = df.select(lit(1))
-    if (!exchangeFree(narrow.queryExecution.executedPlan)) narrow.count()
+    if (!Partitioning.exchangeFree(narrow.queryExecution.executedPlan)) narrow.count()
     else narrow.sparkSession.sparkContext
       .runJob(narrow.queryExecution.toRdd,
         (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
@@ -705,10 +503,10 @@ object Similarity {
     * bench scale. The plan here is a narrow projection (no exchange),
     * so driving its RDD directly with one `runJob` is one pass, one
     * job, no AQE staging. When a CALLER's input carries shuffle lineage
-    * (the r16 oneJobCount hazard — `toRdd` would finalize its exchanges
-    * under AQE), fall back to one AQE-managed aggregation instead. */
+    * (`toRdd` would finalize its exchanges under AQE), fall back to one
+    * AQE-managed aggregation instead. */
   private def sideCounts(tagged: DataFrame): (Long, Long) = {
-    if (!exchangeFree(tagged.queryExecution.executedPlan)) {
+    if (!Partitioning.exchangeFree(tagged.queryExecution.executedPlan)) {
       val m = tagged.groupBy(col("__side")).count().collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap
       return (m.getOrElse(0, 0L), m.getOrElse(1, 0L))
@@ -768,35 +566,15 @@ object Similarity {
     * straight from the join. */
   def similarityJoin(df: DataFrame, embKey: String, idKey: String,
       threshold: Double, bits: Int = 0, dim: Int = 64,
-      tables: Int = 4, center: Boolean = false,
-      enumPartitions: Int = 0): DataFrame = {
+      tables: Int = 4, center: Boolean = false): DataFrame = {
     require(bits >= 0 && bits <= 63,
       s"bits must be in [0, 63] (Long bucket-code width), got $bits")
-    // one cheap ids-only count feeds both auto knobs (key width, and the
-    // enumerate-stage partition count below) — via the single-job
-    // [[sideCounts]] pass (a DataFrame count() is 2 jobs under AQE)
-    lazy val corpusN = sideCounts(df.select(lit(0).as("__side")))._1
+    // one ids-only count in one job ([[sideCounts]]) sizes both the key
+    // width (bits = 0) and the enumerate stage's partition count
+    val corpusN = sideCounts(df.select(lit(0).as("__side")))._1
     // bits = 0 → auto: sizes the key width so bucket occupancy stays
     // ~constant as the corpus grows
     val b = if (bits == 0) autoBits(corpusN) else bits
-    // enumPartitions: > 0 = exact width; 0 (default) = auto from the
-    // corpus count (the same ids-only count autoBits uses — note this
-    // means explicit-bits callers also pay one count job; a caller
-    // whose input lineage is expensive and uncached can pass -1);
-    // -1 = inherit the session's join planning (no repartition, no
-    // count — the pre-r12 plan shape).
-    // NB: an explicit width BELOW the session's shuffle partitions is
-    // raised to it by Spark's distribution requirements (observed: 5 →
-    // session 8 in the planned exchanges; 13 stays 13). The auto path
-    // floors at the session value by construction, so only deliberate
-    // sub-base explicit values meet this — and coarser-than-base was
-    // never a sensible request for an enumerate stage.
-    require(enumPartitions >= -1,
-      s"enumPartitions must be -1 (inherit), 0 (auto) or positive, got $enumPartitions")
-    val enumParts: Option[Int] =
-      if (enumPartitions > 0) Some(enumPartitions)
-      else if (enumPartitions == 0) Some(autoEnumPartitions(corpusN, df.sparkSession))
-      else None
     val offsets =
       if (center) CosineLsh.centerOffsets(df, embKey, b, dim, tables)
       else Array.empty[Double]
@@ -820,23 +598,15 @@ object Similarity {
     // catch them.
     // merge hint: both sides are corpus-sized and carry the vector — a
     // small static size estimate must never pick a corpus broadcast.
-    // Explicit fine repartition by bucket key (r12): the enumerate
-    // stage's work is QUADRATIC per bucket while its shuffle bytes are
-    // linear, so AQE can neither skew-split it (partition bytes sit far
-    // under the 256 MB threshold — the ×1000 run's stage held 2.3 GB
-    // across 32 partitions) nor be allowed to coalesce it (it would
-    // re-bundle by bytes). Measured at ×1000 (2 M vectors, ~2000
-    // near-dup clusters, 32 partitions): 23/32 tasks done at hour 7,
-    // then a 9-task straggler tail — each task a ~60-cluster bundle at
-    // ~325 CPU-s per cluster — pinning the stage to single-digit cores
-    // for hours. Finer bucket partitioning shrinks the tail to
-    // O(clusters-per-partition); both sides share one exchange
-    // (identical subtrees → ReusedExchange), so partition count is the
-    // only plan change. Pinning the count does opt this join out of
-    // AQE's skew reader, which never fired here anyway.
-    val lp = enumParts.map(n => l.repartition(n, col("__bucket"))).getOrElse(l)
-    val rp = enumParts.map(n => r.repartition(n, col("__bucket"))).getOrElse(r)
-    lp.join(rp.hint("merge"), Seq("__bucket")).where(col("a") < col("b"))
+    // The enumerate stage's work is quadratic per bucket while its
+    // shuffle bytes are linear, so AQE can neither skew-split nor
+    // coalesce it sensibly: both sides are repartitioned by bucket to
+    // [[Partitioning.widthFor]] the corpus, which keeps a few buckets per
+    // task and bounds the straggler tail by the largest single bucket.
+    // Identical subtrees share one exchange (ReusedExchange).
+    val width = Partitioning.widthFor(corpusN, df.sparkSession)
+    l.repartition(width, col("__bucket"))
+      .join(r.repartition(width, col("__bucket")).hint("merge"), Seq("__bucket")).where(col("a") < col("b"))
       .where(element_at(
         filter(col("__ba"), x => array_contains(col("__bb"), x)), 1)
         === col("__bucket"))

@@ -120,61 +120,4 @@ class R12Spec extends AnyFunSuite {
     assert(maxPart <= 100,
       s"sf0.01 range partition exceeds k=100 rows ($maxPart): full-replay oracle invalid")
   }
-
-  // ── similarityJoin enumerate-stage partitioning: the ×1000 run's
-  //    straggler tail (9 ~60-cluster bundle tasks for hours) is a
-  //    work-vs-bytes mismatch AQE cannot fix; the explicit bucket
-  //    repartition must change the partition count and NOTHING else ──
-
-  test("similarityJoin enumPartitions pins the stage width, results unchanged") {
-    import graft.ops.sim.Similarity
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val base = Similarity.similarityJoin(emb, "embedding", "vec_id", 0.4,
-      bits = 8, tables = 16)
-    val fine = Similarity.similarityJoin(emb, "embedding", "vec_id", 0.4,
-      bits = 8, tables = 16, enumPartitions = 7)
-    // explicit count is pinned end-to-end (user repartition: AQE must
-    // neither coalesce nor re-split it)
-    assert(fine.rdd.getNumPartitions == 7)
-    // identical pair sets — partitioning is a pure execution knob
-    assert(pairs(fine) == pairs(base))
-    assert(pairs(base).nonEmpty)
-    // one-shuffle property: both exploded sides canonicalize to the same
-    // subtree, so the FINAL adaptive plan must reuse a single exchange.
-    // Must collect `fine` ITSELF: pairs() ran a derived Dataset with its
-    // own QueryExecution, leaving fine's plan isFinalPlan=false
-    fine.collect()
-    val plan = fine.queryExecution.executedPlan.toString
-    assert(plan.contains("isFinalPlan=true"))
-    assert(plan.contains("ReusedExchange"), s"no exchange reuse in:\n$plan")
-    // -1 = inherit: the pre-r12 plan (no user repartition, no count job)
-    // with the identical pair set
-    val legacy = Similarity.similarityJoin(emb, "embedding", "vec_id", 0.4,
-      bits = 8, tables = 16, enumPartitions = -1)
-    assert(!legacy.queryExecution.optimizedPlan.toString
-      .contains("RepartitionByExpression"))
-    assert(pairs(legacy) == pairs(base))
-    // anything below -1 is a caller bug, not a silent auto fallback
-    intercept[IllegalArgumentException] {
-      Similarity.similarityJoin(emb, "embedding", "vec_id", 0.4,
-        bits = 8, enumPartitions = -2)
-    }
-  }
-
-  test("autoEnumPartitions: floor at session default, cap at 8x slots, monotone") {
-    import graft.ops.sim.Similarity.autoEnumPartitions
-    val base = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val cap = math.max(base, 8 * spark.sparkContext.defaultParallelism)
-    // tiny corpus: never plan coarser than the session default
-    assert(autoEnumPartitions(2000, spark) == base)
-    // huge corpus: bounded by the slot-derived cap
-    assert(autoEnumPartitions(100_000_000L, spark) == cap)
-    // monotone non-decreasing in n across the range
-    val ns = Seq(0L, 2000L, 200000L, 2000000L, 100000000L)
-    val ps = ns.map(autoEnumPartitions(_, spark))
-    assert(ps == ps.sorted)
-    assert(ps.forall(p => p >= base && p <= cap))
-  }
 }

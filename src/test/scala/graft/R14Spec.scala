@@ -139,48 +139,4 @@ class R14Spec extends AnyFunSuite {
     assert(steal == 80L && busy == 100 + 2 + 300 + 6 + 7 + 80,
       s"steal $steal must be one of busy $busy's addends")
   }
-
-  // ── lshTopK broadcast-path parallelism heal (r14, measured 7x) ──
-
-  /** Deterministic synthetic vectors: 64 dims of sin((id+1) * dim).
-    * The +1 matters: id 0 would otherwise be the all-zero vector, whose
-    * NaN cosines rank arrival-order-dependently — a degenerate-input
-    * artifact that would make two CORRECT plans disagree. */
-  private def vecs(n: Int): DataFrame = {
-    val dims = (1 to 64).map(d => sin((col("id") + 1) * d))
-    spark.range(n).select(col("id").as("vec_id"),
-      array(dims: _*).as("embedding"))
-  }
-
-  test("lshTopK heals a split-starved corpus on the broadcast path") {
-    import graft.ops.sim.Similarity
-    val corpus = vecs(400).coalesce(1) // 1 partition: starved
-    val queries = vecs(1200)           // >= MinHealQueries (1024)
-    assert(1200 >= Similarity.MinHealQueries)
-    val healed = Similarity.lshTopK(corpus, queries, "embedding",
-      "vec_id", k = 3, bits = 6)
-    val plan = healed.queryExecution.executedPlan.toString.toLowerCase
-    assert(plan.contains("roundrobin"),
-      s"expected a round-robin corpus repartition in:\n$plan")
-    assert(plan.contains("broadcast"),
-      s"the heal must keep the query-side broadcast:\n$plan")
-    // same rows as the forced shuffle fallback, bit for bit
-    val fallback = Similarity.lshTopK(corpus, queries, "embedding",
-      "vec_id", k = 3, bits = 6, maxBroadcastQueries = 0L)
-    val a = healed.orderBy("query_id", "rank").collect().toSeq
-    val b = fallback.orderBy("query_id", "rank").collect().toSeq
-    assert(a == b, s"healed/fallback disagree: ${a.size} vs ${b.size} rows")
-  }
-
-  test("lshTopK does NOT heal below the query floor") {
-    import graft.ops.sim.Similarity
-    val corpus = vecs(400).coalesce(1)
-    val queries = vecs(10) // tiny query side: heal must not fire
-    val res = Similarity.lshTopK(corpus, queries, "embedding",
-      "vec_id", k = 3, bits = 6)
-    val plan = res.queryExecution.executedPlan.toString.toLowerCase
-    assert(!plan.contains("roundrobin"),
-      s"a 10-query top-k must not pay a corpus repartition:\n$plan")
-    assert(res.count() == 10 * 3)
-  }
 }

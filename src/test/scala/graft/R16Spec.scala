@@ -4,22 +4,16 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-16 pins — the r15 ADVICE closures on the heal-gate plumbing.
+/** Round-16 pins — the r15 ADVICE closures on the gate plumbing (the
+  * cache-boundary width cases live in PartitioningSpec).
   *
-  * 1. `lazyScanWidth` cache boundary: a CACHED corpus surfaces as
-  *    `InMemoryTableScanExec` (neither adaptive nor an exchange), so the
-  *    r15 guard passed it — and probing an UNMATERIALIZED cache whose
-  *    cached lineage carries exchanges executes the cache build + its
-  *    shuffles, violating the documented zero-jobs contract. Pins: an
-  *    unbuilt cache answers None with zero jobs; a MATERIALIZED cache
-  *    answers its width with zero jobs (the cached RDD already exists).
-  * 2. `oneJobCount` shuffle safety: `toRdd` on a shuffle-lineage input
+  * 1. `oneJobCount` shuffle safety: `toRdd` on a shuffle-lineage input
   *    finalizes its exchanges under AQE as non-reusable jobs (the same
-  *    hazard class on the ivfTopK QUERY side that lazyScanWidth guards
-  *    on the corpus side). Pins: exchange-free input still costs exactly
+  *    hazard class on the ivfTopK QUERY side that `scanWidth` guards on
+  *    the corpus side). Pins: exchange-free input still costs exactly
   *    one job; a shuffle-lineage input returns the correct count via the
   *    AQE-managed fallback (no contract violation, no wrong number).
-  * 3. `sideCounts` (via lshTopK bits=0) accepts a shuffle-lineage corpus:
+  * 2. `sideCounts` (via lshTopK bits=0) accepts a shuffle-lineage corpus:
   *    the tagged union then carries an exchange, and the old direct
   *    runJob would have driven it through toRdd — the fallback must
   *    yield the same auto-bits/gate decisions, i.e. the same plan shape
@@ -49,40 +43,6 @@ class R16Spec extends AnyFunSuite {
     val dims = (1 to 64).map(d => sin((col("id") + 1) * d))
     spark.range(n).select(col("id").as("vec_id"),
       array(dims: _*).as("embedding"))
-  }
-
-  // ── lazyScanWidth: the cache boundary (ADVICE low #1) ──
-
-  test("lazyScanWidth refuses an UNMATERIALIZED cache with zero jobs") {
-    import graft.ops.sim.Similarity
-    // shuffle-lineage plan behind a cache: the scan node is an
-    // InMemoryTableScanExec (not an Exchange), but building its RDD
-    // would execute the cached plan — cache build + shuffle jobs
-    val cached = vecs(100).repartition(2, col("vec_id")).cache()
-    try {
-      var got: Option[Int] = Some(-1)
-      val n = jobsDuring("r16-lazy-width-unbuilt-cache") {
-        got = Similarity.lazyScanWidth(cached)
-      }
-      assert(got.isEmpty,
-        s"expected None for a cached-but-unbuilt shuffle lineage, got $got")
-      assert(n == 0, s"the zero-jobs contract is the whole point; saw $n")
-    } finally cached.unpersist(true)
-  }
-
-  test("lazyScanWidth answers a MATERIALIZED cache's width with zero jobs") {
-    import graft.ops.sim.Similarity
-    val cached = vecs(100).repartition(2, col("vec_id")).cache()
-    try {
-      cached.count() // materialize OUTSIDE the probed window
-      var got: Option[Int] = None
-      val n = jobsDuring("r16-lazy-width-built-cache") {
-        got = Similarity.lazyScanWidth(cached)
-      }
-      assert(got.contains(2),
-        s"a built cache's width is pure metadata (2 cached partitions), got $got")
-      assert(n == 0, s"reading a built cache's width ran $n job(s)")
-    } finally cached.unpersist(true)
   }
 
   // ── oneJobCount: shuffle safety (ADVICE low #2) ──

@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.sim.Similarity
 
 /** Round-17 pins — the structural kill of the rankTopK
-  * ObjectHashAggregate sort-fallback cliff (r16 verdict #1), plus the
-  * r16 ADVICE closure on `lazyScanWidth`.
+  * ObjectHashAggregate sort-fallback cliff (r16 verdict #1). The
+  * coalesce/union width case lives in PartitioningSpec.
   *
   * 1. `partialTopK` bound: every task emits ≤ k rows per query key —
   *    the invariant that makes the downstream TopK aggregation's input
@@ -22,11 +22,6 @@ import graft.ops.sim.Similarity
   *    the bit-identity claim behind reusing the r16 ×1000 digests.
   * 3. `query_id` type passthrough: the pre-reduce must not change the
   *    operator's output schema (oracle hash compares schemas).
-  * 4. `lazyScanWidth` width-changing narrow nodes (r16 ADVICE):
-  *    coalesce/union over a BUILT cache must refuse (None) instead of
-  *    reporting the cache scan's width for a plan whose root runs at a
-  *    different width (a 32-partition cache coalesced to 1 reported 32
-  *    and skipped a needed heal).
   */
 class R17Spec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -124,20 +119,5 @@ class R17Spec extends AnyFunSuite {
       .agg(count(lit(1)).as("n"), max("rank").as("mx"))
       .where(col("n") =!= col("mx"))
     assert(bad.isEmpty, "rank sequence not dense — duplicate or lost rows")
-  }
-
-  // ── lazyScanWidth: width-changing narrow nodes refuse (r16 ADVICE) ──
-
-  test("lazyScanWidth refuses coalesce and union over a BUILT cache") {
-    val c = vecs(1000).repartition(8).cache()
-    try {
-      c.count() // materialize: the cache scan alone answers Some(8)
-      assert(Similarity.lazyScanWidth(c.select(col("vec_id"))) == Some(8),
-        "width-preserving narrow chain over a built cache must still answer")
-      assert(Similarity.lazyScanWidth(c.coalesce(1)).isEmpty,
-        "coalesce over a built cache must refuse — root width ≠ scan width")
-      assert(Similarity.lazyScanWidth(c.union(c)).isEmpty,
-        "union over built caches must refuse — root width ≠ scan width")
-    } finally { c.unpersist(); () }
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,18 +20,18 @@ class R8Spec extends AnyFunSuite {
     val sleeper = (s: SparkSession, _: String) => {
       Thread.sleep(1000); s.range(1).toDF()
     }
-    val spinner = (s: SparkSession, _: String) => {
-      val threads = (1 to 8).map { _ =>
-        new Thread(() => {
-          val deadline = System.nanoTime() + 400L * 1000 * 1000
-          var x = 0L
-          while (System.nanoTime() < deadline) { x += 1 }
-          if (x == -1) println(x) // defeat dead-code elimination
-        })
-      }
-      threads.foreach(_.start()); threads.foreach(_.join())
-      s.range(1).toDF()
-    }
+    // The spinning runs as the query itself: 8 partitions spinning
+    // 400 ms each on the executor's task threads. Freshly started
+    // threads begin on their parent's cpu, and a 4-vcpu VM was seen to
+    // keep 8 of them there, the other vcpus idle, for over a second after
+    // an idle spell; pooled task threads wake on the cpus they last ran on.
+    val spinner = (s: SparkSession, _: String) =>
+      s.range(0, 8, 1, 8).mapPartitions { _ =>
+        val deadline = System.nanoTime() + 400L * 1000 * 1000
+        var x = 0L
+        while (System.nanoTime() < deadline) { x += 1 }
+        Iterator.single(x) // the count keeps the spin live
+      }(Encoders.scalaLong).toDF()
     val out = Bench.runQueries(spark, sf,
       Seq("sleepy" -> sleeper, "spinny" -> spinner),
       passes = 3, isolate = false).toMap
@@ -45,7 +45,7 @@ class R8Spec extends AnyFunSuite {
     // The relative contrast is the pinned contract; the absolute bound
     // is deliberately generous to background-compile churn.
     assert(slept.cpuRatio < 1.0, s"sleeper cpuRatio=${slept.cpuRatio}")
-    // 8 spinning threads: ≈8 cpu-seconds per wall-second
+    // every task slot spinning: ≈ one cpu-second per slot per wall-second
     assert(spun.cpuRatio > 2.0, s"spinner cpuRatio=${spun.cpuRatio}")
     assert(spun.cpuRatio > 3 * slept.cpuRatio,
       s"no contrast: spun=${spun.cpuRatio} slept=${slept.cpuRatio}")

@@ -1,11 +1,13 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.sim.Similarity
 
-/** The IVF quantizer behind [[Similarity.ivfTopK]]: a driver-side,
-  * seeded k-means over a bounded, collected sample. */
+/** The IVF quantizer behind [[Similarity.ivfTopK]] (a driver-side,
+  * seeded k-means over a bounded, collected sample) and the top-k
+  * operators' semantics on degenerate vectors. */
 class SimilaritySpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -17,7 +19,7 @@ class SimilaritySpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
   }
 
-  private def sample(df: org.apache.spark.sql.DataFrame, nLists: Int,
+  private def sample(df: DataFrame, nLists: Int,
       maxTrain: Int = 100000) =
     Similarity.ivfSample(df.select(col("embedding").cast("array<double>")),
       "embedding", nLists, maxTrain)
@@ -67,6 +69,28 @@ class SimilaritySpec extends AnyFunSuite {
     assert(s.length == 18)
     val ms = Similarity.trainIvf(s, 4, seed = 42L)
     assert(ms.length == 4 && ms.forall(_.forall(x => !x.isNaN && !x.isInfinite)))
+    // every top-k: a null corpus vector is never a neighbour, a null
+    // query vector gets no rows, an all-null corpus gives no rows
+    val withNull = (Seq[(Long, Seq[Double])]((0L, null)) ++
+      (1L until 20L).map(i => (i, Seq(i.toDouble, 1.0, 0.0, 0.0))))
+      .toDF("vec_id", "embedding")
+    val allNull = (0L until 5L).map(i => (i, null: Seq[Double]))
+      .toDF("vec_id", "embedding")
+    val qs = withNull.filter(col("vec_id") < 3)
+    type TopK = (DataFrame, DataFrame) => DataFrame
+    val ops = Seq[(String, TopK, Boolean)](
+      ("bruteForceTopK", Similarity.bruteForceTopK(_, _, "embedding", "vec_id", 3), true),
+      // nProbe = nLists: exact, so the non-null queries find neighbours
+      ("ivfTopK", Similarity.ivfTopK(_, _, "embedding", "vec_id", 3,
+        nLists = 2, nProbe = 2), true),
+      ("lshTopK", Similarity.lshTopK(_, _, "embedding", "vec_id", 3, bits = 4), false))
+    ops.foreach { case (name, op, finds) =>
+      val res = op(withNull, qs).select("query_id", "neighbor_id")
+        .as[(Long, Long)].collect()
+      assert(res.forall { case (q, n) => q != 0L && n != 0L }, s"$name: ${res.toSeq}")
+      if (finds) assert(res.map(_._1).toSet == Set(1L, 2L), s"$name: ${res.toSeq}")
+      assert(op(allNull, qs).collect().isEmpty, name)
+    }
   }
 
   test("an empty corpus gives an empty top-k without throwing") {
