@@ -384,7 +384,7 @@ object Bench {
       "q1_pricing", "q3_revenue_by_customer", "q5_region_revenue",
       "join_bucketed", "sort_topk_orders", "window_running_sum",
       "stream_window_agg", "dedup_hash", "dedup_ccnet", "dedup_minhash",
-      "dedup_minhash_mllib", "dedup_simhash", "dedup_sem_lsh",
+      "dedup_simhash", "dedup_sem_lsh",
       "dedup_kcenter", "sim_topk_brute", "sim_lsh_topk", "sim_ivf_topk",
       "sim_join", "eval_bleu", "eval_cider_d", "kbc_chunks",
       "t2s_execution", "t2s_exec_classify", "text_quality_score",

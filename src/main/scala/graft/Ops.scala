@@ -81,7 +81,7 @@ object Ops {
       "hash_deduplicate_filter", "ccnet_deduplicate_filter",
       "ngram_hash_deduplicate_filter", "minhash_deduplicate_filter",
       "simhash_deduplicate_filter", "sem_deduplicate_filter",
-      "kcenter_greedy_filter", "minhash_lsh_mllib_deduplicate_filter",
+      "kcenter_greedy_filter",
       "ngram_sample_evaluator", "lexical_diversity_sample_evaluator",
       "qa_f1_sample_evaluator", "bleu_sample_evaluator",
       "langkit_sample_evaluator", "presidio_sample_evaluator",
@@ -293,7 +293,6 @@ object Ops {
       "code_encoded_data_filter" -> (p => graft.ops.code.CodeEncodedDataFilter(key(p), i(p, "max_blob", 64))),
       "code_text_composition_filter" -> (p => graft.ops.code.CodeTextCompositionFilter(key(p), d(p, "min_alnum_ratio", 0.25))),
       "code_auto_generated_filter" -> (p => graft.ops.code.CodeAutoGeneratedFilter(key(p))),
-      "minhash_lsh_mllib_deduplicate_filter" -> (p => MinHashLSHDeduplicateFilter(key(p), p.getOrElse("order_key", "doc_id"))),
       "scenario_extract_generator" -> (p => graft.ops.conversations.ScenarioExtractGenerator(p.getOrElse("chat_key", "chat"), Registry.serving(p))),
       "scenario_expand_generator" -> (p => graft.ops.conversations.ScenarioExpandGenerator(p.getOrElse("scenario_key", "scenario"), Registry.serving(p))),
       "atom_task_generator" -> (p => graft.ops.conversations.AtomTaskGenerator(p.getOrElse("scenario_key", "scenario"), Registry.serving(p))),

@@ -256,10 +256,6 @@ object SparkEntry {
         t(s, dir, "embeddings"))
         .select("vec_id", "label")
     },
-    "dedup_minhash_mllib" -> rowsOnly { (s, dir) =>
-      MinHashLSHDeduplicateFilter("text", "doc_id", ngram = 3, threshold = 0.9)(
-        t(s, dir, D)).select("doc_id", "n_chars")
-    },
     // exact brute-force twin of the banded simhash dedup: per-word 60-bit
     // md5-prefix hash, ±1 bit votes → signature, then keep a row iff it is
     // its signature's first holder AND no earlier representative is within

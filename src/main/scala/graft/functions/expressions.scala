@@ -57,67 +57,10 @@ case class CosineSimilarity(left: Expression, right: Expression)
       newRight: Expression): Expression = copy(left = newLeft, right = newRight)
 }
 
-/** Native Catalyst expression for exact Jaccard over two SORTED-distinct
-  * `array<bigint>` columns — the verify kernel of minhash near-dedup. A
-  * single merge walk reading the unsafe array data in place: the Scala-UDF
-  * form copies both arrays into `Seq[Long]` per invocation, and the verify
-  * runs once per shared band per candidate pair — at scale that copy is
-  * the dominant allocation in the whole dedup job. */
-case class JaccardSorted(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements(); val m = y.numElements()
-    var i = 0; var j = 0; var inter = 0
-    while (i < n && j < m) {
-      val xa = x.getLong(i); val yb = y.getLong(j)
-      if (xa == yb) { inter += 1; i += 1; j += 1 }
-      else if (xa < yb) i += 1
-      else j += 1
-    }
-    val union = n + m - inter
-    if (union == 0) 1.0 else inter.toDouble / union.toDouble
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n"); val m = ctx.freshName("m")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val inter = ctx.freshName("inter")
-      val xa = ctx.freshName("xa"); val yb = ctx.freshName("yb")
-      val union = ctx.freshName("union")
-      s"""
-         |int $n = $x.numElements(); int $m = $y.numElements();
-         |int $i = 0; int $j = 0; int $inter = 0;
-         |while ($i < $n && $j < $m) {
-         |  long $xa = $x.getLong($i); long $yb = $y.getLong($j);
-         |  if ($xa == $yb) { $inter++; $i++; $j++; }
-         |  else if ($xa < $yb) { $i++; } else { $j++; }
-         |}
-         |int $union = $n + $m - $inter;
-         |${ev.value} = $union == 0 ? 1.0 : (double) $inter / (double) $union;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
-}
-
 object expressions {
   /** Cosine similarity as a Column over two array-of-numeric columns. */
   def cosineSim(a: Column, b: Column): Column =
     SparkBridge.toColumn(CosineSimilarity(
       SparkBridge.toExpression(a.cast("array<double>")),
       SparkBridge.toExpression(b.cast("array<double>"))))
-
-  /** Exact Jaccard as a Column over two sorted-distinct array<bigint>
-    * columns (merge walk; see [[JaccardSorted]]). */
-  def jaccardSorted(a: Column, b: Column): Column =
-    SparkBridge.toColumn(JaccardSorted(
-      SparkBridge.toExpression(a), SparkBridge.toExpression(b)))
 }

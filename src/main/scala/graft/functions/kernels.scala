@@ -136,11 +136,9 @@ object kernels {
     out
   }
 
-  /** Exact Jaccard over two SORTED-distinct long arrays — the scalar
-    * twin of the [[graft.functions.JaccardSorted]] expression (same
-    * merge walk, same int-counter division, same union==0 → 1.0), for
-    * imperative kernels whose keep/drop decisions must be bit-identical
-    * to the expression's and to the SQL oracle's. */
+  /** Exact Jaccard over two SORTED-distinct long arrays: one merge walk,
+    * an int intersection counter, one division, union == 0 → 1.0. The
+    * minhash witness walk's verify. */
   def jaccardSorted(x: Array[Long], y: Array[Long]): Double = {
     val n = x.length; val m = y.length
     var i = 0; var j = 0; var inter = 0
@@ -252,15 +250,7 @@ object kernels {
   /** One sign-bucket key per table, namespaced "t:bucket" so tables never
     * cross-match; explode + join on the key gives OR-amplification. */
   def lshBuckets(vec: Seq[Double], bits: Int, dim: Int,
-      tables: Int): Array[String] =
-    lshBuckets(vec, bits, dim, tables, null)
-
-  /** Centered variant: plane p's sign test is dot(v, w_p) > offsets(p)
-    * (offsets = dot(μ, w_p) per plane ⟺ hashing v − μ — see
-    * [[graft.ops.sim.CosineLsh.centerOffsets]]). `offsets` null or empty
-    * = the uncentered form; otherwise it must carry tables×bits values. */
-  def lshBuckets(vec: Seq[Double], bits: Int, dim: Int,
-      tables: Int, offsets: Array[Double]): Array[String] = {
+      tables: Int): Array[String] = {
     // 63 = the Long code width: `1L << bi` shifts mod 64, so bits >= 64
     // would silently wrap and overwrite low code bits — degenerate
     // COARSER buckets instead of the wider keys the caller asked for.
@@ -269,9 +259,6 @@ object kernels {
     require(bits >= 1 && bits <= 63,
       s"bits must be in [1, 63] (Long bucket-code width), got $bits")
     if (vec == null || vec.isEmpty) return Array.empty[String]
-    val off = if (offsets == null || offsets.isEmpty) null else offsets
-    require(off == null || off.length == tables * bits,
-      s"offsets must carry tables*bits=${tables * bits} values, got ${off.length}")
     val w = planes(bits, dim, tables)
     val arr = vec.toArray
     Array.tabulate(tables) { ti =>
@@ -284,7 +271,7 @@ object kernels {
         var i = 0
         val n = math.min(wp.length, arr.length)
         while (i < n) { dot += arr(i) * wp(i); i += 1 }
-        if (dot > (if (off == null) 0.0 else off(p))) code |= (1L << bi)
+        if (dot > 0.0) code |= (1L << bi)
         bi += 1
       }
       s"$ti:$code"

@@ -1,7 +1,9 @@
 package graft.ops.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable.ArrayBuffer
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
 import graft.core.Op
 import graft.functions.text._
@@ -13,13 +15,14 @@ import graft.functions.text._
   * that explicit and distributed-safe with a stable `orderKey` column: the
   * row with the smallest `orderKey` in each duplicate group is kept.
   *
-  * Scale notes (100 TB): exact dedup is ONE hash-partitioned shuffle on the
-  * digest (window over hash). Near-dup (MinHash/SimHash) avoids the O(n²)
-  * pairwise pass of the reference via LSH banding: a self-join keyed on
-  * band buckets — shuffle is proportional to candidate pairs, not n².
-  * Candidate pairs are then verified EXACTLY (Jaccard / Hamming), so
-  * banding only prunes; with 128 perms / 32 bands the probability of
-  * missing a true pair at threshold 0.9 is ~1e-15.
+  * Exact dedup is ONE hash-partitioned shuffle on the digest (window over
+  * hash). Near-dup (MinHash/SimHash) avoids the O(n²) pairwise pass of the
+  * reference via LSH banding: identical signatures collapse first
+  * ([[Dedup.collapseIdentical]]), then one exchange on the band key feeds
+  * the per-bucket witness walk ([[Dedup.witnessDups]]), which verifies
+  * candidates EXACTLY (Jaccard / Hamming) — banding only prunes; with 128
+  * perms / 32 bands the probability of missing a true pair at threshold
+  * 0.9 is ~1e-15.
   */
 
 /** Exact dedup on the digest of one or more columns
@@ -181,15 +184,11 @@ final case class MinHashDeduplicateFilter(inputKey: String = "text",
     * One small agg over the already-persisted shingle table; corpora
     * under the budget keep the single-job plan bit for bit.
     *
-    * The budget governs a wave's PEAK on-disk bytes, which since the
-    * r18 witness walk is ~2× the wave's banded-table slice, not 1×:
-    * the wave holds the band exchange's shuffle files (1×) plus the
-    * reduce-side (__band, orderKey) sort's spill (≤1× — it re-spills
-    * the fetched slice), and neither can be reclaimed until the wave's
-    * job finishes. (The pre-r18 merge self-join held THREE copies —
-    * window exchange + two differently-projected sorted join inputs —
-    * measured at ×1000 when a 5-wave split sized 1× peaked ~60 GB and
-    * filled the disk mid-sort-spill.) */
+    * The budget governs a wave's PEAK on-disk bytes, which under the
+    * witness walk is ~2× the wave's banded-table slice, not 1×: the wave
+    * holds the band exchange's shuffle files (1×) plus the reduce-side
+    * (__band, orderKey) sort's spill (≤1× — it re-spills the fetched
+    * slice), and neither can be reclaimed until the wave's job finishes. */
   private[graft] def bandGroupCount(withSh: DataFrame): Int = {
     val row = withSh.agg(
       sum(size(col("__sh"))).cast("long"), count(lit(1))).first()
@@ -205,7 +204,7 @@ final case class MinHashDeduplicateFilter(inputKey: String = "text",
       else MinHashDeduplicateFilter.autoScratchBudget(withSh.sparkSession)
     // 8 B per shingle hash + ~48 B/row of band key, id, and row headers,
     // ×2 concurrent on-disk copies per wave (band exchange + walk sort
-    // spill; the pre-r18 join shape held 3 — see the scaladoc)
+    // spill — see the scaladoc)
     val bandedBytes = (shEntries * 8L + rows * 48L) * bands * 2L
     val g = ((bandedBytes + budget - 1) / budget).toInt
     val groups = math.max(1, math.min(bands, g))
@@ -232,154 +231,28 @@ final case class MinHashDeduplicateFilter(inputKey: String = "text",
     identDups.union(bandVerifyDups(banded)).distinct()
   }
 
-  /** Skew phase: collapse IDENTICAL shingle sets first. Exact-duplicate
-    * clusters (m copies of one doc) share every band, so the band
-    * self-join would emit O(m²) candidate pairs per cluster — the 100 TB
-    * skew killer. Identical sets have J=1 ≥ any threshold, and because
-    * identical docs are interchangeable, keeping only the min-orderKey
-    * representative per set is EXACT under keep-first semantics: any
-    * doc the oracle would drop via a collapsed member is also dropped
-    * via that member's (earlier) representative. Empty shingle sets
-    * produce no bands (never candidates) and are left alone.
-    * Returns (dropped ids, surviving representatives). */
-  private def collapseIdentical(withSh: DataFrame): (DataFrame, DataFrame) = {
-    val nonEmpty = withSh.filter(size(col("__sh")) > 0)
-    val wIdent = Window.partitionBy(col("__sh")).orderBy(col(orderKey))
-    val ranked = nonEmpty.withColumn("__rn", row_number().over(wIdent))
-    val identDups = ranked.filter(col("__rn") > 1).select(col(orderKey))
-    val reps = ranked.filter(col("__rn") === 1).drop("__rn")
-    (identDups, reps)
-  }
+  /** Identical shingle sets have J=1 ≥ any threshold, so they collapse to
+    * their min-orderKey representative before banding
+    * ([[Dedup.collapseIdentical]]). Empty shingle sets produce no bands
+    * (never candidates) and are left alone. */
+  private def collapseIdentical(withSh: DataFrame): (DataFrame, DataFrame) =
+    Dedup.collapseIdentical(withSh.filter(size(col("__sh")) > 0), "__sh",
+      orderKey)
 
-  /** LSH verify over a banded table (orderKey, __sh, __band): the ids of
-    * rows similar to an earlier row in a shared band bucket.
-    *
-    * r18 (guide §2.3/§2.4): a streaming per-bucket WITNESS WALK — one
-    * hash exchange on __band + in-partition sort by (__band, orderKey),
-    * then a bounded-memory pass — replaces the former band merge
-    * SELF-JOIN. The join shape referenced the banded table twice with
-    * different projections, so the whole corpus lineage (scan → shingle
-    * UDF → identical-collapse window → band explode → band window) was
-    * planned, computed, and SPILLED once per side: three concurrent
-    * corpus×bands-sized on-disk copies per wave (window exchange + two
-    * sorted join inputs) and C(m,2) Jaccard walks per m-member bucket.
-    * Dedup only needs ONE earlier witness per dropped row (the same
-    * argument as SemDeduplicateFilter's walk), so the walk early-exits
-    * on the first hit — a bucket of m mutual near-dups costs ~m merge
-    * walks instead of C(m,2) — while a bucket of dissimilar rows still
-    * pays every i<j pair, exactly the join's worst case, minus the join
-    * machinery. Only duplicate ids (one long each) ever leave the walk.
-    *
-    * The drop set is IDENTICAL to the join's by construction:
-    *  - bucket ≤ maxBandBucket: the join emitted j iff SOME i < j in the
-    *    bucket had Jaccard ≥ threshold; the walk tests exactly those i
-    *    in ascending order and stops at the first witness. Same set,
-    *    same Jaccard kernel (kernels.jaccardSorted = the JaccardSorted
-    *    expression's merge walk, bit for bit).
-    *  - bucket > maxBandBucket: the join paired non-min members against
-    *    the bucket-minimum row(s) only; the walk freezes its pool at the
-    *    min-orderKey member(s) the moment the bucket overflows the cap
-    *    (sorted input: the min rows are the buffer's head) and verifies
-    *    the rest against that pool — the same documented approximation.
-    *    The pool holds at most cap+1 rows: min-key rows streamed after
-    *    the overflow are kept but never pooled, so when more than cap+1
-    *    rows share the minimum key, a later row matching only one of
-    *    those unpooled rows survives (the join would drop it).
-    *  - rows sharing an orderKey value never pair (the join's strict
-    *    i < j); the walk skips equal-key pairs explicitly, in both
-    *    bucket modes. */
-  private[graft] def bandVerifyDups(banded: DataFrame): DataFrame = {
-    val parted = banded
-      .select(col("__band"), col(orderKey), col("__sh"))
-      .repartition(col("__band"))
-      .sortWithinPartitions(col("__band"), col(orderKey))
-    val outSchema = org.apache.spark.sql.types.StructType(
-      Seq(banded.schema(orderKey)))
-    val (cap, th) = (maxBandBucket, threshold)
-    import org.apache.spark.sql.{Encoders, Row}
-    parted.mapPartitions { it =>
-      val rows = it.buffered
-      new Iterator[Row] {
-        private val out = new scala.collection.mutable.Queue[Row]()
-        /** Consume one whole bucket from `rows`, enqueueing its dropped
-          * ids. Buffers at most cap+1 (id, shingles) pairs: past the cap
-          * the bucket is big and only the min-key pool is retained. */
-        private def drainBucket(): Unit = {
-          val band = rows.head.getLong(0)
-          val ids = new scala.collection.mutable.ArrayBuffer[Any]()
-          val shs = new scala.collection.mutable.ArrayBuffer[Array[Long]]()
-          var nMin = 0 // big mode: pool size (leading min-orderKey rows)
-          while (rows.hasNext && rows.head.getLong(0) == band) {
-            val r = rows.next()
-            val id = r.get(1)
-            val sh = {
-              val s = r.getSeq[Long](2)
-              val a = new Array[Long](s.length)
-              var i = 0; while (i < a.length) { a(i) = s(i); i += 1 }
-              a
-            }
-            if (nMin > 0) {
-              // big bucket: stream against the frozen min pool; a row
-              // sharing the pool's (minimum) orderKey never pairs
-              if (id != ids(0)) {
-                var k = 0; var hit = false
-                while (!hit && k < nMin) {
-                  if (graft.functions.kernels.jaccardSorted(shs(k), sh) >= th)
-                    hit = true
-                  k += 1
-                }
-                if (hit) out.enqueue(Row(id))
-              }
-            } else {
-              ids += id; shs += sh
-              if (ids.length > cap) {
-                // cap overflow: switch to min-only semantics. The pool is
-                // every buffered row sharing the minimum orderKey (one
-                // row for unique keys); verify the rest of the buffer
-                // against it, then stream.
-                nMin = 1
-                while (nMin < ids.length && ids(nMin) == ids(0)) nMin += 1
-                var j = nMin
-                while (j < ids.length) {
-                  var k = 0; var hit = false
-                  while (!hit && k < nMin) {
-                    if (graft.functions.kernels.jaccardSorted(shs(k), shs(j)) >= th)
-                      hit = true
-                    k += 1
-                  }
-                  if (hit) out.enqueue(Row(ids(j)))
-                  j += 1
-                }
-                ids.takeInPlace(nMin); shs.takeInPlace(nMin)
-              }
-            }
-          }
-          if (nMin == 0) {
-            // small bucket: all-pairs witness semantics with early exit
-            var j = 1
-            while (j < ids.length) {
-              var i = 0; var hit = false
-              while (!hit && i < j) {
-                if (ids(i) != ids(j) &&
-                    graft.functions.kernels.jaccardSorted(shs(i), shs(j)) >= th)
-                  hit = true
-                i += 1
-              }
-              if (hit) out.enqueue(Row(ids(j)))
-              j += 1
-            }
-          }
-        }
-        def hasNext: Boolean = {
-          while (out.isEmpty && rows.hasNext) drainBucket()
-          out.nonEmpty
-        }
-        def next(): Row = {
-          if (!hasNext) throw new NoSuchElementException("empty walk")
-          out.dequeue()
-        }
-      }
-    }(Encoders.row(outSchema))
+  /** The shared witness walk over a banded table (orderKey, __sh, __band)
+    * with the exact Jaccard verify ([[graft.functions.kernels.jaccardSorted]],
+    * the merge walk the SQL oracle's decisions reproduce). */
+  private def bandVerifyDups(banded: DataFrame): DataFrame = {
+    val th = threshold
+    Dedup.witnessDups(banded, "__band", orderKey, "__sh", maxBandBucket)(
+      { r =>
+        val s = r.getSeq[Long](2)
+        val a = new Array[Long](s.length)
+        var i = 0; while (i < a.length) { a(i) = s(i); i += 1 }
+        a
+      },
+      (a: Array[Long], b: Array[Long]) =>
+        graft.functions.kernels.jaccardSorted(a, b) >= th)
   }
 
   /** `localCheckpoint()` that reclaims the wave's own shuffles before
@@ -465,10 +338,7 @@ final case class MinHashDeduplicateFilter(inputKey: String = "text",
           explode(slice(col("__bands"), start + 1, len)))
           .select(col(orderKey), col("__sh"), col("__band"))
         // distinct() BEFORE the checkpoint, not only after the union:
-        // the witness walk emits ≤ one id per (row, band-in-wave) — the
-        // pre-r18 join emitted one per (pair, shared band), QUADRATIC in
-        // cluster size, which checkpointed 15-20 GB of rdd blocks per
-        // wave at ×1000 and filled the disk at wave 3 of 13 — and
+        // the witness walk emits ≤ one id per (row, band-in-wave) and
         // localCheckpoint MATERIALIZES its input. The distinct's
         // map-side combine collapses the remaining band multiplicity
         // inside the wave's own exchange, so the checkpoint stores ≤ one
@@ -552,15 +422,23 @@ object MinHashDeduplicateFilter {
 
 /** SimHash near-dedup (`simhash_deduplicate_filter.py:15-85`): 60-bit
   * simhash over word hashes; pairs within Hamming distance k are dups.
-  * The reference does O(n²) pairwise; we band the fingerprint into k+1
-  * segments (pigeonhole: hamming ≤ k ⇒ at least one segment equal) →
-  * self-join on segments → exact `bit_count(xor)` verify.
+  * The reference does O(n²) pairwise; here identical fingerprints
+  * collapse to their min-orderKey row ([[Dedup.collapseIdentical]]), the
+  * fingerprint is cut into k+1 segments (pigeonhole: hamming ≤ k ⇒ at
+  * least one segment equal), and the shared witness walk
+  * ([[Dedup.witnessDups]]) verifies `bitCount(a ^ b) <= k` within each
+  * segment bucket:
+  *  - a bucket of ≤ maxBandBucket rows drops a row when ANY earlier member
+  *    is within distance k;
+  *  - a larger bucket tests every row against its min-orderKey row(s)
+  *    only. With duplicate orderKeys several rows can share the minimum;
+  *    all of them (up to maxBandBucket+1) are witnesses.
+  * A null text has a null fingerprint: null fingerprints collapse with
+  * each other like any identical value but never enter the walk.
   *
-  * Scale note: unlike minhash banding, the segment explode replicates
-  * only the 8-byte fingerprint (k+1 = 4 ways), never a per-doc array, so
-  * no scratch-budget waves are needed — measured at ×1000 (5M docs,
-  * 8 GiB JVM): 188.3 s vs 27.3 s at ×100, ×6.9 wall for 10× data,
-  * no spill/scratch incident (BASELINE.md round 9). */
+  * Scale note: the segment explode replicates only the 8-byte
+  * fingerprint k+1 ways, never a per-doc array, so no scratch-budget
+  * waves are needed. */
 final case class SimHashDeduplicateFilter(inputKey: String = "text",
     orderKey: String = "doc_id", hammingK: Int = 3,
     maxBandBucket: Int = 4096) extends Op {
@@ -581,53 +459,23 @@ final case class SimHashDeduplicateFilter(inputKey: String = "text",
     * ±1 bit votes, sign → fingerprint ([[graft.functions.kernels]]). */
   def simhash(c: Column): Column = graft.functions.hashExpressions.simhash60(c)
 
+  /** Segment s's bucket key, `(s << 32) | bits`, null for a null
+    * fingerprint. Injective for k < 60: with two or more segments each is
+    * at most 30 bits wide. (For k ≥ 60 every pair is within distance k.) */
+  private def segKey(s: Int): Column =
+    shiftleft(lit(s.toLong), 32).bitwiseOR(
+      shiftright(col("__sig"), s * segBits).bitwiseAND((1L << segWidth(s)) - 1))
+
   def apply(df: DataFrame): DataFrame = {
     val withSig = df.select(col(orderKey), simhash(col(inputKey)).as("__sig"))
-    // identical-fingerprint collapse (hamming 0 ≤ k always, and identical
-    // sigs are interchangeable → min-representative is exact) — same skew
-    // reasoning as MinHashDeduplicateFilter
-    val wIdent = Window.partitionBy(col("__sig")).orderBy(col(orderKey))
-    val ranked = withSig.withColumn("__rn", row_number().over(wIdent))
-    val identDups = ranked.filter(col("__rn") > 1).select(col(orderKey))
-    val reps = ranked.filter(col("__rn") === 1).drop("__rn")
-    val seg = explode(array((0 until SEGS).map(s =>
-      concat_ws(":", lit(s),
-        shiftright(col("__sig"), s * segBits)
-          .bitwiseAND((1L << segWidth(s)) - 1))): _*))
-    val banded = reps.withColumn("__seg", seg)
-    // Segment stats as window aggregates — same one-fewer-exchange /
-    // no-stats-join reasoning as MinHashDeduplicateFilter.duplicateIds.
-    // r17 (guide §2.4): the window is ORDERED over the full frame so
-    // `first(__sig)` also yields the bucket-minimum row's SIGNATURE in
-    // the same Window node. The big-bucket star path used to fetch
-    // sig_i/sig_j by joining BACK to `reps` on i and then j — two
-    // corpus-sized merge joins (each an exchange + sort over a full
-    // re-computation of the scan→simhash→identical-collapse lineage,
-    // keyed by orderKey so no other exchange could be reused) that ran
-    // at EVERY scale even when no bucket overflowed the cap, because
-    // the join sides don't know the overflow set is empty. The banded
-    // row already carries sig_j, and sig_i is a per-segment constant —
-    // plan-wide: 15 → 9 Exchanges, 3 → 1 SortMergeJoins, 2 fewer
-    // corpus lineage recomputations; the added sort by (__seg, orderKey)
-    // is absorbed by the candidate join's own required sort order.
-    val wSeg = Window.partitionBy(col("__seg")).orderBy(col(orderKey))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val bandedS = banded
-      .withColumn("__cnt", count(lit(1)).over(wSeg))
-      .withColumn("__bmin", min(col(orderKey)).over(wSeg))
-      .withColumn("__bminsig", first(col("__sig")).over(wSeg))
-    val small = bandedS.filter(col("__cnt") <= maxBandBucket)
-    val l = small.select(col(orderKey).as("i"), col("__sig").as("sig_i"), col("__seg"))
-    val r = small.select(col(orderKey).as("j"), col("__sig").as("sig_j"), col("__seg"))
-    val candSmall = l.join(r.hint("merge"), Seq("__seg")).where(col("i") < col("j"))
-      .select(col("i"), col("j"), col("sig_i"), col("sig_j"))
-    val bigSigs = bandedS.filter(col("__cnt") > maxBandBucket)
-    val candBig = bigSigs.filter(col(orderKey) =!= col("__bmin"))
-      .select(col("__bmin").as("i"), col(orderKey).as("j"),
-        col("__bminsig").as("sig_i"), col("__sig").as("sig_j"))
-    val bandDups = candSmall.union(candBig)
-      .where(bit_count(col("sig_i").bitwiseXOR(col("sig_j"))) <= hammingK)
-      .select(col("j").as(orderKey))
+    val (identDups, reps) = Dedup.collapseIdentical(withSig, "__sig", orderKey)
+    val banded = reps
+      .withColumn("__seg", explode(array((0 until SEGS).map(segKey): _*)))
+      .filter(col("__seg").isNotNull) // null fingerprint: no segments
+    val k = hammingK
+    val bandDups = Dedup.witnessDups(banded, "__seg", orderKey, "__sig",
+      maxBandBucket)(_.getLong(2),
+      (a: Long, b: Long) => java.lang.Long.bitCount(a ^ b) <= k)
     val dups = identDups.union(bandDups).distinct()
     // shuffle_hash: dups is 8-byte ids but CAN be corpus-sized (dup-heavy
     // corpora), while its narrow static estimate invites a broadcast that
@@ -668,7 +516,10 @@ final case class SimHashDeduplicateFilter(inputKey: String = "text",
   * approximation is observable at runtime: rows that overflowed their
   * bucket's pool are counted in the `graft.semdedup.cappedRows`
   * accumulator (visible in the Spark UI / status API; 0 ⇒ the run was
-  * exact). */
+  * exact). In both modes rows sharing an orderKey never pair (the
+  * reference's strict i < j). This walk stays separate from
+  * [[Dedup.witnessWalk]] because its rule past the cap differs: the pool
+  * is the bucket's first `maxBucket` members, not its minimum. */
 final case class SemDeduplicateFilter(embKey: String = "embedding",
     orderKey: String = "vec_id", eps: Double = 0.05, mode: String = "lsh",
     bits: Int = 0, tables: Int = 4, dim: Int = 64,
@@ -715,29 +566,32 @@ final case class SemDeduplicateFilter(embKey: String = "embedding",
           .select(col("__bucket"), col(orderKey), col("__v"))
         val parted = bucketed.repartition(col("__bucket"))
           .sortWithinPartitions(col("__bucket"), col(orderKey))
-        val outSchema = org.apache.spark.sql.types.StructType(
+        val outSchema = StructType(
           Seq(parted.schema(orderKey)))
         val (mb, th) = (maxBucket, 1.0 - eps)
         // observable cap (see scaladoc): counts rows that arrived after
         // their bucket's pool was full — 0 means the run was exact
         val capped = df.sparkSession.sparkContext
           .longAccumulator("graft.semdedup.cappedRows")
-        import org.apache.spark.sql.{Encoders, Row}
         parted.mapPartitions { it =>
-          val pool = new scala.collection.mutable.ArrayBuffer[Array[Double]]()
+          val pool = new ArrayBuffer[Array[Double]]()
+          val poolIds = new ArrayBuffer[Any]()
           var cur: String = null
           it.flatMap { row =>
             val b = row.getString(0)
-            if (b != cur) { cur = b; pool.clear() }
+            if (b != cur) { cur = b; pool.clear(); poolIds.clear() }
+            val id = row.get(1)
             val vec = row.getSeq[Double](2).toArray
             var dup = false
             var k = 0
             while (!dup && k < pool.length) {
-              if (Dedup.cosineFold(pool(k), vec) >= th) dup = true
+              if (Dedup.cosineFold(pool(k), vec) >= th && poolIds(k) != id)
+                dup = true
               k += 1
             }
-            if (pool.length < mb) pool += vec else capped.add(1)
-            if (dup) Iterator.single(Row(row.get(1))) else Iterator.empty
+            if (pool.length < mb) { pool += vec; poolIds += id }
+            else capped.add(1)
+            if (dup) Iterator.single(Row(id)) else Iterator.empty
           }
         }(Encoders.row(outSchema)).distinct()
       }
@@ -773,7 +627,6 @@ final case class KCenterGreedyFilter(embKey: String = "embedding",
     val parted =
       if (preParts > 1) slim.repartitionByRange(preParts, col("__id")) else slim
     val kk = k
-    import org.apache.spark.sql.{Encoders, Row}
     val candidates = parted.mapPartitions { it =>
       val rows = it.map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
         .toArray.sortBy(_._1)
@@ -804,7 +657,7 @@ object KCenterGreedyFilter {
       k: Int): Array[Long] = {
     val n = rows.length
     val dist = Array.fill(n)(Double.MaxValue)
-    val chosen = new scala.collection.mutable.ArrayBuffer[Long](k)
+    val chosen = new ArrayBuffer[Long](k)
     var next = 0
     var c = 0
     while (c < k && c < n) {
@@ -830,6 +683,108 @@ object Dedup {
   private[dedup] val md5Local =
     ThreadLocal.withInitial[java.security.MessageDigest](() =>
       java.security.MessageDigest.getInstance("MD5"))
+
+  /** Collapse rows whose `key` values are IDENTICAL to the min-orderKey
+    * row of each value: (dropped ids, surviving representatives). A
+    * cluster of m identical rows shares every band bucket, so without
+    * this the walk would test O(m²) pairs per cluster; identical rows are
+    * interchangeable under keep-first semantics, so keeping only the
+    * representative is exact — any row the walk would drop via a
+    * collapsed member it also drops via that member's (earlier)
+    * representative. A null key is one group like any other value. */
+  private[graft] def collapseIdentical(df: DataFrame, key: String,
+      orderKey: String): (DataFrame, DataFrame) = {
+    val w = Window.partitionBy(col(key)).orderBy(col(orderKey))
+    val ranked = df.withColumn("__rn", row_number().over(w))
+    (ranked.filter(col("__rn") > 1).select(col(orderKey)),
+      ranked.filter(col("__rn") === 1).drop("__rn"))
+  }
+
+  /** The ids of rows `similar` to an earlier row in a shared bucket — the
+    * verifier of every banded near-duplicate filter. `banded` carries a
+    * Long `bucket` key, the `orderKey` and a `payload` column that `read`
+    * extracts from column 2 of the walk's (bucket, orderKey, payload)
+    * rows. One hash exchange on the bucket and an in-partition sort by
+    * (bucket, orderKey) feed [[witnessWalk]]; only ids leave it, one per
+    * (dropped row, bucket). */
+  private[graft] def witnessDups[P](banded: DataFrame, bucket: String,
+      orderKey: String, payload: String, cap: Int)(read: Row => P,
+      similar: (P, P) => Boolean): DataFrame = {
+    val parted = banded.select(col(bucket), col(orderKey), col(payload))
+      .repartition(col(bucket))
+      .sortWithinPartitions(col(bucket), col(orderKey))
+    parted.mapPartitions(witnessWalk(cap, read, similar))(
+      Encoders.row(StructType(Seq(banded.schema(orderKey)))))
+  }
+
+  /** The witness walk over one partition of (bucket, orderKey, payload)
+    * rows sorted by (bucket, orderKey); emits Row(orderKey) per drop.
+    *  - A bucket of ≤ cap rows: row j drops iff SOME earlier row of the
+    *    bucket, dropped or not, is `similar`. The scan of earlier rows
+    *    stops at the first witness, so m mutual duplicates cost ~m tests.
+    *  - A bucket of > cap rows: every row is tested against the pool of
+    *    the bucket's min-orderKey rows only. The pool holds at most cap+1
+    *    rows: min-key rows streamed after the first cap+1 are never
+    *    pooled, so a later row matching only such a row survives.
+    *  - Rows sharing an orderKey never pair, in both kinds of bucket.
+    *  - Memory: at most cap+1 payloads are buffered. Whether a bucket is
+    *    small is known after its first cap+1 rows; from then on each drop
+    *    is emitted as soon as it is found, and a big bucket's remaining
+    *    rows are read and tested one at a time. */
+  private[graft] def witnessWalk[P](cap: Int, read: Row => P,
+      similar: (P, P) => Boolean): Iterator[Row] => Iterator[Row] = in =>
+    new Iterator[Row] {
+      private val rows = in.buffered
+      private val ids = new ArrayBuffer[Any]()
+      private val pay = new ArrayBuffer[P]()
+      private var bucket = 0L
+      private var pool = 0 // > 0: big bucket, witnesses are rows 0 until pool
+      private var j = 0 // next buffered row to test
+      private var ready: Row = null
+
+      /** Some row in 0 until upTo with another orderKey is similar to p. */
+      private def witnessed(id: Any, p: P, upTo: Int): Boolean = {
+        var i = 0
+        while (i < upTo) {
+          if (ids(i) != id && similar(pay(i), p)) return true
+          i += 1
+        }
+        false
+      }
+
+      private def step(): Unit =
+        if (j < ids.length) { // a buffered row: all earlier rows, or the pool
+          if (witnessed(ids(j), pay(j), if (pool > 0) pool else j))
+            ready = Row(ids(j))
+          j += 1
+        } else if (pool > 0 && rows.head.getLong(0) == bucket) {
+          val r = rows.next() // big bucket: stream against the pool
+          if (witnessed(r.get(1), read(r), pool)) ready = Row(r.get(1))
+        } else { // next bucket: buffer up to cap+1 rows
+          ids.clear(); pay.clear(); pool = 0; j = 0
+          bucket = rows.head.getLong(0)
+          do { val r = rows.next(); ids += r.get(1); pay += read(r) }
+          while (ids.length <= cap && rows.hasNext &&
+            rows.head.getLong(0) == bucket)
+          if (ids.length > cap) {
+            pool = 1
+            while (pool < ids.length && ids(pool) == ids(0)) pool += 1
+            j = pool
+          }
+        }
+
+      def hasNext: Boolean = {
+        while (ready == null && (j < ids.length || rows.hasNext)) step()
+        ready != null
+      }
+
+      def next(): Row = {
+        if (!hasNext) throw new NoSuchElementException("empty walk")
+        val r = ready
+        ready = null
+        r
+      }
+    }
 
   /** Keep the row with the smallest orderKey per group — ONE shuffle
     * (hash partition by groupExpr), window row_number. */

@@ -532,26 +532,6 @@ object Similarity {
     * wider would silently wrap the shift and COARSEN buckets, so it is
     * rejected at the boundary).
     *
-    * `center = true` subtracts the corpus mean before the sign-bit dot
-    * products (equivalently: per-plane offsets dot(μ, w_p), computed once
-    * from one cheap agg). Random-hyperplane codes assume roughly
-    * zero-centered data; an all-positive embedding corpus puts most mass
-    * on the same side of many planes, so codes skew into a few hot
-    * buckets and wider keys split them slowly — the round-9 A/B measured
-    * only 1.22× from bits 8→11 on such a corpus for exactly this reason.
-    * Centering is a RUNTIME knob (default off): bucket assignment changes,
-    * so runs pinned to a SQL oracle's uncentered codes must not set it;
-    * the exact cosine verify is unchanged either way, so the PAIR SET at
-    * a given threshold only gains/loses via candidate recall. MEASURED
-    * (r15, RecallSpec, 600-row corpus biased around the all-ones
-    * direction, pairs planted at cos 0.95, bits=8/tables=4): centering
-    * splits the hottest bucket 205 → 14 rows but recall falls 0.873 →
-    * 0.550 — the shared mean carries most of a biased pair's cosine, so
-    * the residuals meet at a much wider angle and per-plane collision
-    * drops well below the zero-centered theory. Centering SPENDS recall
-    * to buy bucket balance; callers who set it should raise `tables`
-    * to buy the recall back.
-    *
     * Emit-once: each side carries its full bucket-key array (tables ×
     * ~12 B — noise next to the vector) and a pair survives only in its
     * FIRST shared bucket in table order, so every qualifying pair leaves
@@ -566,7 +546,7 @@ object Similarity {
     * straight from the join. */
   def similarityJoin(df: DataFrame, embKey: String, idKey: String,
       threshold: Double, bits: Int = 0, dim: Int = 64,
-      tables: Int = 4, center: Boolean = false): DataFrame = {
+      tables: Int = 4): DataFrame = {
     require(bits >= 0 && bits <= 63,
       s"bits must be in [0, 63] (Long bucket-code width), got $bits")
     // one ids-only count in one job ([[sideCounts]]) sizes both the key
@@ -575,11 +555,8 @@ object Similarity {
     // bits = 0 → auto: sizes the key width so bucket occupancy stays
     // ~constant as the corpus grows
     val b = if (bits == 0) autoBits(corpusN) else bits
-    val offsets =
-      if (center) CosineLsh.centerOffsets(df, embKey, b, dim, tables)
-      else Array.empty[Double]
     val v = df.select(col(idKey), col(embKey).cast("array<double>").as("__v"))
-      .withColumn("__bkts", CosineLsh.buckets(col("__v"), b, dim, tables, offsets))
+      .withColumn("__bkts", CosineLsh.buckets(col("__v"), b, dim, tables))
       .withColumn("__bucket", explode(col("__bkts")))
     val l = v.select(col(idKey).as("a"), col("__v").as("va"),
       col("__bkts").as("__ba"), col("__bucket"))
@@ -625,32 +602,4 @@ object CosineLsh {
     * ([[graft.functions.kernels]]). */
   def buckets(v: Column, bits: Int, dim: Int, tables: Int): Column =
     graft.functions.hashExpressions.lshBuckets(v, bits, dim, tables)
-
-  /** Centered variant: plane p's sign test becomes dot(v, w_p) >
-    * offsets(p). Empty offsets = the uncentered form above. */
-  def buckets(v: Column, bits: Int, dim: Int, tables: Int,
-      offsets: Array[Double]): Column =
-    graft.functions.hashExpressions.lshBuckets(v, bits, dim, tables, offsets)
-
-  /** Per-plane centering offsets from the corpus mean: since the plane
-    * weights are fixed, dot(v - μ, w_p) > 0 ⟺ dot(v, w_p) > dot(μ, w_p),
-    * so centering is tables×bits precomputed scalars — no second
-    * per-row vector materialization, and the hot kernel only swaps the
-    * comparison constant. One narrow agg pass computes μ (element_at past
-    * a short vector's end is null and avg ignores nulls — consistent
-    * with the kernel's min(length) dot loop). */
-  def centerOffsets(df: DataFrame, embKey: String, bits: Int, dim: Int,
-      tables: Int): Array[Double] = {
-    val vcol = col(embKey).cast("array<double>")
-    val aggs = (0 until dim).map(i => avg(element_at(vcol, i + 1)))
-    val row = df.agg(aggs.head, aggs.tail: _*).first()
-    val mean = Array.tabulate(dim)(i =>
-      if (row.isNullAt(i)) 0.0 else row.getDouble(i))
-    val w = graft.functions.kernels.planes(bits, dim, tables)
-    Array.tabulate(tables * bits) { p =>
-      var s = 0.0; var i = 0
-      while (i < dim) { s += mean(i) * w(p)(i); i += 1 }
-      s
-    }
-  }
 }

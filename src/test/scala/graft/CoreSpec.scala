@@ -86,18 +86,6 @@ class CoreSpec extends AnyFunSuite {
     assert(kept == sigs.length - dropped.size)
   }
 
-  test("mllib minhash path largely agrees with the custom banding path") {
-    val docs = Storage.table(spark, sf, "documents")
-    val custom = MinHashDeduplicateFilter("text", "doc_id", threshold = 0.9)(docs)
-      .select("doc_id").as[Long](org.apache.spark.sql.Encoders.scalaLong)
-      .collect().toSet
-    val mllib = MinHashLSHDeduplicateFilter("text", "doc_id", threshold = 0.9)(docs)
-      .select("doc_id").as[Long](org.apache.spark.sql.Encoders.scalaLong)
-      .collect().toSet
-    val agree = (custom & mllib).size.toDouble / math.max(custom.size, mllib.size)
-    assert(agree > 0.9, s"paths diverge: custom=${custom.size} mllib=${mllib.size} agree=$agree")
-  }
-
   test("registry resolves and errors helpfully") {
     Registry.register("word_number_filter")(p =>
       WordNumberFilter(p.getOrElse("key", "text"), p.getOrElse("min", "20").toInt,

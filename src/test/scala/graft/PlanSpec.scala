@@ -45,6 +45,25 @@ class PlanSpec extends AnyFunSuite {
     assert(exchanges == 1, s"expected 1 shuffle, got $exchanges")
   }
 
+  test("simhash dedup plan has no sort-merge join and hashes text in at most 2 scans") {
+    import org.apache.spark.sql.execution.ProjectExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    val root = SparkEntry.queries("dedup_simhash")(spark, sf)
+      .queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan // AQE hides its tree
+        case p => p
+      }
+    val smj = root.collect { case j: SortMergeJoinExec => j }
+    assert(smj.isEmpty, s"sort-merge joins in the simhash plan:\n$root")
+    val hashing = root.collect {
+      case p: ProjectExec if p.projectList.exists(
+        _.exists(_.isInstanceOf[graft.functions.SimHash60])) => p
+    }
+    assert(hashing.nonEmpty && hashing.size <= 2,
+      s"simhash60 computed in ${hashing.size} scans:\n$root")
+  }
+
   test("narrow text ops have no shuffle at all") {
     Seq("refine_lowercase", "filter_word_number", "eval_langkit").foreach { q =>
       val plan = physicalPlan(q)

@@ -4,8 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-10 regressions: auto-sized LSH widths as the DEFAULT posture
-  * (fixed widths were the measured ×1000 scale trap), the centering knob
-  * for skewed embeddings, the injective MLlib collapse key, lineage-scoped
+  * (fixed widths were the measured ×1000 scale trap), lineage-scoped
   * wave shuffle reclamation, the disk-derived scratch budget, and the
   * hashedImpl driver-collect cap. */
 class R10Spec extends AnyFunSuite {
@@ -56,71 +55,6 @@ class R10Spec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       Similarity.lshTopK(df, df.limit(1), "embedding", "vec_id", 3, bits = -1)
     }
-  }
-
-  // ── centering ───────────────────────────────────────────────────────────
-
-  test("zero offsets reproduce uncentered codes; zero-mean corpus centers to zero") {
-    import graft.functions.kernels
-    val v = Seq(0.3, -1.2, 0.7, 2.0)
-    assert(kernels.lshBuckets(v, 8, 4, 2, Array.fill(16)(0.0)).toSeq ==
-      kernels.lshBuckets(v, 8, 4, 2).toSeq)
-    import spark.implicits._
-    // symmetric corpus: every vector and its negation → mean 0 → offsets 0
-    val sym = (0L until 10L).flatMap { i =>
-      val base = Seq.tabulate(4)(j => math.sin(i * 7 + j * 3))
-      Seq((2 * i, base), (2 * i + 1, base.map(-_)))
-    }.toDF("vec_id", "embedding")
-    val off = graft.ops.sim.CosineLsh.centerOffsets(sym, "embedding", 8, 4, 2)
-    assert(off.length == 16)
-    assert(off.forall(o => math.abs(o) < 1e-12))
-  }
-
-  test("centered similarityJoin finds the same tight-cluster pairs") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(11)
-    // all-positive embeddings (the skew case centering exists for):
-    // 5 tight clusters of 4, plus noise rows
-    val bases = Array.fill(5)(Array.fill(16)(rnd.nextDouble() + 0.5))
-    val rows = (for {
-      c <- 0 until 5; m <- 0 until 4
-    } yield ((c * 4 + m).toLong,
-      bases(c).map(_ + rnd.nextDouble() * 1e-4).toSeq)) ++
-      (0 until 30).map(i =>
-        ((1000 + i).toLong, Array.fill(16)(rnd.nextDouble() + 0.5).toSeq))
-    val df = rows.toDF("vec_id", "embedding")
-    def pairs(center: Boolean) = graft.ops.sim.Similarity
-      .similarityJoin(df, "embedding", "vec_id", 0.9999, dim = 16,
-        center = center)
-      .select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // near-identical vectors land in the same bucket under ANY fixed
-    // offsets (their plane dots are near-equal), so the cluster pair set
-    // is recall-invariant to centering — only the exact verify decides
-    val want = (for {
-      c <- 0 until 5; i <- 0 until 4; j <- i + 1 until 4
-    } yield ((c * 4 + i).toLong, (c * 4 + j).toLong)).toSet
-    assert(pairs(center = false) == want)
-    assert(pairs(center = true) == want)
-  }
-
-  // ── MLlib collapse-key injectivity (ADVICE high) ────────────────────────
-
-  test("MLlib collapse key cannot merge distinct gram sets via the separator") {
-    import spark.implicits._
-    // U+0001 (the previous separator) is not \s-whitespace, so it can
-    // ride inside a word: these two docs have DISJOINT gram sets
-    // (Jaccard 0) yet their sorted gram concatenations under a U+0001
-    // separator are byte-identical — {"a<1>b","c"} vs {"a","b<1>c"}
-    // both concatenate to a<1>b<1>c. With "\n" (genuinely
-    // unreachable: the tokenizer consumes it) they differ.
-    val doc1 = "a" + "\u0001" + "b c"
-    val doc2 = "a b" + "\u0001" + "c"
-    val df = Seq((1L, doc1), (2L, doc2)).toDF("doc_id", "text")
-    val kept = graft.ops.dedup.MinHashLSHDeduplicateFilter(
-      ngram = 1, threshold = 0.9)(df)
-      .select("doc_id").as[Long].collect().toSet
-    assert(kept == Set(1L, 2L),
-      s"Jaccard-0 docs were collapsed as identical: kept=$kept")
   }
 
   // ── lineage-scoped wave reclamation (ADVICE medium) ─────────────────────

@@ -51,22 +51,6 @@ class R8Spec extends AnyFunSuite {
       s"no contrast: spun=${spun.cpuRatio} slept=${slept.cpuRatio}")
   }
 
-  test("mllib minhash collapse keeps exactly the first of an exact-clone cluster") {
-    import spark.implicits._
-    // 200-way exact-clone cluster + distinct docs: without the
-    // identical-set collapse this is the O(m²) candidate shape; with it
-    // the window keeps doc 0 and drops 1..199 before LSH ever runs —
-    // and the output must be exactly keep-first.
-    val clone = "the quick brown fox jumps over the lazy dog again and again"
-    val docs = ((0L until 200L).map(i => (i, clone)) ++
-      Seq((500L, "completely different words about databases and engines here"),
-          (501L, "yet another unrelated sentence mentioning spark catalyst tungsten")))
-      .toDF("doc_id", "text")
-    val kept = graft.ops.dedup.MinHashLSHDeduplicateFilter("text", "doc_id")(docs)
-      .select("doc_id").as[Long].collect().toSet
-    assert(kept == Set(0L, 500L, 501L), s"got $kept")
-  }
-
   test("IVF centroid export happens only under the verify flag") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val nRows = emb.count()

@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-9 regressions: deterministic (non-GC) wave shuffle reclamation,
-  * the emit-once bucket-uniqueness invariant, the MLlib collapse's digest
-  * shuffle key, and the oracled streaming-dedup query. */
+  * the emit-once bucket-uniqueness invariant, and the oracled
+  * streaming-dedup query. */
 class R9Spec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   val sf = "/root/testdata/sf0.001"
@@ -77,25 +77,6 @@ class R9Spec extends AnyFunSuite {
       .select(split(col("k"), ":").getItem(0).as("t")).distinct()
       .collect().map(_.getString(0)).toSet
     assert(prefixes == Set("0", "1", "2", "3"))
-  }
-
-  test("MLlib collapse digest key keeps keep-first exact on clone clusters") {
-    // the Window now partitions on md5(concat_ws(sep, sorted distinct
-    // grams)) instead of the array itself; decisions must be unchanged:
-    // permuted / repeated-gram variants of one doc still collapse to the
-    // min-orderKey representative
-    import spark.implicits._
-    val base = "alpha beta gamma delta epsilon zeta"
-    val permuted = "delta epsilon zeta alpha beta gamma alpha beta gamma"
-    val rows = Seq((10L, base), (3L, base), (7L, permuted), (20L, "totally different words here now"))
-      .toDF("doc_id", "text")
-    val kept = graft.ops.dedup.MinHashLSHDeduplicateFilter(ngram = 3)(rows)
-      .select("doc_id").as[Long].collect().toSet
-    // base: grams of `permuted` = union over window positions; its
-    // distinct 3-gram set differs from base's, so only exact clone
-    // (10 vs 3) collapses by identity; near-dup pairs go through the join
-    assert(kept.contains(3L) && !kept.contains(10L))
-    assert(kept.contains(20L))
   }
 
   test("similarityJoin bits=0 auto-sizes buckets and floors at the default") {
