@@ -1,8 +1,8 @@
 package graft.ops.code
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.core.{FilterOp, Op}
 import graft.functions.text._
 import graft.serving.Scorer
@@ -151,8 +151,10 @@ final case class MockCodeExecutor() extends CodeExecutor {
 /** Sandboxed execution evaluator
   * (`code/eval/code_sandbox_sample_evaluator.py:17-90`): run each code
   * snippet with process isolation + timeout, append PASS/FAIL status and
-  * the captured log. mapPartitions: executions are distributed and
-  * bounded per executor like every serving-backed op. */
+  * the captured log. One typed UDF returns both, so each snippet runs
+  * exactly once per row however many of the two columns a query reads
+  * or filters on; executions are distributed over the executors. A null
+  * snippet runs as "". */
 final case class CodeSandboxSampleEvaluator(inputKey: String = "generated_code",
     executor: CodeExecutor = MockCodeExecutor(), timeoutSec: Int = 15,
     statusKey: String = "sandbox_status", logKey: String = "sandbox_log")
@@ -161,17 +163,16 @@ final case class CodeSandboxSampleEvaluator(inputKey: String = "generated_code",
   val inputKeys = Seq(inputKey)
   val outputKeys = Seq(statusKey, logKey)
   def apply(df: DataFrame): DataFrame = {
-    val schema = df.schema
-      .add(StructField(statusKey, StringType, nullable = false))
-      .add(StructField(logKey, StringType, nullable = true))
-    val idx = df.schema.fieldIndex(inputKey)
     val (ex, to) = (executor, timeoutSec)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val (ok, log) = ex.run(Option(r.getString(idx)).getOrElse(""), to)
-        Row.fromSeq(r.toSeq :+ (if (ok) "PASS" else "FAIL") :+ log)
-      }
-    }(Encoders.row(schema))
+    val sandboxed = udf { code: String =>
+      val (ok, log) = ex.run(Option(code).getOrElse(""), to)
+      (if (ok) "PASS" else "FAIL", log)
+    }
+    val outType = StructType(Seq(
+      StructField(statusKey, StringType), StructField(logKey, StringType)))
+    // generated, not projected: a filter on the status is never pushed
+    // below a Generate, so it cannot inline a second run of the snippet
+    df.select(col("*"), inline(array(sandboxed(col(inputKey)).cast(outType))))
   }
 }
 

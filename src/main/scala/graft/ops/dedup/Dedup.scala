@@ -680,10 +680,6 @@ object KCenterGreedyFilter {
 }
 
 object Dedup {
-  private[dedup] val md5Local =
-    ThreadLocal.withInitial[java.security.MessageDigest](() =>
-      java.security.MessageDigest.getInstance("MD5"))
-
   /** Collapse rows whose `key` values are IDENTICAL to the min-orderKey
     * row of each value: (dropped ids, surviving representatives). A
     * cluster of m identical rows shares every band bucket, so without

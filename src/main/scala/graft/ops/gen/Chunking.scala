@@ -2,8 +2,10 @@ package graft.ops.gen
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField}
 import graft.core.{Op, Partitioning}
 import graft.functions.text._
+import graft.serving.LLMMap
 
 /** Document chunking — the KBC chunk generator's four modes
   * (`knowledge_cleaning/generate/kbc_chunk_generator.py:21-107`:
@@ -16,10 +18,15 @@ import graft.functions.text._
   * dropped, they coalesce with their successor; a short tail joins the
   * previous chunk).
   *
-  * Mode "semantic" mirrors the reference's embedding-boundary chunker:
-  * sentences are embedded through the `serving` seam (narrow
-  * mapPartitions), and a chunk boundary opens where the cosine between
-  * adjacent sentence embeddings drops below `simThreshold`. */
+  * Mode "semantic" mirrors the reference's embedding-boundary chunker,
+  * one document at a time: the document's sentences are embedded through
+  * the `serving` seam ([[LLMMap]]'s kernel) and cut into chunks by
+  * [[ChunkSplitter.semanticChunks]], in the same narrow stage. The only
+  * exchange is the spread of a narrow document table by id.
+  *
+  * Every row is its own document: rows that share an `idKey` (null
+  * included) are chunked separately, each with positions from 0, and a
+  * row with null, empty or sentence-free text yields no chunk. */
 final case class ChunkSplitter(inputKey: String = "text",
     idKey: String = "doc_id", mode: String = "token", chunkSize: Int = 512,
     minChunkTokens: Int = 0,
@@ -82,33 +89,21 @@ final case class ChunkSplitter(inputKey: String = "text",
   private def semanticChunks(df: DataFrame): DataFrame = {
     val client = serving.getOrElse(throw new IllegalArgumentException(
       "mode=semantic requires a serving client for sentence embeddings"))
-    val sentences = df.select(col(idKey),
-      posexplode(filter(transform(split(col(inputKey), "[.!?]+"), s => trim(s)),
-        s => s =!= "")).as(Seq("__sp", "__sent")))
-    // The embed chains on the scan and runs at its width; the id window
-    // below exchanges by id anyway, so spreading a narrow scan by id
-    // moves that exchange before the embed (same exchange count, raw
-    // sentences instead of sentence+embedding rows on the wire).
-    val parted = Partitioning.spread("ChunkSplitter", sentences, col(idKey))(true)
-    val embedded = graft.serving.LLMMap.embedded(parted, "__sent", "__emb", client)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(idKey).orderBy("__sp")
-    val withPrev = embedded.withColumn("__prev", lag(col("__emb"), 1).over(w))
-    val boundary = when(col("__prev").isNull, lit(1))
-      .when(graft.functions.expressions.cosineSim(col("__prev"), col("__emb"))
-        < simThreshold, lit(1))
-      .otherwise(lit(0))
-    val grouped = withPrev.withColumn("__grp",
-      sum(boundary).over(w.rowsBetween(
-        org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
-    grouped.groupBy(col(idKey), col("__grp"))
-      .agg(min(col("__sp")).as("__first"),
-        array_join(transform(array_sort(collect_list(struct(col("__sp"), col("__sent")))),
-          s => s("__sent")), ". ").as("raw_chunk"))
-      .withColumn("pos",
-        (row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy(idKey).orderBy("__first")) - 1).cast("int"))
-      .select(col(idKey), col("pos"), col("raw_chunk"))
+    // the embeddings are the stage's work and the scan's width says
+    // nothing about it: a narrow document table is spread by id first
+    val parted = Partitioning.spread("ChunkSplitter",
+      df.select(col(idKey), col(inputKey)), col(idKey))(true)
+    val sentences = parted.select(col(idKey),
+      filter(transform(split(col(inputKey), "[.!?]+"), s => trim(s)), s => s =!= "")
+        .as("__sents"))
+    val th = simThreshold
+    val chunked = LLMMap.appended(sentences,
+      StructField("__chunks", ArrayType(StringType)), LLMMap.DefaultBatch)(
+      r => if (r.isNullAt(1)) Nil else r.getSeq[String](1)) { docs =>
+      val embs = LLMMap.perRow(docs, LLMMap.DefaultBatch)(client.embed)
+      docs.lazyZip(embs).map(ChunkSplitter.semanticChunks(_, _, th))
+    }
+    chunked.select(col(idKey), posexplode(col("__chunks")).as(Seq("pos", "raw_chunk")))
   }
 
   def apply(df: DataFrame): DataFrame = {
@@ -126,5 +121,28 @@ final case class ChunkSplitter(inputKey: String = "text",
     // whole chunk expression once more per document
     merged.select(col(idKey), posexplode_outer(col("__chunks")).as(Seq("pos", "raw_chunk")))
       .where(col("raw_chunk").isNotNull)
+  }
+}
+
+object ChunkSplitter {
+  /** One document's semantic chunks, in sentence order: a chunk opens at
+    * the first sentence and before every sentence whose cosine
+    * ([[graft.ops.dedup.Dedup.cosineFold]]) with its predecessor's
+    * embedding is below `threshold`; a NaN cosine (a zero vector)
+    * continues the chunk. A chunk's sentences are joined with ". ". */
+  def semanticChunks(sentences: Seq[String], embeddings: Seq[Array[Double]],
+      threshold: Double): Seq[String] = {
+    val out = Seq.newBuilder[String]
+    val cur = new StringBuilder
+    sentences.indices.foreach { i =>
+      if (i > 0) {
+        if (graft.ops.dedup.Dedup.cosineFold(embeddings(i - 1), embeddings(i)) < threshold) {
+          out += cur.toString; cur.clear()
+        } else cur.append(". ")
+      }
+      cur.append(sentences(i))
+    }
+    if (sentences.nonEmpty) out += cur.toString
+    out.result()
   }
 }

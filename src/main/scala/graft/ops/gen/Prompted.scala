@@ -2,6 +2,7 @@ package graft.ops.gen
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField}
 import graft.core.Op
 import graft.serving.{LLMMap, ServingClient}
 
@@ -129,9 +130,14 @@ final case class CondorRefiner(inputKey: String, serving: ServingClient)
 }
 
 /** Split long text into word-chunks, prompt each, concat responses
-  * (`chunked_prompted_generator.py:12`): explode → LLM map → re-agg.
-  * The re-agg shuffles on the row id — unavoidable for order-preserving
-  * reassembly; chunk count per row is bounded so no skew. */
+  * (`chunked_prompted_generator.py:12`), one row at a time: the row's
+  * chunks are generated in [[LLMMap]]'s kernel and their responses joined
+  * with `" | "` in chunk order into `outputKey`. One narrow stage, no
+  * shuffle.
+  *
+  * Every row is its own record: `df`'s columns and row count are kept,
+  * rows that share an `idKey` (null included) are answered separately.
+  * A row with null or empty text is one empty chunk. */
 final case class ChunkedPromptedGenerator(inputKey: String, idKey: String,
     outputKey: String, serving: ServingClient, chunkWords: Int = 20,
     systemPrompt: String = "") extends Op {
@@ -139,26 +145,23 @@ final case class ChunkedPromptedGenerator(inputKey: String, idKey: String,
   val inputKeys = Seq(inputKey, idKey)
   val outputKeys = Seq(outputKey)
   def apply(df: DataFrame): DataFrame = {
-    // materialize the word array first (ArrayTransform is CodegenFallback:
-    // a split in the lambda body re-tokenizes once per chunk) and explode
-    // OUTER so InferFiltersFromGenerate can't re-inline the chunk
-    // expression into a pushed size() filter — see ChunkSplitter
+    // materialize the word array first: ArrayTransform is CodegenFallback,
+    // so a split in the lambda body would re-tokenize once per chunk
     val ws = col("__ws")
     val nChunks = ceil(size(ws).cast("double") / chunkWords.toDouble).cast("int")
-    val chunks = df
+    val chunked = df
       .withColumn("__ws", graft.functions.text.words(col(inputKey)))
       .withColumn("__chunks",
         transform(sequence(lit(0), greatest(nChunks - 1, lit(0))),
           i => concat_ws(" ", slice(ws, i * chunkWords + 1, lit(chunkWords)))))
-      .select(col(idKey), posexplode_outer(col("__chunks")).as(Seq("__pos", "__chunk")))
-      .where(col("__chunk").isNotNull)
-    val responded = LLMMap.generated(chunks, "__chunk", "__resp", serving, systemPrompt)
-    val reassembled = responded.groupBy(col(idKey))
-      .agg(array_join(transform(array_sort(collect_list(struct(col("__pos"), col("__resp")))),
-        s => s("__resp")), " | ").as(outputKey))
-    // merge hint: reassembled is one row per input row — corpus-sized —
-    // but its aggregate-derived static estimate invites a broadcast
-    df.join(reassembled.hint("merge"), Seq(idKey), "left")
+      .drop("__ws")
+    val idx = chunked.schema.fieldIndex("__chunks")
+    val (sv, sys) = (serving, systemPrompt)
+    LLMMap.appended(chunked, StructField(outputKey, StringType), LLMMap.DefaultBatch)(
+      r => r.getSeq[String](idx)) { rows =>
+      LLMMap.perRow(rows, LLMMap.DefaultBatch)(sv.generate(_, sys))
+        .map(_.filter(_ != null).mkString(" | "))
+    }.drop("__chunks")
   }
 }
 

@@ -5,7 +5,8 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import javax.imageio.ImageIO
 import javax.sound.sampled.{AudioFormat, AudioInputStream, AudioSystem, AudioFileFormat}
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.types._
 import graft.core.Op
 
@@ -17,8 +18,10 @@ import graft.core.Op
   *
   * Mirrors the reference's vision/speech binary handling
   * (`dataflow/operators/core_vision`, `core_speech`): binary column in,
-  * typed metadata / transformed binary out, decoded per partition inside
-  * `mapPartitions` (one codec pass per task, never on the driver).
+  * typed metadata / transformed binary out. Each op below is one typed
+  * UDF over the payload column, run on the executors, never on the
+  * driver; a cast gives its output struct the field names and types the
+  * op declares.
   */
 object MediaCodec {
   // Must be set before any java.awt class initializes; BufferedImage and
@@ -164,11 +167,11 @@ object MediaCodec {
   }
 }
 
-/** Real image decode (`core_vision` binary handling): ImageIO parse per
-  * row inside `mapPartitions`, emitting dimensions, band count, and
-  * exact raster sums (from which any mean/normalization downstream is a
-  * pure-column expression). Undecodable payloads yield a null struct —
-  * filter or route them, don't fail the task. */
+/** Real image decode (`core_vision` binary handling): one ImageIO parse
+  * per row in a typed UDF, emitting dimensions, band count and exact
+  * raster sums (from which any mean/normalization downstream is a
+  * pure-column expression). Undecodable or null payloads yield a null
+  * struct — filter or route them, don't fail the task. */
 final case class ImageDecoder(binKey: String = "payload",
     outputKey: String = "decoded") extends Op {
   val name = "image_decoder"
@@ -180,25 +183,16 @@ final case class ImageDecoder(binKey: String = "payload",
     StructField("channels", IntegerType),
     StructField("pixel_sum", LongType), StructField("pixel_count", LongType)))
 
-  def apply(df: DataFrame): DataFrame = {
-    val schema = df.schema.add(StructField(outputKey, decodedType))
-    val idx = df.schema.fieldIndex(binKey)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val d = MediaCodec.decodeImage(r.getAs[Array[Byte]](idx)).orNull
-        val extra =
-          if (d == null) null
-          else Row(d.width, d.height, d.channels, d.pixelSum, d.pixelCount)
-        Row.fromSeq(r.toSeq :+ extra)
-      }
-    }(Encoders.row(schema))
-  }
+  def apply(df: DataFrame): DataFrame =
+    df.withColumn(outputKey,
+      udf(MediaCodec.decodeImage _).apply(col(binKey)).cast(decodedType))
 }
 
 /** Real image resize: decode → deterministic nearest-neighbor downscale
-  * to `maxSide` → PNG re-encode, all partition-local. The output is a
-  * new binary column; chain [[ImageDecoder]] after it to read the
-  * resized dimensions back out of the actual bytes. */
+  * to `maxSide` → PNG re-encode, one typed UDF call per row. The output
+  * is a new binary column, null for undecodable or null input; chain
+  * [[ImageDecoder]] after it to read the resized dimensions back out of
+  * the actual bytes. */
 final case class ImageResizer(binKey: String = "payload",
     outputKey: String = "resized_png", maxSide: Int = 256) extends Op {
   val name = "image_resizer"
@@ -206,21 +200,16 @@ final case class ImageResizer(binKey: String = "payload",
   val outputKeys = Seq(outputKey)
 
   def apply(df: DataFrame): DataFrame = {
-    val schema = df.schema.add(StructField(outputKey, BinaryType))
-    val idx = df.schema.fieldIndex(binKey)
     val side = maxSide
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val out = MediaCodec.resizeNearestPng(r.getAs[Array[Byte]](idx), side).orNull
-        Row.fromSeq(r.toSeq :+ out)
-      }
-    }(Encoders.row(schema))
+    df.withColumn(outputKey,
+      udf((b: Array[Byte]) => MediaCodec.resizeNearestPng(b, side)).apply(col(binKey)))
   }
 }
 
 /** WAV audio metadata via the JDK RIFF parser — the typed-metadata side
   * of the reference's speech pipeline (`core_speech`): sample rate,
-  * channel count, bit depth, frame count, duration. */
+  * channel count, bit depth, frame count, duration, one typed UDF call
+  * per row; null for non-audio or null payloads. */
 final case class WavMetadataEvaluator(binKey: String = "payload")
     extends Op {
   val name = "wav_metadata_evaluator"
@@ -232,17 +221,6 @@ final case class WavMetadataEvaluator(binKey: String = "payload")
     StructField("bits", IntegerType), StructField("n_frames", LongType),
     StructField("duration_ms", DoubleType)))
 
-  def apply(df: DataFrame): DataFrame = {
-    val schema = df.schema.add(StructField("audio_meta", metaType))
-    val idx = df.schema.fieldIndex(binKey)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val m = MediaCodec.wavMeta(r.getAs[Array[Byte]](idx)).orNull
-        val extra =
-          if (m == null) null
-          else Row(m.sampleRate, m.channels, m.bits, m.frames, m.durationMs)
-        Row.fromSeq(r.toSeq :+ extra)
-      }
-    }(Encoders.row(schema))
-  }
+  def apply(df: DataFrame): DataFrame =
+    df.withColumn("audio_meta", udf(MediaCodec.wavMeta _).apply(col(binKey)).cast(metaType))
 }

@@ -1,6 +1,6 @@
 package graft.ops.multimodal
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.Op
@@ -34,11 +34,10 @@ final case class BinaryMetadataEvaluator(binKey: String = "payload") extends Op 
   }
 }
 
-/** Decode stub: a real implementation would run the codec per batch in
-  * `mapPartitions` (exactly this shape — iterator in, iterator out, one
-  * decoder instance per partition). The stub derives deterministic fake
-  * dimensions from the digest so the full pipeline — schema, batching,
-  * downstream filters — is testable hermetically. */
+/** Decode stub: deterministic fake dimensions from the payload's digest
+  * ([[ImageDecodeDouble.fakeDims]]), one typed UDF call per row, so the
+  * full pipeline — schema, downstream filters — is testable
+  * hermetically. A null or empty payload decodes to (0, 0, 0). */
 final case class ImageDecodeDouble(binKey: String = "payload",
     outputKey: String = "decoded") extends Op {
   val name = "image_decode_double"
@@ -49,18 +48,9 @@ final case class ImageDecodeDouble(binKey: String = "payload",
     StructField("width", IntegerType), StructField("height", IntegerType),
     StructField("channels", IntegerType)))
 
-  def apply(df: DataFrame): DataFrame = {
-    val schema = df.schema.add(StructField(outputKey, decodedType))
-    val idx = df.schema.fieldIndex(binKey)
-    df.mapPartitions { rows =>
-      // per-partition "decoder" init would go here (one codec instance)
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](idx)
-        val dims = ImageDecodeDouble.fakeDims(bytes)
-        Row.fromSeq(r.toSeq :+ Row(dims._1, dims._2, dims._3))
-      }
-    }(Encoders.row(schema))
-  }
+  def apply(df: DataFrame): DataFrame =
+    df.withColumn(outputKey,
+      udf(ImageDecodeDouble.fakeDims _).apply(col(binKey)).cast(decodedType))
 }
 
 object ImageDecodeDouble {
@@ -77,7 +67,7 @@ object ImageDecodeDouble {
 /** Audio → transcript via a serving model
   * (`core_speech/generate/speech2text_generator.py:16-59`): the binary
   * payload rides to the ASR service base64-encoded through the same
-  * mapPartitions serving bridge as every model-backed op. */
+  * serving kernel ([[graft.serving.LLMMap]]) as every model-backed op. */
 final case class Speech2TextGenerator(binKey: String = "payload",
     outputKey: String = "transcript",
     serving: graft.serving.ServingClient) extends Op {
@@ -95,7 +85,7 @@ final case class Speech2TextGenerator(binKey: String = "payload",
 }
 
 /** Resize/feature-extract stub over decoded dims: pure arithmetic on the
-  * struct (a real impl transforms pixel buffers partition-wise). */
+  * struct (the real raster resize is [[ImageResizer]]). */
 final case class ImageResizeDouble(decodedKey: String = "decoded",
     maxSide: Int = 256) extends Op {
   val name = "image_resize_double"
@@ -125,7 +115,7 @@ final case class FrameSampler(framesKey: String = "frames", every: Int = 10)
 /** Visual question answering over binary image payloads
   * (`core_vision/generate/prompted_vqa_generator.py:9-60`): the image
   * rides base64-encoded next to the question through the same
-  * mapPartitions serving bridge as Speech2Text — one narrow pass, no
+  * serving kernel as Speech2Text — one narrow pass, no
   * shuffle, VLM concurrency bounded per executor. */
 final case class PromptedVQAGenerator(binKey: String = "payload",
     questionKey: String = "question", outputKey: String = "answer",

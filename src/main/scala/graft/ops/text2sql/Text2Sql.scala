@@ -416,23 +416,6 @@ object SqlExecutor {
     }
   }
 
-  def runs(spark: SparkSession, sql: String, timeoutSec: Int): Boolean = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    implicit val ec: scala.concurrent.ExecutionContext = timedEc
-    if (!parsesAsQuery(spark, sql)) return false
-    try {
-      Await.result(Future {
-        tryFold(spark, sql) match {
-          case Some(_) => true
-          case None =>
-            try { spark.sql(sql).limit(1).collect(); true }
-            catch { case _: Throwable => false }
-        }
-      }, timeoutSec.seconds)
-    } catch { case _: Throwable => false }
-  }
-
   /** Timed result fingerprint for execution-compare classification
     * (`sql_execution_classifier.py:15-243`): Some(sha256 of the sorted
     * canonical row encoding) or None on error/timeout. sha256 — a 32-bit

@@ -1,9 +1,9 @@
 package graft.ops.text2sql
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{StringType, StructField}
 import graft.core.Op
-import graft.serving.ServingClient
+import graft.serving.{LLMMap, ServingClient}
 
 /** Vector-SQL support: rewrite `lembed([model,] 'text')` calls inside SQL
   * statements into `vec_f32('[…]')` literals using the engine's embedding
@@ -51,10 +51,11 @@ object VecSqlRewrite {
   }
 }
 
-/** Distributed vector-SQL rewriting over a statement column: per batch,
-  * all `lembed()` texts embed in ONE serving call, then splice back —
-  * narrow mapPartitions, no shuffle, embedding concurrency bounded per
-  * executor exactly like every other serving-backed op. */
+/** Distributed vector-SQL rewriting over a statement column, in
+  * [[LLMMap]]'s kernel: per batch of statements, every `lembed()` text is
+  * embedded through [[LLMMap.perRow]] (calls of at most `batchSize`
+  * texts) and spliced back into its own statement. Narrow, no shuffle; a
+  * null statement rewrites to "". */
 final case class VecSqlRewriteGenerator(sqlKey: String = "sql",
     outputKey: String = "vec_sql", serving: ServingClient,
     batchSize: Int = 64) extends Op {
@@ -63,24 +64,11 @@ final case class VecSqlRewriteGenerator(sqlKey: String = "sql",
   val outputKeys = Seq(outputKey)
 
   def apply(df: DataFrame): DataFrame = {
-    val schema = df.schema.add(StructField(outputKey, StringType, nullable = true))
-    val idx = df.schema.fieldIndex(sqlKey)
-    val sv = serving
-    df.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        val stmts = batch.map(r => Option(r.getString(idx)).getOrElse(""))
-        val perStmt = stmts.map(VecSqlRewrite.texts)
-        val flat = perStmt.flatten
-        val embedded =
-          if (flat.isEmpty) Seq.empty[Array[Double]] else sv.embed(flat)
-        require(embedded.length == flat.length,
-          s"ServingClient.embed returned ${embedded.length} vectors for ${flat.length} texts")
-        val it = embedded.iterator
-        val rewritten = stmts.lazyZip(perStmt).map { (sql, ts) =>
-          if (ts.isEmpty) sql else VecSqlRewrite.splice(sql, ts.map(_ => it.next()))
-        }
-        batch.lazyZip(rewritten).map { (r, s) => Row.fromSeq(r.toSeq :+ s) }
-      }
-    }(Encoders.row(schema))
+    val (sv, n) = (serving, batchSize)
+    LLMMap.appended(df, StructField(outputKey, StringType), n)(LLMMap.text(df, sqlKey)) {
+      stmts =>
+        val vecs = LLMMap.perRow(stmts.map(VecSqlRewrite.texts), n)(sv.embed)
+        stmts.lazyZip(vecs).map(VecSqlRewrite.splice)
+    }
   }
 }

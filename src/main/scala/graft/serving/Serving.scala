@@ -2,9 +2,11 @@ package graft.serving
 
 /** Serving abstraction — the engine-side contract of the reference's
   * `LLMServingABC.generate_from_input(user_inputs, system_prompt)`
-  * (`dataflow/core/llm_serving.py:5-9`). Implementations are used ONLY
-  * inside `mapPartitions` (per-partition client, bounded concurrency) —
-  * the whole LLM-operator family reduces to `Seq[String] => Seq[String]`.
+  * (`dataflow/core/llm_serving.py:5-9`). DataFrame operators call it
+  * only through [[LLMMap]]'s per-partition kernel, which deserializes one
+  * client per task and checks that every call returns one output per
+  * input, in order — the whole LLM-operator family reduces to
+  * `Seq[String] => Seq[String]`.
   */
 trait ServingClient extends Serializable {
   /** Generate one response per prompt, order-preserving. */

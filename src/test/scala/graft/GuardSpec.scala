@@ -43,7 +43,6 @@ class GuardSpec extends AnyFunSuite {
       // …but the parse-level guard fails it on every execution path,
       // without touching the catalog
       assert(graft.ops.text2sql.SqlExecutor.hashed(spark, sneaky, 5).isEmpty)
-      assert(!graft.ops.text2sql.SqlExecutor.runs(spark, sneaky, 5))
       val out = graft.ops.text2sql.SparkSessionBackend()
         .execute(Seq(sneaky).toDF("sql"), "sql", 5)
         .collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap

@@ -79,6 +79,26 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("semantic chunking has one exchange, the id spread, and no window or aggregate") {
+    val plan = physicalPlan("kbc_chunks_semantic")
+    val exchanges = "\\bExchange\\b".r.findAllIn(plan).length
+    assert(exchanges == 1, s"expected 1 exchange, got $exchanges:\n$plan")
+    assert(plan.contains("Exchange hashpartitioning(doc_id"), s"not spread by id:\n$plan")
+    assert(!plan.contains("Window") && !plan.contains("Aggregate"), s"re-assembly left:\n$plan")
+  }
+
+  test("chunked prompting has no exchange and no join") {
+    val plan = physicalPlan("gen_chunked")
+    assert(!plan.contains("Exchange") && !plan.contains("Join"), s"gen_chunked:\n$plan")
+  }
+
+  test("per-row codec and sandbox ops skip the Row round trip") {
+    Seq("mm_decode_png", "eval_code_sandbox").foreach { q =>
+      val plan = physicalPlan(q)
+      assert(!plan.contains("DeserializeToObject"), s"$q:\n$plan")
+    }
+  }
+
   test("join_bucketed query plan is exchange-free end to end") {
     val plan = physicalPlan("join_bucketed")
     assert(!plan.contains("Exchange hashpartitioning"),

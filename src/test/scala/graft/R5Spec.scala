@@ -287,7 +287,6 @@ class FoldPathSpec extends org.scalatest.funsuite.AnyFunSuite {
       val sneaky = "WITH s AS (SELECT 2 AS x) INSERT INTO guard_victim2 SELECT x FROM s"
       // direct executor entry points
       assert(graft.ops.text2sql.SqlExecutor.hashed(spark, sneaky, 5).isEmpty)
-      assert(!graft.ops.text2sql.SqlExecutor.runs(spark, sneaky, 5))
       // backend sweep (a textual SELECT/WITH prefix check alone would
       // pass the WITH prefix; the parse-level guard must catch it)
       val stmts = Seq(sneaky, "SELECT 1 AS x").toDF("sql")
