@@ -7,7 +7,7 @@ object Verify {
     val Array(sfDir, outDir) = args
     // this run feeds the DuckDB oracle, which replays sim_ivf_topk from
     // the exported centroids — so the export must happen HERE (and only
-    // here: bench passes skip it, see SparkEntry.ivfExportDir)
+    // here: bench passes skip it, see graft.queries.Sim.ivfExportDir)
     sys.props("graft.ivf.export") = "true"
     val spark = LocalSpark.session()
     new java.io.File(outDir).mkdirs()

@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Core operator abstraction.
   *
@@ -25,6 +26,23 @@ trait Op extends Serializable {
   def outputKeys: Seq[String]
 
   def apply(df: DataFrame): DataFrame
+}
+
+object Op {
+  /** `df` plus one column per field of the struct `out`, computed in a
+    * Generate over a one-element array (one output row per input row).
+    * A filter on a generated column stays above the Generate, so a UDF
+    * in `out` runs once per row; as a projected column, Catalyst would
+    * inline it into the pushed-down filter and run it again for every
+    * row the filter keeps. Filters on `df`'s own columns still go below.
+    * A field named like a column of `df` replaces it in place, as
+    * `withColumn` does. */
+  private[graft] def generated(df: DataFrame, out: Column): DataFrame = {
+    val g = df.select(col("*"), explode(array(out)).as("__generated"))
+    g.schema("__generated").dataType.asInstanceOf[StructType].fieldNames
+      .foldLeft(g)((d, k) => d.withColumn(k, col(s"__generated.`$k`")))
+      .drop("__generated")
+  }
 }
 
 /** Filter family (§2.2 of SURVEY): compute per-row predicate, optionally

@@ -78,13 +78,4 @@ object ShuffleCleanup {
     sc.cleaner.foreach { cl =>
       ids.toSeq.sorted.foreach(id => cl.doCleanupShuffle(id, blocking = true))
     }
-
-  /** Block until every queued listener event has been delivered.
-    * Stage-completed events ride the ASYNC listener bus, so a harness
-    * snapshotting per-stage metrics right after an action can silently
-    * drop a cell's final stages or attribute them to the next cell
-    * (r15 advice — the per-stage tables the A/B diagnoses rely on).
-    * `listenerBus` is `private[spark]`, hence bridged here. */
-  def drainListenerBus(sc: SparkContext): Unit =
-    sc.listenerBus.waitUntilEmpty()
 }

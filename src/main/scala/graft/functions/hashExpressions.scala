@@ -199,10 +199,6 @@ object hashExpressions {
   def simhash60(text: Column): Column =
     SparkBridge.toColumn(SimHash60(SparkBridge.toExpression(text)))
 
-  def minhashBands(text: Column, ngram: Int, numPerm: Int, bands: Int): Column =
-    SparkBridge.toColumn(MinHashBands(SparkBridge.toExpression(text),
-      Literal(ngram), Literal(numPerm), Literal(bands)))
-
   def lshBuckets(vec: Column, bits: Int, dim: Int, tables: Int): Column =
     SparkBridge.toColumn(CosineLshBuckets(
       SparkBridge.toExpression(vec.cast("array<double>")),

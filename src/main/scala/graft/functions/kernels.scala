@@ -59,26 +59,6 @@ object kernels {
     h >>> 4
   }
 
-  private val gramMemo =
-    ThreadLocal.withInitial[java.util.HashMap[String, java.lang.Long]](() =>
-      new java.util.HashMap[String, java.lang.Long](1 << 12))
-
-  /** [[md5Prefix60]] with a bounded per-thread memo (cleared at 64k
-    * entries). Gram streams are zipf-distributed — most occurrences are
-    * repeats of a small head — so memoizing recovers most of the md5
-    * CPU without touching the replayable definition. */
-  def md5Prefix60Memo(s: String): Long = {
-    val m = gramMemo.get()
-    val hit = m.get(s)
-    if (hit != null) hit.longValue()
-    else {
-      val h = md5Prefix60(s)
-      if (m.size >= (1 << 16)) m.clear()
-      m.put(s, h)
-      h
-    }
-  }
-
   // ── SimHash ────────────────────────────────────────────────────────────
 
   /** 60-bit simhash over word tokens

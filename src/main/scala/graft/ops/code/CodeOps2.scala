@@ -170,9 +170,7 @@ final case class CodeSandboxSampleEvaluator(inputKey: String = "generated_code",
     }
     val outType = StructType(Seq(
       StructField(statusKey, StringType), StructField(logKey, StringType)))
-    // generated, not projected: a filter on the status is never pushed
-    // below a Generate, so it cannot inline a second run of the snippet
-    df.select(col("*"), inline(array(sandboxed(col(inputKey)).cast(outType))))
+    Op.generated(df, sandboxed(col(inputKey)).cast(outType))
   }
 }
 

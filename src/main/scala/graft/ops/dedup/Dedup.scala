@@ -274,8 +274,9 @@ final case class MinHashDeduplicateFilter(inputKey: String = "text",
     * earlier completed stages' files to ContextCleaner's eventual GC
     * path: bounded-scratch degrades for that wave, it does not break,
     * and a delta-scoped sweep there would re-open the concurrent-query
-    * deletion hazard lineage-scoping exists to close. R14Spec pins the
-    * map-stage-death case (nothing landed → reclamation is a no-op). */
+    * deletion hazard lineage-scoping exists to close. ShuffleCleanupSpec
+    * pins the map-stage-death case (nothing landed → reclamation is a
+    * no-op). */
   private[graft] def checkpointReclaimingOnFailure(idsDf: DataFrame,
       sc: org.apache.spark.SparkContext, created: Set[Int],
       cleanup: (org.apache.spark.SparkContext, Set[Int]) => Unit =

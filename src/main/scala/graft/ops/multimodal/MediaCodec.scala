@@ -6,7 +6,7 @@ import javax.imageio.ImageIO
 import javax.sound.sampled.{AudioFormat, AudioInputStream, AudioSystem, AudioFileFormat}
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.functions.{col, struct, udf}
 import org.apache.spark.sql.types._
 import graft.core.Op
 
@@ -20,8 +20,8 @@ import graft.core.Op
   * (`dataflow/operators/core_vision`, `core_speech`): binary column in,
   * typed metadata / transformed binary out. Each op below is one typed
   * UDF over the payload column, run on the executors, never on the
-  * driver; a cast gives its output struct the field names and types the
-  * op declares.
+  * driver, once per row (see `Op.generated`); a cast gives its output
+  * struct the field names and types the op declares.
   */
 object MediaCodec {
   // Must be set before any java.awt class initializes; BufferedImage and
@@ -183,9 +183,8 @@ final case class ImageDecoder(binKey: String = "payload",
     StructField("channels", IntegerType),
     StructField("pixel_sum", LongType), StructField("pixel_count", LongType)))
 
-  def apply(df: DataFrame): DataFrame =
-    df.withColumn(outputKey,
-      udf(MediaCodec.decodeImage _).apply(col(binKey)).cast(decodedType))
+  def apply(df: DataFrame): DataFrame = Op.generated(df, struct(
+    udf(MediaCodec.decodeImage _).apply(col(binKey)).cast(decodedType).as(outputKey)))
 }
 
 /** Real image resize: decode → deterministic nearest-neighbor downscale
@@ -201,8 +200,8 @@ final case class ImageResizer(binKey: String = "payload",
 
   def apply(df: DataFrame): DataFrame = {
     val side = maxSide
-    df.withColumn(outputKey,
-      udf((b: Array[Byte]) => MediaCodec.resizeNearestPng(b, side)).apply(col(binKey)))
+    Op.generated(df, struct(udf((b: Array[Byte]) =>
+      MediaCodec.resizeNearestPng(b, side)).apply(col(binKey)).as(outputKey)))
   }
 }
 
@@ -221,6 +220,6 @@ final case class WavMetadataEvaluator(binKey: String = "payload")
     StructField("bits", IntegerType), StructField("n_frames", LongType),
     StructField("duration_ms", DoubleType)))
 
-  def apply(df: DataFrame): DataFrame =
-    df.withColumn("audio_meta", udf(MediaCodec.wavMeta _).apply(col(binKey)).cast(metaType))
+  def apply(df: DataFrame): DataFrame = Op.generated(df, struct(
+    udf(MediaCodec.wavMeta _).apply(col(binKey)).cast(metaType).as("audio_meta")))
 }

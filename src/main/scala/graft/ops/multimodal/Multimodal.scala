@@ -48,9 +48,8 @@ final case class ImageDecodeDouble(binKey: String = "payload",
     StructField("width", IntegerType), StructField("height", IntegerType),
     StructField("channels", IntegerType)))
 
-  def apply(df: DataFrame): DataFrame =
-    df.withColumn(outputKey,
-      udf(ImageDecodeDouble.fakeDims _).apply(col(binKey)).cast(decodedType))
+  def apply(df: DataFrame): DataFrame = Op.generated(df, struct(
+    udf(ImageDecodeDouble.fakeDims _).apply(col(binKey)).cast(decodedType).as(outputKey)))
 }
 
 object ImageDecodeDouble {

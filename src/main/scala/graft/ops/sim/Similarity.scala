@@ -110,8 +110,8 @@ object Similarity {
     * as [[TopK.TopKAggregator]] — (score desc, id asc) — and top-k of a
     * union equals top-k of the union of per-part top-ks under a total
     * order, so the final result (and its oracle hash) is bit-identical
-    * to the un-reduced plan; R17Spec pins both the per-task bound and
-    * the equality. `neighbor_id` is cast to long here exactly as the
+    * to the un-reduced plan; SimilaritySpec pins both the per-task bound
+    * and the equality. `neighbor_id` is cast to long here exactly as the
     * aggregator's input encoder already did, and `query_id` passes
     * through untouched (its type is part of the output schema). The
     * `mapPartitions` is narrow — it runs at the probe stage's own
@@ -258,8 +258,8 @@ object Similarity {
     // the entire candidate stream (×1000 measured: 5.6 GB shuffle write
     // in the probe stage) and couldn't map-side-collapse cross-table
     // dups (they surface in different partitions) — is gone entirely.
-    // The invariant is the same one R9Spec pins for similarityJoin:
-    // bucket keys are namespaced "t:code", so __ba has `tables`
+    // The invariant is the same one SimilaritySpec pins for
+    // similarityJoin: bucket keys are namespaced "t:code", so __ba has `tables`
     // DISTINCT entries and "first shared bucket" is unique per pair.
     // The intersect check runs BEFORE the cosine: a tables-element
     // array intersect is cheaper than the 64-dim dot it skips on the
@@ -568,8 +568,8 @@ object Similarity {
     // EMIT-ONCE INVARIANT: "first shared bucket is unique per pair"
     // holds only because CosineLsh namespaces every key "t:code" by
     // table index, so a row's bucket array has tables DISTINCT entries
-    // (R9Spec pins per-row duplicate-freeness). If the key scheme ever
-    // dropped the namespace, two tables could yield the same key and a
+    // (SimilaritySpec pins per-row duplicate-freeness). If the key scheme
+    // ever dropped the namespace, two tables could yield the same key and a
     // pair would satisfy the first-shared-bucket check in BOTH copies —
     // duplicate (a,b) rows, with no dropDuplicates left downstream to
     // catch them.

@@ -203,10 +203,9 @@ final case class SparkSessionBackend(maxDistinct: Int = 100000,
     val tasks = swept.collect { case (q, None) =>
       new java.util.concurrent.Callable[(String, Boolean, String)] {
         def call(): (String, Boolean, String) =
-          // the sweep already tried (and failed) the fold for q —
-          // don't repeat its analysis in the pooled task
+          // the sweep already tried (and failed) the fold for q
           try SqlExecutor.hashedImpl(spark, q, timeoutSec,
-            tryFoldFirst = false, maxRows = maxHashRows) match {
+            maxHashRows) match {
             case Some(h) => (q, true, h)
             case None    => (q, false, null)
           } catch {

@@ -371,13 +371,6 @@ object SqlExecutor {
     }
   }
 
-  /** Fold check that NEVER throws: a fold-internal error (unexpected
-    * plan/type shape) must fall through to real execution, not fail the
-    * statement — only parse/analysis errors are definitive. */
-  private def tryFold(spark: SparkSession, sql: String): Option[Seq[String]] =
-    try foldedRows(spark, sql)
-    catch { case _: Throwable => None }
-
   /** Three-way fast-path verdict for [[SparkSessionBackend]]'s serial
     * sweep: Some(Some(hash)) = constant-folded result, Some(None) =
     * definitive failure (non-query statement or parse/analysis error —
@@ -385,7 +378,7 @@ object SqlExecutor {
     * execution. Runs under the statement timeout: a pathological
     * constant expression (e.g. repeat('x', 2e9)) must yield a timeout
     * verdict, not stall the sweep. */
-  private[text2sql] def foldedHash(spark: SparkSession, sql: String,
+  private[graft] def foldedHash(spark: SparkSession, sql: String,
       timeoutSec: Int): Option[Option[String]] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
@@ -416,14 +409,6 @@ object SqlExecutor {
     }
   }
 
-  /** Timed result fingerprint for execution-compare classification
-    * (`sql_execution_classifier.py:15-243`): Some(sha256 of the sorted
-    * canonical row encoding) or None on error/timeout. sha256 — a 32-bit
-    * hash would false-match pairs at corpus scale. Rejects non-query
-    * statements without executing them (spark.sql runs commands eagerly). */
-  def hashed(spark: SparkSession, sql: String, timeoutSec: Int): Option[String] =
-    hashedImpl(spark, sql, timeoutSec, tryFoldFirst = true)
-
   /** Result-row ceiling for [[hashedImpl]]'s driver collect. The
     * fingerprint needs every result row on the driver (sorted canonical
     * encoding), and the statements are DATA-DEPENDENT SQL TEXT — one
@@ -442,46 +427,44 @@ object SqlExecutor {
     * catches it PER STATEMENT and emits the refused verdict
     * `(__ok = true, __hash = null)` (see the [[SqlBackend]] tri-state
     * contract), so one over-cap statement in a batch degrades only
-    * itself; direct callers of [[hashed]] still see the typed throw. */
+    * itself; direct callers of [[hashedImpl]] still see the typed throw. */
   final class ResultCapExceededException(msg: String)
     extends RuntimeException(msg)
 
-  /** `tryFoldFirst = false` skips the fold: [[SparkSessionBackend]]'s
-    * serial sweep has already tried it, and repeating the analysis in the
-    * pooled task would triple per-statement driver work. */
+  /** Timed result fingerprint for execution-compare classification
+    * (`sql_execution_classifier.py:15-243`): Some(sha256 of the sorted
+    * canonical row encoding) or None on error/timeout. sha256 — a 32-bit
+    * hash would false-match pairs at corpus scale. Rejects non-query
+    * statements without executing them (spark.sql runs commands eagerly).
+    * Runs the statement: [[SparkSessionBackend]] calls it only for what
+    * [[foldedHash]] could not fold. */
   private[graft] def hashedImpl(spark: SparkSession, sql: String,
-      timeoutSec: Int, tryFoldFirst: Boolean,
-      maxRows: Int = MaxHashRows): Option[String] = {
+      timeoutSec: Int, maxRows: Int = MaxHashRows): Option[String] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     implicit val ec: scala.concurrent.ExecutionContext = timedEc
     if (!parsesAsQuery(spark, sql)) return None
     try {
       Await.result(Future {
-        val folded = if (tryFoldFirst) tryFold(spark, sql) else None
-        folded match {
-          case Some(rows) => Some(SqlBackend.resultSetHash(rows))
-          case None =>
-            try {
-              // limit(maxRows + 1): under the cap this is the full result
-              // set (LIMIT over a superset count returns every row), so
-              // the hash is unchanged; over the cap it bounds what ever
-              // reaches the driver to one row past the limit
-              val rows = spark.sql(sql).limit(maxRows + 1).collect()
-              if (rows.length > maxRows)
-                throw new ResultCapExceededException(
-                  s"statement result exceeds $maxRows rows — refusing to " +
-                    "fingerprint on the driver; raise maxRows or compare " +
-                    "on a bounded projection")
-              // U+0001 cell separator — the same one JdbcSqlBackend.run
-              // appends, so both backends emit one canonical row encoding
-              // and cross-backend hash comparison is meaningful.
-              Some(SqlBackend.resultSetHash(rows.toSeq.map(r =>
-                r.toSeq.map(SqlBackend.cell).mkString(SqlBackend.CellSep))))
-            } catch {
-              case e: ResultCapExceededException => throw e
-              case _: Throwable => None
-            }
+        try {
+          // limit(maxRows + 1): under the cap this is the full result
+          // set (LIMIT over a superset count returns every row), so
+          // the hash is unchanged; over the cap it bounds what ever
+          // reaches the driver to one row past the limit
+          val rows = spark.sql(sql).limit(maxRows + 1).collect()
+          if (rows.length > maxRows)
+            throw new ResultCapExceededException(
+              s"statement result exceeds $maxRows rows — refusing to " +
+                "fingerprint on the driver; raise maxRows or compare " +
+                "on a bounded projection")
+          // U+0001 cell separator — the same one JdbcSqlBackend.run
+          // appends, so both backends emit one canonical row encoding
+          // and cross-backend hash comparison is meaningful.
+          Some(SqlBackend.resultSetHash(rows.toSeq.map(r =>
+            r.toSeq.map(SqlBackend.cell).mkString(SqlBackend.CellSep))))
+        } catch {
+          case e: ResultCapExceededException => throw e
+          case _: Throwable => None
         }
       }, timeoutSec.seconds)
     } catch {

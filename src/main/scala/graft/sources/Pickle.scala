@@ -179,7 +179,6 @@ object Pickle {
     }
     private def u16le(): Int = u8() | (u8() << 8)
     private def i32le(): Int = u8() | (u8() << 8) | (u8() << 16) | (u8() << 24)
-    private def u32le(): Long = i32le().toLong & 0xffffffffL
     private def u64le(): Long = {
       var v = 0L
       var i = 0

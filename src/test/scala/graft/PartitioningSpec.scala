@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Repartition, RepartitionByExpression}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Partitioning
 import graft.ops.sim.Similarity
 
@@ -11,35 +10,7 @@ import graft.ops.sim.Similarity
   * it: the width probe never executes anything, a narrow input is spread
   * to session width only when worth it, and results never depend on
   * width. */
-class PartitioningSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-
-  /** Jobs started inside `body`, attributed via an exclusive job group
-    * (the status store is fed asynchronously, so poll until stable). */
-  private def jobsDuring(group: String)(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try body finally sc.clearJobGroup()
-    var last = -1
-    var cur = sc.statusTracker.getJobIdsForGroup(group).length
-    var spins = 0
-    while (cur != last && spins < 20) {
-      last = cur; Thread.sleep(200)
-      cur = sc.statusTracker.getJobIdsForGroup(group).length
-      spins += 1
-    }
-    cur
-  }
-
-  /** Deterministic synthetic vectors: 64 dims of sin((id+1) * dim). The
-    * +1 keeps id 0 off the all-zero vector, whose NaN cosines would rank
-    * in arrival order and make two correct plans disagree. */
-  private def vecs(n: Int): DataFrame = {
-    val dims = (1 to 64).map(d => sin((col("id") + 1) * d))
-    spark.range(n).select(col("id").as("vec_id"),
-      array(dims: _*).as("embedding"))
-  }
-
+class PartitioningSpec extends SparkSuite {
   private def plan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString.toLowerCase
 

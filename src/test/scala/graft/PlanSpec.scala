@@ -1,16 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Storage
 
 /** Plan-quality assertions: the 100 TB story is only real if the plans
   * hold — pruned scans, pushed filters, broadcast dims, bucketed joins
   * without exchanges.
   */
-class PlanSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-  val sf = "/root/testdata/sf0.001"
+class PlanSpec extends SparkSuite {
 
   private def physicalPlan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
@@ -125,5 +122,17 @@ class PlanSpec extends AnyFunSuite {
       s2.sql("DROP TABLE IF EXISTS li_b")
       s2.sql("DROP TABLE IF EXISTS o_b")
     }
+  }
+
+  test("token chunker tokenizes each document exactly once in the plan") {
+    val d = core.Storage.table(spark, sf, "documents")
+    val plan = graft.ops.gen.ChunkSplitter("text", "doc_id",
+      mode = "token", chunkSize = 20)(d)
+      .queryExecution.optimizedPlan.toString
+    val splits = "split\\(".r.findAllIn(plan).length
+    // one split() for the materialized __ws column - an inner posexplode
+    // used to infer a size()>0 filter that re-inlined the chunk transform
+    // (and its tokenize) below the projections
+    assert(splits == 1, s"expected exactly 1 split() in plan, found $splits:\n$plan")
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.core.Storage
@@ -13,11 +12,9 @@ import graft.ops.refine._
   * invariants. Uses ScalaCheck generators directly (fixed seeds →
   * reproducible samples) inside scalatest.
   */
-class PropertySpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+class PropertySpec extends SparkSuite {
   import spark.implicits._
 
-  val sf = "/root/testdata/sf0.001"
   private val textGen: Gen[String] = Gen.listOf(Gen.oneOf(
     "the", "cat", "sat", "on", "a", "mat", "42", "hello!", "  ", "…", "{x}"
   )).map(_.mkString(" "))

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-6 gate: LSH/IVF recall quantified as DATA, not comments.
   *
@@ -17,8 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * a pair at cosine c collides in one table with p^bits where
   * p = 1 - arccos(c)/pi, so recall = 1 - (1 - p^8)^4 ~= 0.89 at c = 0.95.
   */
-class RecallSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+class RecallSpec extends SparkSuite {
   import spark.implicits._
 
   /** `n` seeded unit vectors of dimension `dim`. */

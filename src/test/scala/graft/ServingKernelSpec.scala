@@ -4,7 +4,6 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.gen.{ChunkSplitter, ChunkedPromptedGenerator}
 import graft.serving.{LLMMap, MockServing, ServingClient, ServingScorer}
 
@@ -45,8 +44,7 @@ object RecordingServing {
 /** [[LLMMap]]'s kernel and the ops that serve a list of texts per row:
   * the output-count check, the per-row list split, and the one-row-is-
   * one-document rules of semantic chunking and chunked prompting. */
-class ServingKernelSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+class ServingKernelSpec extends SparkSuite {
   import SparkTestSession.spark.implicits._
 
   private val mock = MockServing()
@@ -195,5 +193,14 @@ class ServingKernelSpec extends AnyFunSuite {
       3L -> expectedGen(words(2, "b"))))
     val calls = RecordingServing.generateCalls.toArray.map(_.asInstanceOf[Int]).toSeq
     assert(calls.sum == 3 + 150 + 1 && calls.forall(_ <= LLMMap.DefaultBatch), s"generate calls $calls")
+  }
+
+  test("chunker drops empty-document null rows and keeps real chunks") {
+    import spark.implicits._
+    val df = Seq((1L, "a b c d"), (2L, ""), (3L, "   ")).toDF("doc_id", "text")
+    val out = graft.ops.gen.ChunkSplitter("text", "doc_id",
+      mode = "sentence")(df)
+    val got = out.as[(Long, Int, String)].collect().toSet
+    assert(got == Set((1L, 0, "a b c d")))
   }
 }

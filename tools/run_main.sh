@@ -1,8 +1,9 @@
 #!/bin/bash
-# Run an arbitrary graft main class in a fresh standalone JVM with the
-# same flags as standalone_bench.sh (8 GiB ParallelGC by default) —
-# keeps ALL stdout (breadcrumb JSON lines included) and routes stderr
-# to a file. Usage:
+# Run an arbitrary graft main class in a fresh standalone JVM (8 GiB
+# ParallelGC by default, the bench's flags) — keeps ALL stdout
+# (breadcrumb JSON lines included) and routes stderr to a file. The one
+# JVM launcher: standalone_bench.sh and run_query_debug.sh call it.
+# Usage:
 #   tools/run_main.sh <mainClass> [args...]
 # Env: SPARK_DRIVER_MEM, SPARK_GRAFT_CPUS, SPARK_GRAFT_GC,
 #      SPARK_GRAFT_JAVA_OPTS, SPARK_GRAFT_SF_DIR (read by the mains),

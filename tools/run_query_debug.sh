@@ -6,21 +6,6 @@ set -u
 cd "$(dirname "$0")/.."
 Q="$1"
 ERRF="${2:-/tmp/${Q}_debug.err}"
-CP="target/scala-2.13/classes:/opt/spark/jars/*"
-MEM="${SPARK_DRIVER_MEM:-8g}"
-GC="${SPARK_GRAFT_GC:-ParallelGC}"
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-SPARK_GRAFT_ONLY="$Q" SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
-java $ADD_OPENS -Xmx"$MEM" -Xms"$MEM" -XX:ReservedCodeCacheSize=512m \
-  "-XX:+Use$GC" -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  ${SPARK_GRAFT_JAVA_OPTS:-} \
-  -cp "$CP" graft.Bench 2> "$ERRF" \
+SPARK_GRAFT_ONLY="$Q" RUN_MAIN_ERRF="$ERRF" tools/run_main.sh graft.Bench \
   | grep -E '"metric"'
 echo "stderr -> $ERRF" >&2

@@ -4,32 +4,13 @@
 # mode), so in-session numbers can be validated against a clean-room
 # measurement. Usage:
 #   tools/standalone_bench.sh q1_pricing dedup_minhash ...
-# Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-#      SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_GC (default ParallelGC),
-#      SPARK_GRAFT_JAVA_OPTS (extra JVM flags, e.g. -Dspark.* conf probes).
+# Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), plus
+#      run_main.sh's JVM settings (SPARK_GRAFT_CPUS, SPARK_GRAFT_GC, ...).
 set -u
 cd "$(dirname "$0")/.."
-CP="target/scala-2.13/classes:/opt/spark/jars/*"
-MEM="${SPARK_DRIVER_MEM:-8g}"
-GC="${SPARK_GRAFT_GC:-ParallelGC}"
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
 for q in "$@"; do
   # keep query_error lines too: a failed query otherwise surfaces only as
   # an empty all_queries map, silently eating the reason.
-  # NB: the env-prefix line must be IMMEDIATELY followed by the java line
-  # (backslash continuation) — a comment between them silently turns the
-  # prefix into a no-op shell assignment and java runs with defaults.
-  SPARK_GRAFT_ONLY="$q" SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
-  java $ADD_OPENS -Xmx"$MEM" -Xms"$MEM" -XX:ReservedCodeCacheSize=512m \
-    "-XX:+Use$GC" -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-    ${SPARK_GRAFT_JAVA_OPTS:-} \
-    -cp "$CP" graft.Bench 2>/dev/null \
+  SPARK_GRAFT_ONLY="$q" RUN_MAIN_ERRF=/dev/null tools/run_main.sh graft.Bench \
     | grep -E '"metric":"(all_queries|query_error)"'
 done
