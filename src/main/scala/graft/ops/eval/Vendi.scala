@@ -29,8 +29,7 @@ object Vendi {
     * divide by the product of the square roots, so the gram matrix a
     * DuckDB left-fold oracle replays is exactly the matrix the Jacobi
     * sweep consumes (the eigen spectrum itself stays non-replayable;
-    * CorpusEvaluatorsSpec pins Jacobi against an independent
-    * eigensolver). */
+    * R13Spec pins Jacobi against an independent eigensolver). */
   private[graft] def kernel(vecs: Array[Array[Double]]): Array[Array[Double]] = {
     val n = vecs.length
     val norms = vecs.map(v => math.sqrt(v.map(x => x * x).sum))

@@ -258,8 +258,8 @@ object Similarity {
     // the entire candidate stream (×1000 measured: 5.6 GB shuffle write
     // in the probe stage) and couldn't map-side-collapse cross-table
     // dups (they surface in different partitions) — is gone entirely.
-    // The invariant is the same one SimilaritySpec pins for
-    // similarityJoin: bucket keys are namespaced "t:code", so __ba has `tables`
+    // The invariant is the same one R9Spec pins for similarityJoin:
+    // bucket keys are namespaced "t:code", so __ba has `tables`
     // DISTINCT entries and "first shared bucket" is unique per pair.
     // The intersect check runs BEFORE the cosine: a tables-element
     // array intersect is cheaper than the 64-dim dot it skips on the
@@ -568,8 +568,8 @@ object Similarity {
     // EMIT-ONCE INVARIANT: "first shared bucket is unique per pair"
     // holds only because CosineLsh namespaces every key "t:code" by
     // table index, so a row's bucket array has tables DISTINCT entries
-    // (SimilaritySpec pins per-row duplicate-freeness). If the key scheme
-    // ever dropped the namespace, two tables could yield the same key and a
+    // (R9Spec pins per-row duplicate-freeness). If the key scheme ever
+    // dropped the namespace, two tables could yield the same key and a
     // pair would satisfy the first-shared-bucket check in BOTH copies —
     // duplicate (a,b) rows, with no dropDuplicates left downstream to
     // catch them.

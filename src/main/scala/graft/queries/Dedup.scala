@@ -122,7 +122,7 @@ object Dedup {
     // working table (DuckDB permits the second recursive reference).
     // Distances use sqlSqDist's ascending left-to-right fold =
     // Dedup.sqDist's loop, so argmax comparisons are bit-identical.
-    // Validity precondition, DedupSpec-pinned: at verify scale every
+    // Validity precondition, R12Spec-pinned: at verify scale every
     // range partition holds ≤ k rows (500 ≤ 64×100 at sf0.01), so the
     // operator's distributed pre-selection passes ALL rows to the
     // driver greedy and the full-corpus replay is exact.

@@ -259,7 +259,7 @@ object Eval {
     // the Jacobi sweep consumes is not — this query computes it with
     // the codegen'd cosine expression over the same ordered capped
     // sample score() reads, and DuckDB replays every entry bit for bit
-    // (Vendi.kernel documents the op-order identity; CorpusEvaluatorsSpec pins
+    // (Vendi.kernel documents the op-order identity; R13Spec pins
     // kernel == this query's values and Jacobi == an independent
     // eigensolver, closing the chain data → matrix → spectrum).
     // The pair join is definitionally dense — O(cap²) = ≤ 128² rows,

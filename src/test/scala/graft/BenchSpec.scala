@@ -1,176 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Encoders, SparkSession}
-import org.apache.spark.sql.functions._
 
-/** The bench harness: failure-honest timing (a throwing query is an
-  * error, never a time), its pass and re-measure policy, and the cpu and
-  * co-load signals it records next to each wall time. */
+/** The bench harness's steal-time signal: the steal field of the
+  * aggregate `/proc/stat` cpu line, counted inside busy time. */
 class BenchSpec extends SparkSuite {
-
-  test("bench records a deliberately-broken query as an error, not a time") {
-    val queries = Map[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame](
-      "ok" -> ((s, _) => s.range(10).toDF("id")),
-      "boom" -> ((_, _) => throw new IllegalStateException("deliberately broken")),
-      "lazy_boom" -> ((s, _) =>
-        s.range(10).toDF("id").filter(
-          udf((_: Long) => throw new IllegalStateException("fails at execution")).apply(col("id"))))
-    )
-    val out = Bench.runQueries(spark, sf, queries.toSeq).toMap
-    assert(out("ok").error.isEmpty && out("ok").seconds >= 0)
-    assert(out("boom").error.exists(_.contains("deliberately broken")))
-    // a query that only fails when the plan RUNS must also be caught
-    assert(out("lazy_boom").error.isDefined)
-    val errors = out.count(_._2.error.isDefined)
-    assert(errors == 2)
-  }
-
-  test("bench runs every pass (warmup + measured), per the passes knob") {
-    // a query with a side-effecting counter: all passes must execute
-    BenchSpec.passCounter.set(0)
-    val queries = Map[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame](
-      "counted" -> ((s, _) => { BenchSpec.passCounter.incrementAndGet(); s.range(5).toDF("id") }))
-    val out = Bench.runQueries(spark, sf, queries.toSeq).toMap
-    assert(out("counted").error.isEmpty)
-    // default = 3 (1 discarded warmup + min of 2 measured), plus any
-    // legitimate noise re-measures the harness performed. For this
-    // microsecond query a retry additionally requires co-load to push
-    // BOTH measured passes past the 100 ms floor (Bench's retry gate
-    // needs times.min >= 0.1 s) — rare, but it did happen in CI, and
-    // asserting a bare 3 made this test fail exactly when the retry
-    // logic was doing its job
-    assert(BenchSpec.passCounter.get() == 3 + out("counted").retried)
-    // the two measured passes yield a max/min noise ratio ≥ 1
-    assert(out("counted").spread >= 1.0)
-    BenchSpec.passCounter.set(0)
-    Bench.runQueries(spark, sf, queries.toSeq, passes = 2, isolate = false)
-    assert(BenchSpec.passCounter.get() == 2)
-  }
-
-  test("bench re-measures a query whose passes disagree >1.3x and keeps the min") {
-    // Simulates a one-off co-load spike: the first measured pass is 4x
-    // slower than every later pass. The harness must (a) retry, (b)
-    // report the reproducible min, (c) certify the two best passes.
-    BenchSpec.passCounter.set(0)
-    val queries = Map[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame](
-      "noisy" -> ((s, _) => {
-        val n = BenchSpec.passCounter.incrementAndGet()
-        Thread.sleep(n match { case 1 => 0L; case 2 => 600L; case _ => 150L })
-        s.range(5).toDF("id")
-      }))
-    val out = Bench.runQueries(spark, sf, queries.toSeq).toMap
-    val r = out("noisy")
-    assert(r.error.isEmpty)
-    assert(r.retried >= 1, "600ms vs 150ms disagreement must trigger a retry")
-    assert(r.seconds < 0.5, "reported figure is the reproducible min, not the spike")
-    assert(r.retried <= 2, "retries are bounded")
-  }
-
-  test("bench cpuRatio separates stolen wall time from burned cpu") {
-    // A query whose wall is mostly time this JVM does NOT run (sleep =
-    // the exact shape of externally-stolen time: wall advances, process
-    // cpu doesn't) must report cpu/wall well under 1; a query that
-    // burns cores must report well over 1. This is the machine-readable
-    // signal the recorded artifact lacked for three rounds: an inflated
-    // wall with a proportionally fallen cpuRatio is co-load, not code.
-    val sleeper = (s: SparkSession, _: String) => {
-      Thread.sleep(1000); s.range(1).toDF()
-    }
-    // The spinning runs as the query itself: 8 partitions spinning
-    // 400 ms each on the executor's task threads. Freshly started
-    // threads begin on their parent's cpu, and a 4-vcpu VM was seen to
-    // keep 8 of them there, the other vcpus idle, for over a second after
-    // an idle spell; pooled task threads wake on the cpus they last ran on.
-    val spinner = (s: SparkSession, _: String) =>
-      s.range(0, 8, 1, 8).mapPartitions { _ =>
-        val deadline = System.nanoTime() + 400L * 1000 * 1000
-        var x = 0L
-        while (System.nanoTime() < deadline) { x += 1 }
-        Iterator.single(x) // the count keeps the spin live
-      }(Encoders.scalaLong).toDF()
-    val out = Bench.runQueries(spark, sf,
-      Seq("sleepy" -> sleeper, "spinny" -> spinner),
-      passes = 3, isolate = false).toMap
-    val slept = out("sleepy")
-    val spun = out("spinny")
-    assert(slept.error.isEmpty && spun.error.isEmpty)
-    assert(slept.cpuRatio >= 0 && spun.cpuRatio >= 0, "cpu clock unavailable")
-    // 1 s asleep + a trivial count: background JVM threads (JIT, GC,
-    // Spark housekeeping) accrue some cpu, but well under wall — while
-    // genuinely-working queries on this 32-way box run far above it.
-    // The relative contrast is the pinned contract; the absolute bound
-    // is deliberately generous to background-compile churn.
-    assert(slept.cpuRatio < 1.0, s"sleeper cpuRatio=${slept.cpuRatio}")
-    // every task slot spinning: ≈ one cpu-second per slot per wall-second
-    assert(spun.cpuRatio > 2.0, s"spinner cpuRatio=${spun.cpuRatio}")
-    assert(spun.cpuRatio > 3 * slept.cpuRatio,
-      s"no contrast: spun=${spun.cpuRatio} slept=${slept.cpuRatio}")
-  }
-
-  test("busyJiffies parses the aggregate cpu line and rejects others") {
-    // user nice system idle iowait irq softirq steal → busy excludes
-    // idle(40) and iowait(50)
-    assert(Bench.busyJiffies("cpu  10 20 30 40 50 60 70 80 90 100")
-      .contains(10L + 20 + 30 + 60 + 70 + 80))
-    // per-core lines, malformed lines, short lines: all rejected
-    assert(Bench.busyJiffies("cpu0 10 20 30 40 50 60 70 80").isEmpty)
-    assert(Bench.busyJiffies("intr 12345").isEmpty)
-    assert(Bench.busyJiffies("cpu 10 20 xyz 40 50 60 70 80").isEmpty)
-    assert(Bench.busyJiffies("cpu 10 20").isEmpty)
-    // the steal-less 7-field boundary: must be None, never a throw (a
-    // swallowed exception would silently disable the co-load gate)
-    assert(Bench.busyJiffies("cpu 10 20 30 40 50 60 70").isEmpty)
-    assert(Bench.busyJiffies("cpu 10 20 30 40 50 60 70 80").contains(
-      10L + 20 + 30 + 60 + 70 + 80))
-  }
-
-  test("busyJiffies reads this machine's real /proc/stat and is monotone") {
-    def readBusy(): Long = {
-      val src = scala.io.Source.fromFile("/proc/stat")
-      try Bench.busyJiffies(src.getLines().next()).get finally src.close()
-    }
-    val b0 = readBusy()
-    // burn a little CPU so busy time must advance even on an idle box
-    var x = 0L
-    val t0 = System.nanoTime()
-    while (System.nanoTime() - t0 < 200000000L) x += 1
-    val b1 = readBusy()
-    assert(x > 0)
-    assert(b1 > b0, s"busy jiffies did not advance: $b0 -> $b1")
-  }
-
-  test("externalCores attributes machine CPU minus this JVM over wall") {
-    // the r11 hole, in numbers: a 60 s bench window on a 32-core box
-    // where OTHER processes burned 29 cores — busy 35 cores total
-    // (35*60*100 jiffies), this JVM 6 cores (360 cpu-s)
-    val ext = Bench.externalCores(
-      busyDeltaJiffies = 35L * 60 * 100, jvmCpuSec = 6.0 * 60, wallSec = 60.0)
-    assert(math.abs(ext - 29.0) < 1e-9)
-    assert(ext > Bench.MaxExternalCores) // r11's co-load WOULD have flagged
-    // a quiet machine: 0.3 external cores stays under the gate
-    val quiet = Bench.externalCores(
-      busyDeltaJiffies = (6.3 * 60 * 100).toLong, jvmCpuSec = 6.0 * 60,
-      wallSec = 60.0)
-    assert(math.abs(quiet - 0.3) < 1e-6)
-    assert(quiet < Bench.MaxExternalCores)
-    // clock skew between the two reads can make jvmCpu exceed machine
-    // busy by a hair — clamp at zero, never negative
-    assert(Bench.externalCores(100, jvmCpuSec = 2.0, wallSec = 1.0) == 0.0)
-    assert(Bench.externalCores(100, jvmCpuSec = 0.5, wallSec = 0.0) == 0.0)
-  }
-
-  test("jnum formats with Locale.ROOT regardless of the default locale") {
-    val prev = java.util.Locale.getDefault
-    try {
-      java.util.Locale.setDefault(java.util.Locale.GERMANY)
-      assert(Bench.jnum(0.4, 2) == "0.40")
-      assert(Bench.jnum(58.893, 3) == "58.893")
-      // the trap jnum exists to avoid: the f interpolator is
-      // locale-sensitive, and a comma is invalid JSON here
-      assert(f"${0.4}%.2f" == "0,40")
-    } finally java.util.Locale.setDefault(prev)
-  }
-
   test("stealJiffies parses field 8 of the aggregate cpu line only") {
     // user nice system idle iowait irq softirq STEAL guest guest_nice
     assert(Bench.stealJiffies("cpu  10 20 30 40 50 60 70 80 90 100")
@@ -190,8 +23,4 @@ class BenchSpec extends SparkSuite {
     assert(steal == 80L && busy == 100 + 2 + 300 + 6 + 7 + 80,
       s"steal $steal must be one of busy $busy's addends")
   }
-}
-
-object BenchSpec {
-  val passCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 }

@@ -7,8 +7,6 @@ import graft.ops.refine._
 import graft.ops.dedup._
 
 class CoreSpec extends SparkSuite {
-  import spark.implicits._
-
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
@@ -90,60 +88,6 @@ class CoreSpec extends SparkSuite {
 
   test("oracleSql keys are a subset of queries keys") {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
-  }
-
-  test("registry threads serving params into LLM-backed factories") {
-    Ops.registerAll()
-    val op = graft.core.Registry.get("prompted_generator",
-      Map("input_key" -> "text", "output_key" -> "gen", "serving" -> "mock"))
-    val out = op(Seq((1L, "hi")).toDF("doc_id", "text"))
-      .select("gen").as[String].head()
-    assert(out == "echo[]:hi")
-    val scored = graft.core.Registry.get("fineweb_edu_filter",
-      Map("input_key" -> "text", "min_score" -> "0.0"))
-    assert(scored(Seq((1L, "hello")).toDF("doc_id", "text")).count() == 1)
-  }
-
-  test("pipeline toDot renders key-flow edges from producers to consumers") {
-    val p = graft.core.Pipeline.of(
-      graft.ops.refine.LowercaseRefiner("text"),
-      graft.ops.text.LanguageIdEvaluator("text", "lang_pred"),
-      graft.ops.filter.LanguageFilter("lang_pred", Seq("en")))
-    val dot = p.toDot(Seq("doc_id", "text"))
-    assert(dot.startsWith("digraph pipeline {"))
-    // lang_pred flows from its producer (step 1) into the filter (step 2)
-    assert(dot.contains("op1 -> op2 [label=\"lang_pred\"]"))
-    // text is source-produced (refiner has no outputKeys of its own)
-    assert(dot.contains("source -> op0 [label=\"text\"]"))
-    assert(dot.contains("(step=2)"))
-    // a pipeline with a missing key still fails fast through toDot
-    intercept[IllegalArgumentException] {
-      graft.core.Pipeline.of(
-        graft.ops.filter.LanguageFilter("nope", Seq("en"))).toDot(Seq("text"))
-    }
-  }
-
-  test("pipeline toDot golden file for a 3-op pipeline") {
-    // full-text golden (draw_graph parity, `dataflow/pipeline/Pipeline.py:252`):
-    // any change to the DOT shape must be a conscious diff here
-    val p = graft.core.Pipeline.of(
-      graft.ops.refine.LowercaseRefiner("text"),
-      graft.ops.text.LanguageIdEvaluator("text", "lang_pred"),
-      graft.ops.filter.LanguageFilter("lang_pred", Seq("en")))
-    val expected =
-      """digraph pipeline {
-        |  rankdir=LR;
-        |  node [shape=box];
-        |  source [label="source", shape=oval];
-        |  op0 [label="lowercase_refiner\n<LowercaseRefiner>\n(step=0)"];
-        |  op1 [label="language_id_evaluator\n<LanguageIdEvaluator>\n(step=1)"];
-        |  op2 [label="language_filter\n<LanguageFilter>\n(step=2)"];
-        |  source -> op0 [label="text"];
-        |  source -> op1 [label="text"];
-        |  op1 -> op2 [label="lang_pred"];
-        |}
-        |""".stripMargin
-    assert(p.toDot(Seq("doc_id", "text")) == expected)
   }
 
   test("query families are disjoint and together hold every query") {

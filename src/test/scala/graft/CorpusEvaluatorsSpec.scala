@@ -1,11 +1,8 @@
 package graft
 
 import graft.ops.eval.CorpusEvaluators
-import org.apache.spark.sql.functions._
 
-/** Corpus evaluators (`graft.ops.eval`): null and degenerate-input
-  * semantics of the corpus-IDF evaluators, and the Vendi kernel and
-  * eigensolver behind `agg_vendi`. */
+/** Null and degenerate-input semantics of the corpus-IDF evaluators. */
 class CorpusEvaluatorsSpec extends SparkSuite {
   import spark.implicits._
 
@@ -43,55 +40,5 @@ class CorpusEvaluatorsSpec extends SparkSuite {
     val got2 = CorpusEvaluators.ciderUnigram(nullRef.toDF("id", "pred", "ref"),
       "pred", "ref", "id").as[(Long, Double)].collect().toMap
     assert(got2 == reference(nullRef))
-  }
-
-  test("Vendi.kernel is bit-identical to the agg_vendi_gram query's matrix") {
-    val dir = "/root/testdata/sf0.001"
-    // same ordered capped sample on both paths
-    val sm = spark.read.parquet(s"$dir/embeddings.parquet").orderBy("vec_id")
-    val vecs = sm.select(col("embedding").cast("array<double>")).limit(128)
-      .collect().map(_.getSeq[Double](0).toArray)
-    val k = graft.ops.eval.Vendi.kernel(vecs)
-    val ids = sm.select("vec_id").limit(128).collect().map(_.getLong(0))
-    val idx = ids.zipWithIndex.toMap
-    val gram = SparkEntry.queries("agg_vendi_gram")(spark, dir).collect()
-    assert(gram.length == ids.length * (ids.length + 1) / 2)
-    gram.foreach { r =>
-      val (i, j) = (idx(r.getLong(0)), idx(r.getLong(1)))
-      val kij = r.getDouble(2)
-      assert(kij == k(i)(j), s"kernel mismatch at ($i,$j): $kij vs ${k(i)(j)}")
-    }
-  }
-
-  test("Jacobi eigenvalues match an independent power-iteration eigensolver") {
-    // deterministic pseudo-random PSD gram matrix (rank ≤ dim)
-    val rng = new scala.util.Random(13L)
-    val vecs = Array.fill(8)(Array.fill(5)(rng.nextDouble() - 0.5))
-    val m = graft.ops.eval.Vendi.kernel(vecs)
-    val jac = graft.ops.eval.Vendi.jacobiEigenvalues(m).sorted
-    // naive: power iteration + deflation (written independently of the
-    // Jacobi sweep; valid for symmetric PSD input)
-    def naiveEig(m0: Array[Array[Double]]): Array[Double] = {
-      val n = m0.length
-      val a = m0.map(_.clone())
-      val out = Array.ofDim[Double](n)
-      for (e <- 0 until n) {
-        var v = Array.tabulate(n)(i => 1.0 / math.sqrt(n.toDouble) + i * 1e-3)
-        var lam = 0.0
-        for (_ <- 0 until 3000) {
-          val w = Array.tabulate(n)(i => (0 until n).map(j => a(i)(j) * v(j)).sum)
-          val norm = math.sqrt(w.map(x => x * x).sum)
-          if (norm > 1e-14) v = w.map(_ / norm)
-          lam = (0 until n).map(i => (0 until n).map(j => v(i) * a(i)(j) * v(j)).sum).sum
-        }
-        out(e) = lam
-        for (i <- 0 until n; j <- 0 until n) a(i)(j) -= lam * v(i) * v(j)
-      }
-      out
-    }
-    val ref = naiveEig(m).sorted
-    jac.zip(ref).foreach { case (a, b) =>
-      assert(math.abs(a - b) < 1e-7, s"eig mismatch: $a vs $b")
-    }
   }
 }

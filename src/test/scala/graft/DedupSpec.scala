@@ -1,16 +1,12 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
 import graft.ops.dedup.{Dedup, MinHashDeduplicateFilter, SemDeduplicateFilter,
   SimHashDeduplicateFilter}
-import graft.core.Storage
-import graft.ops.dedup.KCenterGreedyFilter
 
 /** Dedup (`graft.ops.dedup`): the shared witness walk and identical-set
-  * collapse in [[Dedup]], the MinHash, SimHash and semantic filters
-  * built on them, MinHash's band waves and scratch budget, and k-center
-  * selection.
+  * collapse in [[Dedup]], and the MinHash, SimHash and semantic filters
+  * built on them.
   *
   * Walk invariants pinned here:
   *  1. Small buckets (≤ cap): j drops iff SOME earlier i in a shared
@@ -272,401 +268,5 @@ class DedupSpec extends SparkSuite {
         .select("vec_id").as[Long].collect().sorted.toSeq
       assert(kept == Seq(5L, 5L, 7L), s"mode $mode kept $kept")
     }
-  }
-
-  /** A cluster of near-duplicates that are NOT identical: member i drops
-    * token i of a shared base text, so every pairwise Jaccard is high but
-    * every shingle set is distinct — the identical-set collapse fast path
-    * never fires and all pair work goes through the band join. */
-  private def nearDupCluster(n: Int, baseTokens: Int = 80): Seq[(Long, String)] = {
-    val base = (0 until baseTokens).map(t => s"tok$t")
-    (0L until n.toLong).map { i =>
-      val drop = (i % baseTokens).toInt
-      (i, base.zipWithIndex.collect { case (w, p) if p != drop => w }.mkString(" "))
-    }
-  }
-
-  private def uniques(from: Long, n: Int): Seq[(Long, String)] =
-    (from until from + n).map(i =>
-      (i, s"unique document $i about ${i * 31} and ${i * 7} and ${i * 13}"))
-
-  /** Reference keep-first pairwise semantics over the SAME shingle kernel:
-    * j is dropped iff some i < j has exact Jaccard ≥ threshold. */
-  private def brutePairwiseDrops(rows: Seq[(Long, String)],
-      ngram: Int, threshold: Double): Set[Long] = {
-    val sh = rows.map { case (id, text) =>
-      id -> graft.functions.kernels.shingleHashes(
-        text.split("\\s+").toSeq, ngram)
-    }.sortBy(_._1)
-    (for {
-      ((i, si), xi) <- sh.zipWithIndex
-      (j, sj) <- sh.drop(xi + 1)
-      if jaccard(si, sj) >= threshold
-    } yield j).toSet
-  }
-
-  private def jaccard(x: Array[Long], y: Array[Long]): Double = {
-    var i = 0; var j = 0; var inter = 0
-    while (i < x.length && j < y.length) {
-      if (x(i) == y(j)) { inter += 1; i += 1; j += 1 }
-      else if (x(i) < y(j)) i += 1 else j += 1
-    }
-    val union = x.length + y.length - inter
-    if (union == 0) 1.0 else inter.toDouble / union
-  }
-
-  test("minhash banding survives a 10k-copy skew cluster") {
-    val clones = (0L until 10000L).map(i => (i, "the same duplicated text " +
-      "appears many times in this corpus with identical shingles"))
-    val uniques = (10000L until 10050L).map(i =>
-      (i, s"unique document number $i with its own words ${i * 31} and ${i * 7}"))
-    val df = (clones ++ uniques).toDF("doc_id", "text")
-    val t0 = System.nanoTime()
-    val survivors = MinHashDeduplicateFilter("text", "doc_id")(df).count()
-    val secs = (System.nanoTime() - t0) / 1e9
-    // 1 representative of the clone cluster + the 50 uniques
-    assert(survivors == 51L, s"got $survivors")
-    assert(secs < 120, s"skew smoke took ${secs}s — hot-bucket blowup?")
-  }
-
-  test("simhash pigeonhole holds when (k+1) does not divide 60") {
-    val docs = Storage.table(spark, sf, "documents").limit(120)
-      .select("doc_id", "text")
-    val k = 6 // 7 segments over 60 bits → remainder 4 absorbed by the last
-    val op = SimHashDeduplicateFilter("text", "doc_id", hammingK = k)
-    val sigs = docs.select(col("doc_id"), op.simhash(col("text")).as("sig"))
-      .as[(Long, Long)].collect()
-    val bruteDups = (for {
-      (i, si) <- sigs; (j, sj) <- sigs
-      if i < j && java.lang.Long.bitCount(si ^ sj) <= k
-    } yield j).toSet
-    val kept = op(docs).select("doc_id").as[Long].collect().toSet
-    val dropped = sigs.map(_._1).toSet -- kept
-    assert(dropped == bruteDups,
-      s"banding missed ${(bruteDups -- dropped).size} / extra ${(dropped -- bruteDups).size}")
-  }
-
-  test("minhash matches brute-force pairwise keep-first on a near-dup cluster") {
-    val rows = nearDupCluster(200) ++ uniques(1000L, 60)
-    val df = rows.toDF("doc_id", "text")
-    val op = MinHashDeduplicateFilter("text", "doc_id", threshold = 0.9)
-    val kept = op(df).select("doc_id").as[Long].collect().toSet
-    val expectDrops = brutePairwiseDrops(rows, op.ngram, op.threshold)
-    assert(kept == rows.map(_._1).toSet -- expectDrops,
-      s"kept ${kept.size}, expected ${rows.size - expectDrops.size}")
-  }
-
-  test("minhash big-bucket path (cnt > cap) still drops the whole cluster") {
-    // force every cluster band bucket over the cap: member-vs-bucket-min
-    // must carry the verify alone
-    val rows = nearDupCluster(120) ++ uniques(5000L, 40)
-    val df = rows.toDF("doc_id", "text")
-    val op = MinHashDeduplicateFilter("text", "doc_id", threshold = 0.9,
-      maxBandBucket = 16)
-    val kept = op(df).select("doc_id").as[Long].collect().toSet
-    // all cluster members are pairwise-similar to the cluster minimum, so
-    // even the capped (min-only) candidate set drops everything but doc 0
-    assert(kept == (Set(0L) ++ uniques(5000L, 40).map(_._1)),
-      s"kept ${kept.toSeq.sorted.take(10)}... (${kept.size})")
-  }
-
-  test("corpus-sized joins never plan as broadcast from static estimates") {
-    // On tiny test inputs Catalyst's static size estimates make EVERY
-    // join broadcast-eligible — exactly the condition under which the
-    // scale hazard hides. The merge hints must hold regardless: the
-    // band/bucket self-joins and the sig-fetch joins
-    // pair corpus-sized sides (a ×100 run OOM'd broadcasting the minhash
-    // stats aggregate, whose static estimate stays small at any scale).
-    // The one legitimate broadcast candidate is the final left_anti
-    // (dup-ids side, bounded in the checkpointed minhash path).
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
-    def joins(df: org.apache.spark.sql.DataFrame, allowedBroadcasts: Int): Unit = {
-      val root = df.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
-      }
-      val bhj = root.collect { case j: BroadcastHashJoinExec => j }
-      val bnl = root.collect { case j: BroadcastNestedLoopJoinExec => j }
-      assert(bnl.isEmpty, s"nested-loop broadcast join in plan: $bnl")
-      assert(bhj.size <= allowedBroadcasts,
-        s"${bhj.size} broadcast joins (allowed $allowedBroadcasts): " +
-          bhj.map(_.leftKeys.mkString(",")).mkString(" | "))
-    }
-    val docs = (nearDupCluster(30) ++ uniques(900L, 10)).toDF("doc_id", "text")
-    val mh = MinHashDeduplicateFilter("text", "doc_id")
-    joins(mh.duplicateIds(mh.shingled(docs)), allowedBroadcasts = 0)
-    joins(graft.ops.dedup.SimHashDeduplicateFilter("text", "doc_id")(docs),
-      allowedBroadcasts = 1) // the final left_anti only
-    val embs = (0L until 50L).map(i =>
-      (i, Array.tabulate(64)(d => math.sin(i * 64 + d))))
-      .toDF("vec_id", "embedding")
-    joins(graft.ops.dedup.SemDeduplicateFilter("embedding", "vec_id")(embs),
-      allowedBroadcasts = 1) // the final left_anti only
-    joins(graft.ops.sim.Similarity.similarityJoin(
-      embs, "embedding", "vec_id", 0.95), allowedBroadcasts = 0)
-  }
-
-  test("no exchange carries candidate pairs with both shingle arrays") {
-    val df = (nearDupCluster(50) ++ uniques(9000L, 20)).toDF("doc_id", "text")
-    val op = MinHashDeduplicateFilter("text", "doc_id")
-    // lint the pre-checkpoint dup-id plan — apply()'s eager localCheckpoint
-    // would erase the interesting exchanges from the final join's plan
-    val dups = op.duplicateIds(op.shingled(df))
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.exchange.Exchange
-    import org.apache.spark.sql.types.{ArrayType, LongType}
-    val root = dups.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan // AQE hides its tree
-      case p => p
-    }
-    val exchanges = root.collect { case e: Exchange => e }
-    assert(exchanges.nonEmpty, "expected shuffles in the dedup plan")
-    exchanges.foreach { e =>
-      val arrayCols = e.output.count(a => a.dataType == ArrayType(LongType))
-      assert(arrayCols <= 1,
-        s"exchange moves $arrayCols shingle arrays per row (pairs+arrays " +
-          s"shuffle — quadratic in cluster size): ${e.output.map(_.name)}")
-    }
-  }
-
-  test("minhash band waves reproduce the single-pass result exactly") {
-    // The ×1000 probe killed the single-pass minhash on shuffle scratch
-    // (the band exchange replicates each shingle array ×32 — ~105 GB for
-    // a 5M-doc corpus). The wave path must be a pure partition of the
-    // band set: same drops, bit for bit, on a corpus that exercises all
-    // three phases (exact clones → collapse, near-dup cluster → band
-    // verify, capped hot buckets → min-representative path).
-    import spark.implicits._
-    import graft.ops.dedup.MinHashDeduplicateFilter
-    val base = (0 until 80).map(t => s"tok$t")
-    val nearDups = (0L until 60L).map { i =>
-      (i, base.zipWithIndex.collect {
-        case (w, p) if p != (i % 80).toInt => w }.mkString(" "))
-    }
-    val clones = (100L until 140L).map(i => (i, "the same exact text" * 5))
-    val uniques = (200L until 260L).map(i =>
-      (i, s"unique document $i about ${i * 31} and ${i * 7}"))
-    val df = (nearDups ++ clones ++ uniques).toDF("doc_id", "text")
-    val op = MinHashDeduplicateFilter("text", "doc_id", threshold = 0.9,
-      maxBandBucket = 16) // force the big-bucket path into the waves too
-    val withSh = op.shingled(df).persist()
-    try {
-      val single = op.duplicateIds(withSh)
-        .as[Long].collect().toSet
-      for (groups <- Seq(2, 5, 32)) { // uneven split, one-band waves
-        val waved = op.groupedDuplicateIds(withSh, groups)
-          .as[Long].collect().toSet
-        assert(waved == single, s"groups=$groups diverged: " +
-          s"only-waved=${(waved -- single).take(5)} " +
-          s"only-single=${(single -- waved).take(5)}")
-      }
-    } finally withSh.unpersist()
-  }
-
-  test("band wave count scales with measured shingle volume") {
-    import spark.implicits._
-    import graft.ops.dedup.MinHashDeduplicateFilter
-    val docs = (0L until 50L).map(i =>
-      (i, s"document $i with some words ${i * 3} ${i * 7} ${i * 11}"))
-      .toDF("doc_id", "text")
-    val roomy = MinHashDeduplicateFilter("text", "doc_id")
-    val withSh = roomy.shingled(docs)
-    // default budget (24 GiB) on a 50-doc corpus: single-pass plan
-    assert(roomy.bandGroupCount(withSh) == 1)
-    // a budget smaller than one band's bytes clamps at the band count
-    val tight = roomy.copy(scratchBudgetBytes = 1L)
-    assert(tight.bandGroupCount(withSh) == roomy.bands)
-    // empty corpus: no NPE from the null sum, single pass
-    val empty = docs.filter(col("doc_id") < 0)
-    assert(roomy.bandGroupCount(roomy.shingled(empty)) == 1)
-    // end-to-end through apply(): a tight budget must not change results
-    val defaultKept = roomy(docs).select("doc_id").as[Long].collect().toSet
-    val wavedKept = tight(docs).select("doc_id").as[Long].collect().toSet
-    assert(wavedKept == defaultKept)
-  }
-
-  test("scratch budget tracks the real disk, with the measured-constant fallback") {
-    import graft.ops.dedup.MinHashDeduplicateFilter
-    // unmeasurable dir (statfs impossible) → the ×1000-proven constant
-    assert(MinHashDeduplicateFilter.autoScratchBudgetFromDirs(
-      "/nonexistent/graft/scratch/dir") ==
-      MinHashDeduplicateFilter.FallbackScratchBudgetBytes)
-    // a real dir → half its usable space (conservative: spills and
-    // checkpoint blocks share the volume and sit outside the estimate)
-    val tmp = System.getProperty("java.io.tmpdir", "/tmp")
-    val budget = MinHashDeduplicateFilter.autoScratchBudgetFromDirs(tmp)
-    val usable = new java.io.File(tmp).getUsableSpace
-    assert(budget > 0 && budget <= usable,
-      s"budget $budget vs usable $usable")
-    // multi-dir config uses the first entry
-    assert(MinHashDeduplicateFilter.autoScratchBudgetFromDirs(
-      s"$tmp,/nonexistent/other") == budget)
-  }
-
-  test("autoScratchBudget statfs-sizes only in local mode; cluster falls back") {
-    import graft.ops.dedup.MinHashDeduplicateFilter._
-    val tmp = System.getProperty("java.io.tmpdir", "/tmp")
-    // local: tracks the real dir (half usable space, same as FromDirs)
-    assert(autoScratchBudgetImpl(isLocal = true, tmp) ==
-      autoScratchBudgetFromDirs(tmp))
-    // non-local: the driver's free space says NOTHING about executor
-    // volumes (YARN/K8s LOCAL_DIRS override the conf) — must be the
-    // ×1000-proven constant, not a driver statfs
-    assert(autoScratchBudgetImpl(isLocal = false, tmp) ==
-      FallbackScratchBudgetBytes)
-    // and the local path still has the statfs-unavailable fallback
-    assert(autoScratchBudgetImpl(isLocal = true, "/nonexistent_dir_xyz") ==
-      FallbackScratchBudgetBytes)
-  }
-
-  test("sem dedup default plan has no cartesian product") {
-    val emb = Storage.table(spark, sf, "embeddings")
-    val plan = SemDeduplicateFilter("embedding", "vec_id", eps = 0.05)(emb)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct") && !plan.contains("Cross"),
-      s"LSH mode must not cross-join:\n${plan.take(800)}")
-    val planExact = SemDeduplicateFilter("embedding", "vec_id", eps = 0.05,
-      mode = "exact")(emb).queryExecution.executedPlan.toString
-    // the small-n twin is O(n²) by design (CartesianProduct, or BNLJ-Cross
-    // when one side fits a broadcast)
-    assert(planExact.contains("CartesianProduct") || planExact.contains("Cross"))
-  }
-
-  test("sem dedup LSH recall on near-identical vectors") {
-    val exact = SemDeduplicateFilter("embedding", "vec_id", eps = 0.05,
-      mode = "exact")(Storage.table(spark, sf, "embeddings"))
-      .select("vec_id").as[Long].collect().toSet
-    val lsh = SemDeduplicateFilter("embedding", "vec_id", eps = 0.05)(
-      Storage.table(spark, sf, "embeddings"))
-      .select("vec_id").as[Long].collect().toSet
-    // LSH keeps a superset (missed candidate pairs → fewer drops)
-    assert(exact.subsetOf(lsh))
-  }
-
-  test("SemDeduplicateFilter default (bits=0) equals the old bits=8 below the floor") {
-    import graft.ops.dedup.SemDeduplicateFilter
-    val emb = core.Storage.table(spark, sf, "embeddings")
-    def kept(op: SemDeduplicateFilter) =
-      op(emb).select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(kept(SemDeduplicateFilter("embedding", "vec_id")) ==
-      kept(SemDeduplicateFilter("embedding", "vec_id", bits = 8)))
-  }
-
-  test("sem dedup witness walk matches an independent LSH+cosine replay") {
-    // The ×1000 probe ran the bucket self-join form of dedup_sem_lsh in
-    // 862 s — all-pairs verify inside 1000-member duplicate buckets. The
-    // streaming witness walk must reproduce the join form's drop set
-    // exactly: candidates = any shared bucket, drop j iff some earlier
-    // same-bucket i has cos ≥ 1-eps (dropped rows still witness).
-    import spark.implicits._
-    import graft.ops.dedup.SemDeduplicateFilter
-    val rows = plantedEmbeddings(clusters = 5, size = 12, loose = 40)
-    val df = rows.toDF("vec_id", "embedding")
-    val kept = SemDeduplicateFilter("embedding", "vec_id", eps = 0.05)(df)
-      .select("vec_id").as[Long].collect().toSet
-    // independent replay: same bucket expression, collected and walked
-    // with plain Scala set logic and the same strict-fold cosine
-    val bucketsOf = df
-      .select(col("vec_id"), graft.ops.sim.CosineLsh.buckets(
-        col("embedding").cast("array<double>"), 8, 64, 4).as("b"))
-      .as[(Long, Seq[String])].collect().toMap
-    val vecOf = rows.toMap.view.mapValues(_.toArray).toMap
-    val ids = rows.map(_._1).sorted
-    val dropped = ids.filter { j =>
-      ids.exists(i => i < j &&
-        bucketsOf(i).exists(bucketsOf(j).contains) &&
-        graft.ops.dedup.Dedup.cosineFold(vecOf(i), vecOf(j)) >= 0.95)
-    }.toSet
-    assert(kept == ids.toSet -- dropped,
-      s"extra-kept=${(kept -- (ids.toSet -- dropped)).take(5)} " +
-        s"missing=${((ids.toSet -- dropped) -- kept).take(5)}")
-  }
-
-  test("sem dedup pool cap degrades to a keep-superset, never false drops") {
-    import spark.implicits._
-    import graft.ops.dedup.SemDeduplicateFilter
-    val df = plantedEmbeddings(clusters = 2, size = 30, loose = 10)
-      .toDF("vec_id", "embedding")
-    val exactKept = SemDeduplicateFilter("embedding", "vec_id")(df)
-      .select("vec_id").as[Long].collect().toSet
-    // cap of 3: later cluster members only see the first 3 as witnesses —
-    // here every member matches the cluster's first vector, so the drop
-    // set is unchanged; in general the capped keep set can only GROW
-    val capped = SemDeduplicateFilter("embedding", "vec_id", maxBucket = 3)(df)
-      .select("vec_id").as[Long].collect().toSet
-    assert(exactKept.subsetOf(capped))
-    assert(capped == exactKept) // cluster-of-near-identicals: same set
-  }
-
-  test("kcenter distributed pre-selection bounds the driver pool") {
-    // maxCandidates = 50, k = 10 → 5 range partitions, each reduced to
-    // its own 10 local centers (ALL rows covered — no prefix truncation),
-    // driver merges 50 candidates down to k
-    val emb = Storage.table(spark, sf, "embeddings")
-    def run() = KCenterGreedyFilter("embedding", "vec_id", k = 10,
-      maxCandidates = 50)(emb).select("vec_id").as[Long].collect().sorted
-    val out = run()
-    assert(out.length == 10)
-    // the greedy seed is the global min id (partition 1's local seed
-    // always survives into the merge, and the merge seeds at its min)
-    assert(out.contains(0L))
-    // candidates span the whole id range, not just a prefix
-    assert(out.exists(_ >= 50L))
-    // deterministic across runs
-    assert(run().toSeq == out.toSeq)
-  }
-
-  test("KCenterGreedyFilter equals the naive sequential greedy at sf0.001") {
-    import graft.ops.dedup.KCenterGreedyFilter
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val rows = emb.selectExpr("vec_id", "cast(embedding as array<double>)")
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
-    val n = rows.length
-    val k = 10
-    assert(n > k, s"fixture too small: $n rows")
-    // naive reference greedy, written independently of the operator
-    val dist = Array.fill(n)(Double.MaxValue)
-    val expected = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var next = 0
-    var c = 0
-    while (c < k) {
-      expected += rows(next)._1
-      val cv = rows(next)._2
-      var best = -1; var bestD = -1.0; var i = 0
-      while (i < n) {
-        var s = 0.0; var j = 0
-        while (j < cv.length) {
-          val d = rows(i)._2(j) - cv(j); s += d * d; j += 1
-        }
-        if (s < dist(i)) dist(i) = s
-        if (dist(i) > bestD) { bestD = dist(i); best = i }
-        i += 1
-      }
-      next = best
-      c += 1
-    }
-    val got = KCenterGreedyFilter("embedding", "vec_id", k = k)(emb)
-      .select("vec_id").collect().map(_.getLong(0)).sorted
-    assert(got.toSeq == expected.sorted.toSeq)
-    // the oracle's validity precondition at verify scale: the distributed
-    // pre-selection must pass EVERY row through (each range partition
-    // ≤ k rows), so the driver greedy sees the full corpus exactly like
-    // the SQL replay does. Asserted DIRECTLY on the operator's own
-    // partitioning (repartitionByRange is SAMPLE-based, so a total-count
-    // bound like n ≤ 64k guards a weaker invariant: near the bound a
-    // sampled split can still put > k rows in one partition — r12
-    // advice). preParts = min(64, 200000/100) = 64, the query's shape.
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.functions.col
-    val sf001 = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-      .select(col("vec_id").cast("long").as("__id"))
-      .repartitionByRange(64, col("__id"))
-    val maxPart = sf001.mapPartitions(it => Iterator(it.size))(Encoders.scalaInt)
-      .collect().max
-    assert(maxPart <= 100,
-      s"sf0.01 range partition exceeds k=100 rows ($maxPart): full-replay oracle invalid")
   }
 }

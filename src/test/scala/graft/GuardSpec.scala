@@ -1,13 +1,10 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.text2sql._
-import graft.serving.MockServing
 
-/** Text2SQL execution (`graft.ops.text2sql`): the statement guards, both
-  * SQL backends and their result-hash contract, the constant-fold path,
-  * the execution and Spider classifiers, the JDBC schema walk and
-  * vector-SQL rewriting.
+/** Text2SQL execution (`graft.ops.text2sql`): the statement guards, the
+  * result-hash cell encoding, and the constant-fold path against the
+  * collect path.
   *
   * Division of labor (see SqlGuard scaladoc): `SqlGuard.isSelect` is the
   * REFERENCE-SEMANTICS textual filter (oracle-replayable in DuckDB);
@@ -103,12 +100,6 @@ class GuardSpec extends SparkSuite {
       "[a,[1,2]]")
   }
 
-  /** One Derby database for the JDBC backend cases. */
-  private lazy val derbyUrl = derby(
-    "CREATE TABLE t(x INT)", "INSERT INTO t VALUES (1), (2), (3)",
-    "CREATE TABLE r3t(x INT, s VARCHAR(16))",
-    "INSERT INTO r3t VALUES (1, 'a'), (2, 'b'), (3, NULL)")
-
   /** The slow path's encoding, replicated literally: collect(), cell-
     * encode (arrays/maps/structs element-encode, not toString), join
     * cells with the U+0001 separator, sha256 over sorted rows. */
@@ -199,248 +190,5 @@ class GuardSpec extends SparkSuite {
     assert(h1.isDefined && h1 == h2)
     // the canonical cell encoding is hex, never Array.toString identity
     assert(graft.ops.text2sql.SqlBackend.cell(Array[Byte](10, -1)) == "0x0aff")
-  }
-
-  test("JdbcSqlBackend executes distinct statements executor-side") {
-    val df = Seq(
-      (1L, "SELECT x FROM t WHERE x > 1"),
-      (2L, "SELECT x FROM t WHERE x > 1"), // duplicate statement
-      (3L, "SELECT * FROM missing_table"), // select, but fails execution
-      (4L, "DROP TABLE t")                 // guard must reject WITHOUT running
-    ).toDF("id", "sql")
-    val kept = SQLExecutionFilter("sql", timeoutSec = 5,
-      backend = JdbcSqlBackend(derbyUrl))(df)
-      .select("id").as[Long].collect().sorted
-    assert(kept.toSeq == Seq(1L, 2L))
-    // the DROP must not have executed: table still answers
-    val conn = java.sql.DriverManager.getConnection(derbyUrl)
-    val rs = conn.createStatement().executeQuery("SELECT COUNT(*) FROM t")
-    rs.next()
-    assert(rs.getInt(1) == 3)
-    conn.close()
-  }
-
-  test("JdbcSqlBackend result hashes distinguish result sets") {
-    val stmts = Seq("SELECT x FROM t", "SELECT x FROM t WHERE x > 1",
-      "SELECT x FROM t ORDER BY x DESC").toDF("sql")
-    val v = JdbcSqlBackend(derbyUrl).execute(stmts, "sql", 5)
-      .select("sql", "__ok", "__hash").collect()
-      .map(r => r.getString(0) -> (r.getBoolean(1), r.getString(2))).toMap
-    assert(v.values.forall(_._1))
-    // same rows in different order → same sorted-encoding hash
-    assert(v("SELECT x FROM t")._2 == v("SELECT x FROM t ORDER BY x DESC")._2)
-    assert(v("SELECT x FROM t")._2 != v("SELECT x FROM t WHERE x > 1")._2)
-  }
-
-  test("identical result sets hash identically across both SqlBackends") {
-    // same rows via the Spark catalog and via Derby — multi-column so the
-    // cell separator itself is exercised (the r2 bug joined Spark-side
-    // cells with the 6-char literal "\\u0001", not the control char)
-    Seq((1, "a"), (2, "b"), (3, null.asInstanceOf[String]))
-      .toDF("x", "s").createOrReplaceTempView("r3t")
-    val stmts = Seq("SELECT x, s FROM r3t", "SELECT x, s FROM r3t WHERE x > 1")
-      .toDF("sql")
-    def hashes(b: SqlBackend) = b.execute(stmts, "sql", 5)
-      .select("sql", "__ok", "__hash").collect()
-      .map(r => r.getString(0) -> (r.getBoolean(1), r.getString(2))).toMap
-    val viaSpark = hashes(SparkSessionBackend())
-    val viaJdbc = hashes(JdbcSqlBackend(derbyUrl))
-    viaSpark.keys.foreach { q =>
-      assert(viaSpark(q)._1 && viaJdbc(q)._1, s"$q failed to execute")
-      assert(viaSpark(q)._2 == viaJdbc(q)._2,
-        s"$q: spark=${viaSpark(q)._2} jdbc=${viaJdbc(q)._2}")
-    }
-  }
-
-  test("JdbcSqlBackend survives an early-terminating consumer") {
-    val stmts = (1 to 50).map(i => s"SELECT x FROM r3t WHERE x <= ${i % 4}")
-      .toDF("sql")
-    // limit() stops draining the partition iterators; the task-completion
-    // listener must still close every per-partition connection (no hang,
-    // and the database stays usable)
-    val one = JdbcSqlBackend(derbyUrl).execute(stmts, "sql", 5).limit(1).collect()
-    assert(one.length == 1)
-    val conn = java.sql.DriverManager.getConnection(derbyUrl)
-    val rs = conn.createStatement().executeQuery("SELECT COUNT(*) FROM r3t")
-    rs.next(); assert(rs.getInt(1) == 3)
-    conn.close()
-  }
-
-  test("sql execution classifier labels by generation agreement") {
-    val df = Seq(
-      (0L, "```sql SELECT 1 AS x ```", "SELECT 1 AS x"), // all 10 match → easy
-      (1L, "```sql SELECT 1 AS x ```", "SELECT 2 AS x")  // none match → extra
-    ).toDF("doc_id", "prompt", "gold")
-    val out = SQLExecutionClassifier("prompt", "gold", MockServing())(df)
-      .select("doc_id", "difficulty").as[(Long, String)].collect().toMap
-    assert(out(0L) == "easy" && out(1L) == "extra")
-  }
-
-  test("execution classifier labels survive shuffled, multi-partition input") {
-    // row ids are materialized once (localCheckpoint); a repartitioned
-    // input must still attach each difficulty to its own row
-    val rows = (0 until 16).map { i =>
-      if (i % 2 == 0) (i.toLong, "```sql SELECT 1 AS x ```", "SELECT 1 AS x")
-      else (i.toLong, "```sql SELECT 1 AS x ```", "SELECT 2 AS x")
-    }
-    val df = rows.toDF("doc_id", "prompt", "gold").repartition(7, col("gold"))
-    val out = SQLExecutionClassifier("prompt", "gold", MockServing())(df)
-      .select("doc_id", "difficulty").as[(Long, String)].collect().toMap
-    rows.foreach { case (id, _, gold) =>
-      val want = if (gold.endsWith("1 AS x")) "easy" else "extra"
-      assert(out(id) == want, s"row $id: got ${out(id)} want $want")
-    }
-  }
-
-  test("spider hardness classifier follows the spider decision tree") {
-    import graft.ops.text2sql.SpiderHardnessClassifier
-    val cases = Seq(
-      ("SELECT a FROM t", "easy"),
-      ("SELECT a FROM t WHERE x > 0", "easy"),
-      ("SELECT a, b FROM t WHERE x > 0 AND y < 2", "medium"),
-      ("SELECT a FROM t JOIN u ON t.id = u.id WHERE x > 0 ORDER BY a", "hard"),
-      ("SELECT a FROM t WHERE x IN (SELECT y FROM u)", "hard"),
-      ("SELECT a FROM t UNION SELECT b FROM u WHERE x > 0 GROUP BY b", "extra"))
-    val df = cases.zipWithIndex.map { case ((q, _), i) => (i.toLong, q) }
-      .toDF("id", "sql")
-    val got = SpiderHardnessClassifier("sql")(df)
-      .select("id", "hardness").as[(Long, String)].collect().toMap
-    cases.zipWithIndex.foreach { case ((q, want), i) =>
-      assert(got(i.toLong) == want, s"$q: got ${got(i.toLong)} want $want")
-    }
-  }
-
-  test("spider classifier resets the clause tracker after a set operator") {
-    // pre-fix, UNION left clause=="from", so the second SELECT's column
-    // comma counted as an implicit join (comp1) instead of a select column
-    // (others) — hard instead of extra
-    val got = SpiderHardnessClassifier("sql")(
-      Seq("SELECT a FROM t UNION SELECT b, c FROM u").toDF("sql"))
-      .select("hardness").as[String].head()
-    assert(got == "extra", s"got $got")
-    // and a set-op query that IS plain stays below extra
-    val simple = SpiderHardnessClassifier("sql")(
-      Seq("SELECT a FROM t UNION SELECT b FROM u").toDF("sql"))
-      .select("hardness").as[String].head()
-    assert(simple == "hard", s"got $simple") // comp2 = 1, all else 0
-  }
-
-  test("schema walk renders columns, types, NOT NULL, and primary keys") {
-    val url = derby("CREATE TABLE users (id INT NOT NULL, name VARCHAR(40), " +
-    "score DECIMAL(7,2), PRIMARY KEY (id))")
-    val out = graft.ops.text2sql.SchemaWalk.walk(spark, url)
-      .as[(String, String)].collect().toMap
-    assert(out.keySet == Set("USERS"))
-    assert(out("USERS") ==
-      "CREATE TABLE USERS (ID INTEGER NOT NULL, NAME VARCHAR(40), " +
-        "SCORE DECIMAL(7, 2), PRIMARY KEY (ID))")
-  }
-
-  test("schema walk renders foreign keys referencing the parent table") {
-    val url = derby("CREATE TABLE dept (id INT NOT NULL PRIMARY KEY)",
-    "CREATE TABLE emp (id INT NOT NULL PRIMARY KEY, " +
-      "dept_id INT REFERENCES dept (id))")
-    val out = graft.ops.text2sql.SchemaWalk.walk(spark, url)
-      .as[(String, String)].collect().toMap
-    assert(out.keySet == Set("DEPT", "EMP"))
-    assert(out("EMP").contains("FOREIGN KEY (DEPT_ID) REFERENCES DEPT (ID)"))
-  }
-
-  test("schema-walk dim table feeds the text2sql prompt generator") {
-    val url = derby("CREATE TABLE t_en (x INT NOT NULL, PRIMARY KEY (x))")
-    val schemas = graft.ops.text2sql.SchemaWalk.walk(spark, url)
-      .withColumn("db_id", lit("en")).select("db_id", "schema_ddl")
-    val qs = Seq(("en", "how many rows?")).toDF("db_id", "question")
-    val out = graft.ops.text2sql.Text2SQLPromptGenerator(
-      "db_id", "question", "prompt", schemas)(qs)
-      .select("prompt").as[String].collect()
-    assert(out.length == 1)
-    assert(out.head.contains("CREATE TABLE T_EN"))
-    assert(out.head.contains("how many rows?"))
-  }
-
-  test("lembed rewriting embeds string literals and splices vec_f32") {
-    val sv = graft.serving.MockServing(4)
-    val sql = "SELECT * FROM t WHERE emb MATCH lembed('m', 'it''s a test') " +
-      "AND y = LEMBED('plain')"
-    val out = graft.ops.text2sql.VecSqlRewrite.rewrite(sql, sv)
-    assert(!out.toLowerCase.contains("lembed"))
-    // the SQL-escaped literal is unescaped before embedding; 2-arg form
-    // embeds the SECOND arg, 1-arg form the first, case-insensitive match
-    val e1 = graft.ops.text2sql.VecSqlRewrite.render(sv.embed(Seq("it's a test")).head)
-    val e2 = graft.ops.text2sql.VecSqlRewrite.render(sv.embed(Seq("plain")).head)
-    assert(out.contains(e1) && out.contains(e2))
-    assert(graft.ops.text2sql.VecSqlRewrite.rewrite("SELECT 1", sv) == "SELECT 1")
-  }
-
-  test("vec_sql_rewrite_generator rewrites statement columns distributed") {
-    val df = Seq((1, "SELECT lembed('a b')"), (2, "SELECT 2")).toDF("id", "sql")
-    val out = graft.ops.text2sql.VecSqlRewriteGenerator(
-      "sql", "vec_sql", graft.serving.MockServing(4))(df)
-      .select("id", "vec_sql").as[(Int, String)].collect().toMap
-    assert(out(1).startsWith("SELECT vec_f32('[0."))
-    assert(out(1).endsWith("]')"))
-    assert(out(2) == "SELECT 2")
-  }
-
-  test("hashedImpl refuses loudly past the row cap, hashes identically under it") {
-    import graft.ops.text2sql.SqlExecutor
-    val sql20 = "SELECT id FROM range(20)"
-    // over-cap: a refused measurement, not a silent error verdict
-    intercept[SqlExecutor.ResultCapExceededException] {
-      SqlExecutor.hashedImpl(spark, sql20, timeoutSec = 60, maxRows = 10)
-    }
-    // under-cap: limit(maxRows+1) over a smaller result is the full
-    // result — the fingerprint is bit-identical to the uncapped one
-    val capped = SqlExecutor.hashedImpl(spark, sql20, timeoutSec = 60,
-      maxRows = 100)
-    val roomy = SqlExecutor.hashedImpl(spark, sql20, timeoutSec = 60)
-    assert(capped.isDefined && capped == roomy)
-  }
-
-  test("SparkSessionBackend: a mixed batch yields three distinct verdicts") {
-    import graft.ops.text2sql.SparkSessionBackend
-    import spark.implicits._
-    val okQ = "SELECT id FROM range(3)"
-    val errQ = "SELECT x FROM nonexistent_table_r11"
-    val bigQ = "SELECT id FROM range(10)"
-    val stmts = Seq(okQ, errQ, bigQ).toDF("sql")
-    val v = SparkSessionBackend(maxHashRows = 5).execute(stmts, "sql", 30)
-      .collect().map(r => r.getString(0) -> (r.getBoolean(1),
-        Option(r.getString(2)))).toMap
-    assert(v(okQ)._1 && v(okQ)._2.isDefined)          // ok: ran + hash
-    assert(!v(errQ)._1 && v(errQ)._2.isEmpty)         // error: failed
-    assert(v(bigQ)._1 && v(bigQ)._2.isEmpty)          // refused: ran, no hash
-    // under-cap hash is the cap-free hash (the cap must be invisible
-    // below the ceiling)
-    val free = SparkSessionBackend().execute(Seq(okQ).toDF("sql"), "sql", 30)
-      .collect().head.getString(2)
-    assert(v(okQ)._2.contains(free))
-  }
-
-  test("SQLExecutionFilter keeps a refused (over-cap) statement — it DID run") {
-    import graft.ops.text2sql.{SQLExecutionFilter, SparkSessionBackend}
-    import spark.implicits._
-    val df = Seq("SELECT id FROM range(10)", "SELECT x FROM no_such_r11")
-      .toDF("sql")
-    val kept = SQLExecutionFilter("sql",
-      backend = SparkSessionBackend(maxHashRows = 5))(df)
-      .collect().map(_.getString(0)).toSet
-    assert(kept == Set("SELECT id FROM range(10)"))
-  }
-
-  test("JdbcSqlBackend.run refuses over-cap results executor-side, same tri-state") {
-    import graft.ops.text2sql.JdbcSqlBackend
-    val conn = java.sql.DriverManager.getConnection(derby(
-      "CREATE TABLE t (i INT)" +: (1 to 10).map(i => s"INSERT INTO t VALUES ($i)"): _*))
-    try {
-      val (okBig, hBig) = JdbcSqlBackend.run(conn, "SELECT i FROM t", 5, maxRows = 3)
-      assert(okBig && hBig == null)                   // refused
-      val (okSmall, hSmall) =
-        JdbcSqlBackend.run(conn, "SELECT i FROM t WHERE i <= 2", 5, maxRows = 3)
-      assert(okSmall && hSmall != null)               // fingerprinted
-      val (okErr, hErr) = JdbcSqlBackend.run(conn, "SELECT nope FROM t", 5)
-      assert(!okErr && hErr == null)                  // failed
-    } finally conn.close()
   }
 }

@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.functions._
 
-/** The hash kernels and the Catalyst expressions over them: DuckDB
-  * replay forms, the SQL-registered functions and the packed band keys
-  * agree with the kernels they wrap. */
+/** The hash kernels agree with their DuckDB replay forms and with the
+  * slow per-gram computation they replace. */
 class KernelsSpec extends SparkSuite {
   import spark.implicits._
 
@@ -55,74 +53,5 @@ class KernelsSpec extends SparkSuite {
       }
     }.toMap
     assert(got == expected)
-  }
-
-  test("SQL-registered hash functions match the operator kernels") {
-    val s2 = spark.newSession()
-    GraftExtensions.register(s2)
-    s2.sql("SELECT 'the quick brown fox jumps over the lazy dog' AS text")
-      .createOrReplaceTempView("r3_txt")
-    // simhash60 == the SimHash op's internal fingerprint
-    val viaSql = s2.sql("SELECT simhash60(text) AS s FROM r3_txt")
-      .head().getLong(0)
-    val op = graft.ops.dedup.SimHashDeduplicateFilter("text", "doc_id")
-    val viaOp = s2.table("r3_txt").select(op.simhash(col("text")).as("s"))
-      .head().getLong(0)
-    assert(viaSql == viaOp)
-    assert(viaSql == graft.functions.kernels.simhash60(
-      "the quick brown fox jumps over the lazy dog".split(" ").toSeq))
-    // minhash_bands == the kernel over the same text
-    val bands = s2.sql("SELECT minhash_bands(text, 3, 128, 16) AS b FROM r3_txt")
-      .head().getSeq[String](0)
-    val hs = graft.functions.kernels.shingleHashes(
-      "the quick brown fox jumps over the lazy dog".split(" ").toSeq, 3)
-    assert(bands == graft.functions.kernels
-      .minhashBandKeys(hs.toSeq, 128, 16).toSeq)
-    assert(bands.length == 16 && bands.head.startsWith("0:"))
-    // cosine_lsh_buckets over a float array (implicit cast in the builder)
-    val buckets = s2.sql(
-      "SELECT cosine_lsh_buckets(array(CAST(0.5 AS FLOAT), CAST(-0.25 AS FLOAT)), 8, 2, 4) AS b")
-      .head().getSeq[String](0)
-    assert(buckets == graft.functions.kernels
-      .lshBuckets(Seq(0.5, -0.25), 8, 2, 4).toSeq)
-    // and the registered cosine_sim still answers
-    val cos = s2.sql(
-      "SELECT cosine_sim(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS c")
-      .head().getDouble(0)
-    assert(math.abs(cos - 1.0) < 1e-12)
-  }
-
-  test("minhashBandKeysPacked packs exactly the string kernel's (band, hash)") {
-    import graft.functions.kernels
-    val docs = Seq(
-      "the quick brown fox jumps over the lazy dog again and again",
-      "a completely different document with other words entirely here",
-      "the quick brown fox jumps over the lazy dog again and again", // clone
-      "", "one two")
-    val pooled = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    for (d <- docs; (np, nb) <- Seq((128, 16), (128, 32), (64, 8))) {
-      val ws = d.split("\\s+").toSeq.filter(_.nonEmpty)
-      val hs = kernels.shingleHashes(ws, 3).toSeq
-      val str = kernels.minhashBandKeys(hs, np, nb)
-      val packed = kernels.minhashBandKeysPacked(hs, np, nb)
-      assert(packed.length == str.length)
-      str.zip(packed).foreach { case (s, p) =>
-        val Array(band, hash) = s.split(":", 2)
-        assert((p >>> 32) == band.toLong, s"band of $s vs $p")
-        assert((p & 0xffffffffL) == (hash.toInt.toLong & 0xffffffffL),
-          s"hash of $s vs $p")
-        pooled += ((s, p))
-      }
-    }
-    // the string→packed mapping must be a bijection over the POOLED set
-    // (across docs and parameterizations — within one doc every key has a
-    // distinct band prefix, so a per-doc distinct-count check is vacuous):
-    // one packed value per string, and distinct strings → distinct longs
-    val byStr = pooled.groupBy(_._1).view.mapValues(_.map(_._2).distinct)
-    assert(byStr.values.forall(_.size == 1), "a string mapped to 2+ longs")
-    assert(byStr.size == pooled.map(_._2).distinct.size,
-      "distinct strings collided in packed space")
-    // and the pool genuinely exercises cross-doc collisions (the clone doc)
-    assert(byStr.size < pooled.size)
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.core.Storage
 
 /** Plan-quality assertions: the 100 TB story is only real if the plans
@@ -8,7 +7,6 @@ import graft.core.Storage
   * without exchanges.
   */
 class PlanSpec extends SparkSuite {
-
   private def physicalPlan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
 

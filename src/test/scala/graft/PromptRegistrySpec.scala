@@ -45,40 +45,4 @@ class PromptRegistrySpec extends SparkSuite {
     val t = PromptRegistry.resolve("some_future_op", "core_text_generate")
     assert(t.name == "core_text_generate")
   }
-
-  test("prompted_filter builds its prompt from the template body") {
-    Ops.registerAll()
-    graft.core.PromptRegistry.register(
-      graft.core.PromptTemplate("r5_judge", "Q: {q} / A: {a}",
-        systemPrompt = "JUDGE", diy = true))
-    // mock JUDGE keeps rows whose PROMPT length is even. Template prompt
-    // length = 9 + len(q) + len(a): row 1 → 14 (kept), row 2 → 15
-    // (dropped). Both bare q values have even length, so a filter that
-    // ignored the template body would keep BOTH rows.
-    val df = Seq((1, "keep", "y"), (2, "drop", "nn")).toDF("id", "q", "a")
-    val op = graft.core.Registry.get("prompted_filter",
-      Map("input_key" -> "q", "prompt_template" -> "r5_judge"))
-    val out = op(df).select("id").as[Int].collect().toSeq
-    assert(out == Seq(1))
-  }
-
-  test("prompted_refiner rewrites through the template body") {
-    Ops.registerAll()
-    graft.core.PromptRegistry.register(
-      graft.core.PromptTemplate("r5_refine", "fix[{text}] ctx[{extra}]",
-        systemPrompt = "", diy = true))
-    val df = Seq((1, "abc", "zzz")).toDF("id", "text", "extra")
-    val op = graft.core.Registry.get("prompted_refiner",
-      Map("input_key" -> "text", "prompt_template" -> "r5_refine"))
-    val out = op(df).select("text").as[String].collect().head
-    // mock serving echoes its prompt — proves the template (incl. the
-    // second column) drove prompt construction and landed back in `text`
-    assert(out.contains("fix[abc]") && out.contains("ctx[zzz]"))
-  }
-
-  test("format template ending in a placeholder keeps the trailing column") {
-    val c = graft.ops.gen.PromptFormat.column("a={x}{y}")
-    val out = Seq(("1", "2")).toDF("x", "y").select(c.as("p")).as[String].collect()
-    assert(out.head == "a=12")
-  }
 }

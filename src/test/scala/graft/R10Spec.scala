@@ -1,18 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-10 regressions: auto-sized LSH widths as the DEFAULT posture
   * (fixed widths were the measured ×1000 scale trap), lineage-scoped
   * wave shuffle reclamation, the disk-derived scratch budget, and the
   * hashedImpl driver-collect cap. */
-class R10Spec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-  val sf = "/root/testdata/sf0.001"
-
-  // ── auto-bits is the default everywhere, floor ≡ old fixed default ──────
-
+class R10Spec extends SparkSuite {
   test("lshTopK default (bits=0) equals the old bits=8 below the floor") {
     import graft.ops.sim.Similarity
     val emb = core.Storage.table(spark, sf, "embeddings")
@@ -57,8 +51,6 @@ class R10Spec extends AnyFunSuite {
     }
   }
 
-  // ── lineage-scoped wave reclamation (ADVICE medium) ─────────────────────
-
   test("lineageShuffleIds scopes cleanup to the owning query's shuffles") {
     import org.apache.spark.graftbridge.ShuffleCleanup
     val sc = spark.sparkContext
@@ -88,8 +80,6 @@ class R10Spec extends AnyFunSuite {
     assert(ck.count() == 7)
   }
 
-  // ── disk-derived scratch budget ─────────────────────────────────────────
-
   test("scratch budget tracks the real disk, with the measured-constant fallback") {
     import graft.ops.dedup.MinHashDeduplicateFilter
     // unmeasurable dir (statfs impossible) → the ×1000-proven constant
@@ -108,22 +98,18 @@ class R10Spec extends AnyFunSuite {
       s"$tmp,/nonexistent/other") == budget)
   }
 
-  // ── hashedImpl driver-collect cap ───────────────────────────────────────
-
   test("hashedImpl refuses loudly past the row cap, hashes identically under it") {
     import graft.ops.text2sql.SqlExecutor
     val sql20 = "SELECT id FROM range(20)"
     // over-cap: a refused measurement, not a silent error verdict
     intercept[SqlExecutor.ResultCapExceededException] {
-      SqlExecutor.hashedImpl(spark, sql20, timeoutSec = 60,
-        tryFoldFirst = false, maxRows = 10)
+      SqlExecutor.hashedImpl(spark, sql20, timeoutSec = 60, maxRows = 10)
     }
     // under-cap: limit(maxRows+1) over a smaller result is the full
     // result — the fingerprint is bit-identical to the uncapped one
     val capped = SqlExecutor.hashedImpl(spark, sql20, timeoutSec = 60,
-      tryFoldFirst = false, maxRows = 100)
-    val roomy = SqlExecutor.hashedImpl(spark, sql20, timeoutSec = 60,
-      tryFoldFirst = false)
+      maxRows = 100)
+    val roomy = SqlExecutor.hashedImpl(spark, sql20, timeoutSec = 60)
     assert(capped.isDefined && capped == roomy)
   }
 }

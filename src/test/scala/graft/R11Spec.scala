@@ -1,19 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-11 regressions: the cluster-safe scratch-budget gate (driver
   * statfs must not size executor disks), the Long-code-width bits cap,
   * the lshTopK query-side broadcast guard, and the per-statement REFUSED
   * verdict (ok ∧ null-hash ≠ error) in both SQL backends. */
-class R11Spec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-  val sf = "/root/testdata/sf0.001"
-
-  // ── scratch budget: auto-size only where the measured disk IS the
-  //    executor disk (local mode) ───────────────────────────────────────
-
+class R11Spec extends SparkSuite {
   test("autoScratchBudget statfs-sizes only in local mode; cluster falls back") {
     import graft.ops.dedup.MinHashDeduplicateFilter._
     val tmp = System.getProperty("java.io.tmpdir", "/tmp")
@@ -29,9 +22,6 @@ class R11Spec extends AnyFunSuite {
     assert(autoScratchBudgetImpl(isLocal = true, "/nonexistent_dir_xyz") ==
       FallbackScratchBudgetBytes)
   }
-
-  // ── bits cap: 64-bit Long code width, enforced at operator AND kernel
-  //    boundaries (shift-mod-64 would silently COARSEN buckets) ─────────
 
   test("bits >= 64 is refused everywhere; 63 is accepted") {
     import graft.ops.sim.Similarity
@@ -58,8 +48,6 @@ class R11Spec extends AnyFunSuite {
     assert(keys.length == 2 && keys.distinct.length == 2)
   }
 
-  // ── lshTopK query-side broadcast guard ───────────────────────────────
-
   test("lshTopK past maxBroadcastQueries drops the broadcast and still ranks identically") {
     import graft.ops.sim.Similarity
     val emb = core.Storage.table(spark, sf, "embeddings")
@@ -78,8 +66,6 @@ class R11Spec extends AnyFunSuite {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(s(guarded) == s(broadcasted) && s(guarded).nonEmpty)
   }
-
-  // ── per-statement REFUSED verdict: refused ≠ error ≠ ok ──────────────
 
   test("SparkSessionBackend: a mixed batch yields three distinct verdicts") {
     import graft.ops.text2sql.SparkSessionBackend
@@ -114,14 +100,9 @@ class R11Spec extends AnyFunSuite {
 
   test("JdbcSqlBackend.run refuses over-cap results executor-side, same tri-state") {
     import graft.ops.text2sql.JdbcSqlBackend
-    val dir = java.nio.file.Files.createTempDirectory("graft_derby_r11")
-    val url = s"jdbc:derby:${dir.toString}/db;create=true"
-    val conn = java.sql.DriverManager.getConnection(url)
+    val conn = java.sql.DriverManager.getConnection(derby(
+      "CREATE TABLE t (i INT)" +: (1 to 10).map(i => s"INSERT INTO t VALUES ($i)"): _*))
     try {
-      val st = conn.createStatement()
-      st.execute("CREATE TABLE t (i INT)")
-      (1 to 10).foreach(i => st.execute(s"INSERT INTO t VALUES ($i)"))
-      st.close()
       val (okBig, hBig) = JdbcSqlBackend.run(conn, "SELECT i FROM t", 5, maxRows = 3)
       assert(okBig && hBig == null)                   // refused
       val (okSmall, hSmall) =
@@ -131,11 +112,6 @@ class R11Spec extends AnyFunSuite {
       assert(!okErr && hErr == null)                  // failed
     } finally conn.close()
   }
-
-  // ── packed band keys: the internal dedup path's long keys must group
-  //    EXACTLY like the SQL-surface "band:hash" strings (the ×1000 heap
-  //    probe died in the band-key stage's string churn; packing is the
-  //    fix, and it must not move a single bucket) ───────────────────────
 
   test("minhashBandKeysPacked packs exactly the string kernel's (band, hash)") {
     import graft.functions.kernels

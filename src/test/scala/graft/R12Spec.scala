@@ -1,17 +1,11 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-12 regressions: the steady-co-load bench tripwire (external-CPU
   * accounting from /proc/stat — the signal the co-loaded r11 recorded
   * bench proved `pass_noise` cannot provide) and the k-center greedy
   * equivalence that backs dedup_kcenter's new full-replay DuckDB oracle. */
-class R12Spec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-  val sf = "/root/testdata/sf0.001"
-
-  // ── external-CPU co-load tripwire ────────────────────────────────────
-
+class R12Spec extends SparkSuite {
   test("busyJiffies parses the aggregate cpu line and rejects others") {
     // user nice system idle iowait irq softirq steal → busy excludes
     // idle(40) and iowait(50)
@@ -63,10 +57,6 @@ class R12Spec extends AnyFunSuite {
     assert(Bench.externalCores(100, jvmCpuSec = 2.0, wallSec = 1.0) == 0.0)
     assert(Bench.externalCores(100, jvmCpuSec = 0.5, wallSec = 0.0) == 0.0)
   }
-
-  // ── k-center greedy: the operator must equal the naive O(n²k) greedy
-  //    the DuckDB oracle replays (seed = smallest id, running min-dist,
-  //    argmax ties toward scan order / smallest id) ─────────────────────
 
   test("KCenterGreedyFilter equals the naive sequential greedy at sf0.001") {
     import graft.ops.dedup.KCenterGreedyFilter

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-13 pins.
   *
@@ -16,28 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    #5): bits=0 must run exactly one ids-only count job feeding both
   *    the key width and the enumerate-stage width.
   */
-class R13Spec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-
-  /** Jobs started inside `body`, attributed via an exclusive job group
-    * (gate jobs run eagerly in the calling thread, so they inherit it).
-    * The status store is fed asynchronously off the listener bus, so
-    * poll until the count is stable. */
-  private def jobsDuring(group: String)(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try body finally sc.clearJobGroup()
-    var last = -1
-    var cur = sc.statusTracker.getJobIdsForGroup(group).length
-    var spins = 0
-    while (cur != last && spins < 20) {
-      last = cur; Thread.sleep(200)
-      cur = sc.statusTracker.getJobIdsForGroup(group).length
-      spins += 1
-    }
-    cur
-  }
-
+class R13Spec extends SparkSuite {
   /** One shared DataFrame: spark.read.parquet runs an eager
     * schema-inference job per CALL, which would otherwise be counted
     * by the probe. Reused, no further scan-infra jobs occur at plan
@@ -79,8 +57,6 @@ class R13Spec extends AnyFunSuite {
     assert(n == 1, s"expected exactly 1 ids-only count job, saw $n")
   }
 
-  // ── artifact JSON must be locale-proof (r12 advice) ──
-
   test("jnum formats with Locale.ROOT regardless of the default locale") {
     val prev = java.util.Locale.getDefault
     try {
@@ -92,8 +68,6 @@ class R13Spec extends AnyFunSuite {
       assert(f"${0.4}%.2f" == "0,40")
     } finally java.util.Locale.setDefault(prev)
   }
-
-  // ── wave failure path: scratch must not be stranded (r12 verdict #7) ──
 
   test("a failed wave job reclaims its own shuffle scratch before rethrowing") {
     import org.apache.spark.graftbridge.ShuffleCleanup
@@ -118,8 +92,6 @@ class R13Spec extends AnyFunSuite {
     assert((ShuffleCleanup.liveShuffleIds(sc) intersect created).isEmpty,
       "failed wave stranded its shuffle scratch")
   }
-
-  // ── agg_vendi seam oracle: data → gram matrix → spectrum ──
 
   test("Vendi.kernel is bit-identical to the agg_vendi_gram query's matrix") {
     val dir = "/root/testdata/sf0.001"

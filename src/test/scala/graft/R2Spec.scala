@@ -1,33 +1,21 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Storage
-import graft.ops.dedup._
-import graft.ops.filter._
 import graft.ops.text2sql._
+import graft.ops.dedup.{KCenterGreedyFilter, MinHashDeduplicateFilter,
+  SemDeduplicateFilter, SimHashDeduplicateFilter}
+import graft.ops.filter.AlpagasusFilter
 import graft.serving.{MockServing, ServingScorer}
 
 /** Round-2 seams: JDBC executor-side SQL execution, the SELECT guard,
   * model-scored filters, skew-hardened banding, and plan shape of the
   * LSH semantic dedup. */
-class R2Spec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-  val sf = "/root/testdata/sf0.001"
+class R2Spec extends SparkSuite {
   import spark.implicits._
 
-  private lazy val derbyUrl = {
-    // embedded Derby (ships with Spark) — a real JDBC database, so the
-    // mapPartitions-side connection path is exercised end to end
-    val dir = java.nio.file.Files.createTempDirectory("graft_derby")
-    val url = s"jdbc:derby:${dir.toString}/db;create=true"
-    val conn = java.sql.DriverManager.getConnection(url)
-    val st = conn.createStatement()
-    st.execute("CREATE TABLE t(x INT)")
-    st.execute("INSERT INTO t VALUES (1), (2), (3)")
-    st.close(); conn.close()
-    url.replace(";create=true", "")
-  }
+  private lazy val derbyUrl =
+    derby("CREATE TABLE t(x INT)", "INSERT INTO t VALUES (1), (2), (3)")
 
   test("JdbcSqlBackend executes distinct statements executor-side") {
     val df = Seq(

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Storage
 import graft.ops.text2sql._
 import graft.serving.MockServing
@@ -10,21 +9,11 @@ import graft.serving.MockServing
   * clause tracking in the Spider classifier, stable row ids in the
   * execution classifier, early-termination connection cleanup, and the
   * similarity join demonstrated at a threshold the test data can meet. */
-class R3Spec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-  val sf = "/root/testdata/sf0.001"
+class R3Spec extends SparkSuite {
   import spark.implicits._
 
-  private lazy val derbyUrl = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_derby_r3")
-    val url = s"jdbc:derby:${dir.toString}/db;create=true"
-    val conn = java.sql.DriverManager.getConnection(url)
-    val st = conn.createStatement()
-    st.execute("CREATE TABLE r3t(x INT, s VARCHAR(16))")
-    st.execute("INSERT INTO r3t VALUES (1, 'a'), (2, 'b'), (3, NULL)")
-    st.close(); conn.close()
-    url.replace(";create=true", "")
-  }
+  private lazy val derbyUrl = derby("CREATE TABLE r3t(x INT, s VARCHAR(16))",
+    "INSERT INTO r3t VALUES (1, 'a'), (2, 'b'), (3, NULL)")
 
   test("identical result sets hash identically across both SqlBackends") {
     // same rows via the Spark catalog and via Derby — multi-column so the

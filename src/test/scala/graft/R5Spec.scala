@@ -1,76 +1,55 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-5 gates: JDBC catalog schema-walk, prompt-template bodies driving
   * prompted_filter/refiner, and the single-pass language-ID rewrite. */
-class R5Spec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+class R5Spec extends SparkSuite {
   import spark.implicits._
 
-  // ── SchemaWalk ──────────────────────────────────────────────────────────
-
-  private def memDerby[A](body: String => A): A = {
-    val db = s"r5walk_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val url = s"jdbc:derby:memory:$db;create=true"
-    try body(url)
-    finally {
-      try java.sql.DriverManager.getConnection(s"jdbc:derby:memory:$db;drop=true")
-      catch { case _: java.sql.SQLException => () }
-    }
+  /** Brute-force reference twin of LanguageIdEvaluator.predict. */
+  private def predictRef(text: String): String = {
+    val ws = graft.functions.kernels.splitWords(text.toLowerCase)
+    val langs = graft.ops.text.LanguageIdEvaluator.markers.keys.toSeq.sorted
+    val scores = langs.map(l =>
+      l -> ws.count(graft.ops.text.LanguageIdEvaluator.markers(l).contains(_)))
+    val best = scores.maxBy { case (l, s) => (s, -langs.indexOf(l)) }
+    if (best._2 > 0) best._1 else "und"
   }
 
   test("schema walk renders columns, types, NOT NULL, and primary keys") {
-    memDerby { url =>
-      val conn = java.sql.DriverManager.getConnection(url)
-      val st = conn.createStatement()
-      st.execute("CREATE TABLE users (id INT NOT NULL, name VARCHAR(40), " +
-        "score DECIMAL(7,2), PRIMARY KEY (id))")
-      st.close(); conn.close()
-      val out = graft.ops.text2sql.SchemaWalk.walk(spark, url)
-        .as[(String, String)].collect().toMap
-      assert(out.keySet == Set("USERS"))
-      assert(out("USERS") ==
-        "CREATE TABLE USERS (ID INTEGER NOT NULL, NAME VARCHAR(40), " +
-          "SCORE DECIMAL(7, 2), PRIMARY KEY (ID))")
-    }
+    val url = derby("CREATE TABLE users (id INT NOT NULL, name VARCHAR(40), " +
+      "score DECIMAL(7,2), PRIMARY KEY (id))")
+    val out = graft.ops.text2sql.SchemaWalk.walk(spark, url)
+      .as[(String, String)].collect().toMap
+    assert(out.keySet == Set("USERS"))
+    assert(out("USERS") ==
+      "CREATE TABLE USERS (ID INTEGER NOT NULL, NAME VARCHAR(40), " +
+        "SCORE DECIMAL(7, 2), PRIMARY KEY (ID))")
   }
 
   test("schema walk renders foreign keys referencing the parent table") {
-    memDerby { url =>
-      val conn = java.sql.DriverManager.getConnection(url)
-      val st = conn.createStatement()
-      st.execute("CREATE TABLE dept (id INT NOT NULL PRIMARY KEY)")
-      st.execute("CREATE TABLE emp (id INT NOT NULL PRIMARY KEY, " +
+    val url = derby("CREATE TABLE dept (id INT NOT NULL PRIMARY KEY)",
+      "CREATE TABLE emp (id INT NOT NULL PRIMARY KEY, " +
         "dept_id INT REFERENCES dept (id))")
-      st.close(); conn.close()
-      val out = graft.ops.text2sql.SchemaWalk.walk(spark, url)
-        .as[(String, String)].collect().toMap
-      assert(out.keySet == Set("DEPT", "EMP"))
-      assert(out("EMP").contains("FOREIGN KEY (DEPT_ID) REFERENCES DEPT (ID)"))
-    }
+    val out = graft.ops.text2sql.SchemaWalk.walk(spark, url)
+      .as[(String, String)].collect().toMap
+    assert(out.keySet == Set("DEPT", "EMP"))
+    assert(out("EMP").contains("FOREIGN KEY (DEPT_ID) REFERENCES DEPT (ID)"))
   }
 
   test("schema-walk dim table feeds the text2sql prompt generator") {
-    memDerby { url =>
-      val conn = java.sql.DriverManager.getConnection(url)
-      val st = conn.createStatement()
-      st.execute("CREATE TABLE t_en (x INT NOT NULL, PRIMARY KEY (x))")
-      st.close(); conn.close()
-      val schemas = graft.ops.text2sql.SchemaWalk.walk(spark, url)
-        .withColumn("db_id", lit("en")).select("db_id", "schema_ddl")
-      val qs = Seq(("en", "how many rows?")).toDF("db_id", "question")
-      val out = graft.ops.text2sql.Text2SQLPromptGenerator(
-        "db_id", "question", "prompt", schemas)(qs)
-        .select("prompt").as[String].collect()
-      assert(out.length == 1)
-      assert(out.head.contains("CREATE TABLE T_EN"))
-      assert(out.head.contains("how many rows?"))
-    }
+    val url = derby("CREATE TABLE t_en (x INT NOT NULL, PRIMARY KEY (x))")
+    val schemas = graft.ops.text2sql.SchemaWalk.walk(spark, url)
+      .withColumn("db_id", lit("en")).select("db_id", "schema_ddl")
+    val qs = Seq(("en", "how many rows?")).toDF("db_id", "question")
+    val out = graft.ops.text2sql.Text2SQLPromptGenerator(
+      "db_id", "question", "prompt", schemas)(qs)
+      .select("prompt").as[String].collect()
+    assert(out.length == 1)
+    assert(out.head.contains("CREATE TABLE T_EN"))
+    assert(out.head.contains("how many rows?"))
   }
-
-  // ── prompt-template bodies ──────────────────────────────────────────────
 
   test("prompted_filter builds its prompt from the template body") {
     Ops.registerAll()
@@ -107,8 +86,6 @@ class R5Spec extends AnyFunSuite {
     val out = Seq(("1", "2")).toDF("x", "y").select(c.as("p")).as[String].collect()
     assert(out.head == "a=12")
   }
-
-  // ── pipeline DOT graph ──────────────────────────────────────────────────
 
   test("pipeline toDot renders key-flow edges from producers to consumers") {
     val p = graft.core.Pipeline.of(
@@ -152,8 +129,6 @@ class R5Spec extends AnyFunSuite {
     assert(p.toDot(Seq("doc_id", "text")) == expected)
   }
 
-  // ── vector-SQL (lembed → vec_f32 literal) rewriting ─────────────────────
-
   test("lembed rewriting embeds string literals and splices vec_f32") {
     val sv = graft.serving.MockServing(4)
     val sql = "SELECT * FROM t WHERE emb MATCH lembed('m', 'it''s a test') " +
@@ -178,18 +153,6 @@ class R5Spec extends AnyFunSuite {
     assert(out(2) == "SELECT 2")
   }
 
-  // ── language-ID single-pass rewrite ─────────────────────────────────────
-
-  /** Brute-force reference twin of LanguageIdEvaluator.predict. */
-  private def predictRef(text: String): String = {
-    val ws = graft.functions.kernels.splitWords(text.toLowerCase)
-    val langs = graft.ops.text.LanguageIdEvaluator.markers.keys.toSeq.sorted
-    val scores = langs.map(l =>
-      l -> ws.count(graft.ops.text.LanguageIdEvaluator.markers(l).contains(_)))
-    val best = scores.maxBy { case (l, s) => (s, -langs.indexOf(l)) }
-    if (best._2 > 0) best._1 else "und"
-  }
-
   test("single-pass lang-id matches the brute-force reference on sf0.001") {
     val docs = core.Storage.table(spark, "/root/testdata/sf0.001", "documents")
     val got = docs.select(col("doc_id"),
@@ -212,99 +175,5 @@ class R5Spec extends AnyFunSuite {
       .select(graft.ops.text.LanguageIdEvaluator.predict(col("text")).as("p"))
       .as[String].collect().head
     assert(und == "und")
-  }
-}
-
-/** The constant-fold fast path must be observationally identical to real
-  * execution: same verdicts, same canonical result-set hash. */
-class FoldPathSpec extends org.scalatest.funsuite.AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-  import org.apache.spark.sql.functions._
-  import spark.implicits._
-
-  /** The slow path's encoding, replicated literally: collect(), cell-
-    * encode (arrays/maps/structs element-encode, not toString), join
-    * cells with the U+0001 separator, sha256 over sorted rows. */
-  private def slowHash(sql: String): Option[String] =
-    try {
-      val rows = spark.sql(sql).collect()
-      Some(graft.ops.text2sql.SqlBackend.resultSetHash(rows.toSeq.map(r =>
-        r.toSeq.map(graft.ops.text2sql.SqlBackend.cell)
-          .mkString(graft.ops.text2sql.SqlBackend.CellSep))))
-    } catch { case _: Throwable => None }
-
-  test("foldable statements hash identically to collect()-based execution") {
-    val stmts = Seq(
-      "SELECT 42 AS x",
-      "SELECT 1 + 1 AS x, 'a' || 'b' AS s",
-      "SELECT 1.5 AS d",                       // decimal
-      "SELECT CAST(2.5 AS DOUBLE) AS d",
-      "SELECT NULL AS n",
-      "SELECT DATE'2026-01-01' AS dt",
-      "SELECT TIMESTAMP'2026-01-01 12:00:00' AS ts",
-      "SELECT ARRAY(1, 2, 3) AS a",
-      "SELECT upper('mixed') AS u, length('abc') AS l",
-      "SELECT CAST(7 AS BIGINT) AS b, true AS t")
-    stmts.foreach { q =>
-      val fast = graft.ops.text2sql.SqlExecutor.hashed(spark, q, 5)
-      assert(fast == slowHash(q), s"fold path diverged for: $q")
-    }
-  }
-
-  test("non-foldable and invalid statements behave as before") {
-    Seq((1, "a"), (2, "b")).toDF("x", "s").createOrReplaceTempView("fold_t")
-    val viaView = graft.ops.text2sql.SqlExecutor.hashed(spark,
-      "SELECT x, s FROM fold_t", 5)
-    assert(viaView == slowHash("SELECT x, s FROM fold_t"))
-    assert(graft.ops.text2sql.SqlExecutor.hashed(spark,
-      "SELECT FROM nowhere !!", 5).isEmpty)
-    // multi-row constant relations take the LocalRelation branch
-    val values = "SELECT * FROM VALUES (1, 'a'), (2, 'b') AS t(x, s)"
-    assert(graft.ops.text2sql.SqlExecutor.hashed(spark, values, 5) == slowHash(values))
-  }
-
-  test("SparkSessionBackend never executes non-SELECT statements") {
-    import spark.implicits._
-    spark.sql("CREATE TABLE IF NOT EXISTS guard_victim (x INT) USING parquet")
-    try {
-      val stmts = Seq("DROP TABLE guard_victim", "SELECT 1 AS x").toDF("sql")
-      val out = graft.ops.text2sql.SparkSessionBackend().execute(stmts, "sql", 5)
-        .collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
-      // the DDL must FAIL the verdict (executeQuery parity with the JDBC
-      // backend) and, critically, must not have run on the live catalog
-      assert(!out("DROP TABLE guard_victim"))
-      assert(out("SELECT 1 AS x"))
-      assert(spark.catalog.tableExists("guard_victim"),
-        "backend executed corpus DDL against the live session")
-    } finally spark.sql("DROP TABLE IF EXISTS guard_victim")
-  }
-
-  test("WITH-prefixed DML cannot reach the live session through any path") {
-    import spark.implicits._
-    spark.sql("CREATE TABLE IF NOT EXISTS guard_victim2 (x INT) USING parquet")
-    spark.sql("INSERT INTO guard_victim2 VALUES (1)")
-    try {
-      val sneaky = "WITH s AS (SELECT 2 AS x) INSERT INTO guard_victim2 SELECT x FROM s"
-      // direct executor entry points
-      assert(graft.ops.text2sql.SqlExecutor.hashed(spark, sneaky, 5).isEmpty)
-      // backend sweep (a textual SELECT/WITH prefix check alone would
-      // pass the WITH prefix; the parse-level guard must catch it)
-      val stmts = Seq(sneaky, "SELECT 1 AS x").toDF("sql")
-      val out = graft.ops.text2sql.SparkSessionBackend().execute(stmts, "sql", 5)
-        .collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
-      assert(!out(sneaky))
-      assert(out("SELECT 1 AS x"))
-      assert(spark.sql("SELECT COUNT(*) FROM guard_victim2").head().getLong(0) == 1L,
-        "WITH-prefixed INSERT executed against the live session")
-    } finally spark.sql("DROP TABLE IF EXISTS guard_victim2")
-  }
-
-  test("binary cells hash deterministically and identically on both paths") {
-    val q = "SELECT X'0AFF' AS b, 'tag' AS s"
-    val h1 = graft.ops.text2sql.SqlExecutor.hashed(spark, q, 5)
-    val h2 = graft.ops.text2sql.SqlExecutor.hashed(spark, q, 5)
-    assert(h1.isDefined && h1 == h2)
-    // the canonical cell encoding is hex, never Array.toString identity
-    assert(graft.ops.text2sql.SqlBackend.cell(Array[Byte](10, -1)) == "0x0aff")
   }
 }

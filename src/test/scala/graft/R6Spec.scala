@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.dedup.MinHashDeduplicateFilter
 
 /** Round-6 gates for the minhash verify restructure: the exact Jaccard
@@ -10,8 +8,7 @@ import graft.ops.dedup.MinHashDeduplicateFilter
   * the shape that ran a ×100 scale run (100-way NEAR-dup clusters,
   * where the identical-set collapse cannot fire) out of heap.
   */
-class R6Spec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+class R6Spec extends SparkSuite {
   import spark.implicits._
 
   /** A cluster of near-duplicates that are NOT identical: member i drops

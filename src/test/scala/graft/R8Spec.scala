@@ -1,15 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{Encoders, SparkSession}
 
 /** Round-8 regressions: the bench's per-query cpu/wall attribution
   * signal, and the verify-only gating of the IVF centroid export. */
-class R8Spec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-  val sf = "/root/testdata/sf0.001"
-
+class R8Spec extends SparkSuite {
   test("bench cpuRatio separates stolen wall time from burned cpu") {
     // A query whose wall is mostly time this JVM does NOT run (sleep =
     // the exact shape of externally-stolen time: wall advances, process
@@ -134,22 +130,6 @@ class R8Spec extends AnyFunSuite {
     val defaultKept = roomy(docs).select("doc_id").as[Long].collect().toSet
     val wavedKept = tight(docs).select("doc_id").as[Long].collect().toSet
     assert(wavedKept == defaultKept)
-  }
-
-  /** Deterministic embedding corpus with planted duplicate clusters:
-    * `clusters` groups of `size` near-identical vectors plus `loose`
-    * unrelated ones. */
-  private def plantedEmbeddings(clusters: Int, size: Int,
-      loose: Int): Seq[(Long, Seq[Double])] = {
-    val rnd = new scala.util.Random(7)
-    val bases = (0 until clusters).map(_ => Array.fill(64)(rnd.nextGaussian()))
-    val members = for {
-      c <- 0 until clusters; m <- 0 until size
-    } yield ((c * size + m).toLong,
-      bases(c).map(_ + rnd.nextGaussian() * 0.001).toSeq)
-    val singles = (0 until loose).map(i =>
-      ((100000 + i).toLong, Array.fill(64)(rnd.nextGaussian()).toSeq))
-    members ++ singles
   }
 
   test("sem dedup witness walk matches an independent LSH+cosine replay") {

@@ -1,15 +1,11 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-9 regressions: deterministic (non-GC) wave shuffle reclamation,
   * the emit-once bucket-uniqueness invariant, and the oracled
   * streaming-dedup query. */
-class R9Spec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-  val sf = "/root/testdata/sf0.001"
-
+class R9Spec extends SparkSuite {
   test("ShuffleCleanup removes exactly the snapshot-delta shuffles, synchronously") {
     import org.apache.spark.graftbridge.ShuffleCleanup
     val sc = spark.sparkContext

@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import graft.ops.gen.{ChunkSplitter, ChunkedPromptedGenerator}
 import graft.serving.{LLMMap, MockServing, ServingClient, ServingScorer}
 

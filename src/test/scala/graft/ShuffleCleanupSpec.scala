@@ -2,116 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Deterministic shuffle reclamation (`ShuffleCleanup`) and its use by
-  * MinHash's band waves: a wave removes exactly its own shuffles, on
-  * success and on failure, and a failing cleanup never hides the error
-  * that caused it. */
+/** Deterministic shuffle reclamation (`ShuffleCleanup`) on failure: a
+  * wave that dies before any shuffle lands reclaims nothing, and a
+  * failing cleanup never hides the error that caused it. */
 class ShuffleCleanupSpec extends SparkSuite {
-
-  test("ShuffleCleanup removes exactly the snapshot-delta shuffles, synchronously") {
-    import org.apache.spark.graftbridge.ShuffleCleanup
-    val sc = spark.sparkContext
-    val before = ShuffleCleanup.liveShuffleIds(sc)
-    // a query with a real exchange, lineage-truncated so removal is safe
-    val out = spark.range(10000).toDF("id")
-      .withColumn("g", col("id") % 7)
-      .groupBy("g").agg(count(lit(1)).as("n"))
-      .localCheckpoint()
-    assert(out.count() == 7)
-    val created = ShuffleCleanup.liveShuffleIds(sc) -- before
-    assert(created.nonEmpty, "expected the groupBy to register a shuffle")
-    ShuffleCleanup.removeShuffles(sc, created)
-    // doCleanupShuffle(blocking=true) returns only after unregistration:
-    // the ids must be gone NOW, with no GC in between
-    val after = ShuffleCleanup.liveShuffleIds(sc)
-    assert((after & created).isEmpty,
-      s"shuffles ${after & created} survived a blocking removal")
-    // and the checkpointed result is still readable (its lineage no
-    // longer references the removed shuffles)
-    assert(out.count() == 7)
-  }
-
-  test("waved minhash leaves no wave shuffles registered and matches single-pass") {
-    import org.apache.spark.graftbridge.ShuffleCleanup
-    val docs = core.Storage.table(spark, sf, "documents")
-    val op = graft.ops.dedup.MinHashDeduplicateFilter()
-    val withSh = op.shingled(docs).persist()
-    try {
-      val single = op.duplicateIds(withSh).collect().map(_.getLong(0)).toSet
-      // live shuffles after the shared prologue (index 0) and after each
-      // wave: every wave must reclaim ALL of its own shuffles, so no
-      // post-wave snapshot holds a shuffle the prologue's lacks — one
-      // stranded wave shuffle fails. (The prologue's own shuffles may
-      // go earlier, through ContextCleaner, so the check is a subset.)
-      val before = ShuffleCleanup.liveShuffleIds(spark.sparkContext)
-      val snaps = scala.collection.mutable.ArrayBuffer.empty[Set[Int]]
-      val waved = op.groupedDuplicateIds(withSh, groups = 3, afterWave = g => {
-        assert(g == snaps.length)
-        snaps += ShuffleCleanup.liveShuffleIds(spark.sparkContext) -- before
-      })
-      val got = waved.collect().map(_.getLong(0)).toSet
-      assert(got == single, "waved ids diverge from single-pass")
-      assert(snaps.length == 4, s"expected prologue + 3 wave snapshots: $snaps")
-      snaps.zipWithIndex.tail.foreach { case (s, g) =>
-        assert((s -- snaps.head).isEmpty, s"wave $g left shuffles " +
-          s"${s -- snaps.head} registered (prologue: ${snaps.head})")
-      }
-    } finally withSh.unpersist(false)
-  }
-
-  test("lineageShuffleIds scopes cleanup to the owning query's shuffles") {
-    import org.apache.spark.graftbridge.ShuffleCleanup
-    val sc = spark.sparkContext
-    // a CONCURRENT query's shuffle, registered in the same window a
-    // snapshot-delta cleanup would claim — it must survive
-    val bystander = spark.range(5000).toDF("id")
-      .withColumn("g", col("id") % 11)
-      .groupBy("g").agg(count(lit(1)).as("n"))
-    assert(bystander.count() == 11) // materialize: its shuffle is now live
-    val bystanderIds =
-      ShuffleCleanup.lineageShuffleIds(bystander.queryExecution.toRdd)
-    assert(bystanderIds.nonEmpty)
-    // the "wave": derive its own ids from lineage, checkpoint, remove
-    val wave = spark.range(5000).toDF("id")
-      .withColumn("g", col("id") % 7)
-      .groupBy("g").agg(count(lit(1)).as("n"))
-    val waveIds = ShuffleCleanup.lineageShuffleIds(wave.queryExecution.toRdd)
-    assert(waveIds.nonEmpty && (waveIds & bystanderIds).isEmpty)
-    val ck = wave.localCheckpoint()
-    ShuffleCleanup.removeShuffles(sc, waveIds)
-    val live = ShuffleCleanup.liveShuffleIds(sc)
-    assert((live & waveIds).isEmpty, "wave shuffles must be gone")
-    assert(bystanderIds.subsetOf(live),
-      "a concurrent query's shuffles must survive a wave cleanup")
-    // the bystander's plan still executes against its (intact) shuffle
-    assert(bystander.count() == 11)
-    assert(ck.count() == 7)
-  }
-
-  test("a failed wave job reclaims its own shuffle scratch before rethrowing") {
-    import org.apache.spark.graftbridge.ShuffleCleanup
-    val sc = spark.sparkContext
-    // poison AFTER the exchange: the shuffle map stage completes and
-    // writes real files; the result stage then dies on the marker row —
-    // the executor-loss / disk-full / bad-row failure shape the waves
-    // meet at 100 TB
-    val poison = udf((x: Long) => {
-      if (x == 42L) throw new RuntimeException("poisoned row"); x
-    })
-    val df = spark.range(1000).toDF("id")
-      .repartition(8, col("id")).withColumn("p", poison(col("id")))
-    val before = ShuffleCleanup.liveShuffleIds(sc)
-    // toRdd materializes the AQE shuffle stage, so the files exist NOW
-    val created = ShuffleCleanup.lineageShuffleIds(df.queryExecution.toRdd) -- before
-    assert(created.nonEmpty, "test plan must have registered a shuffle")
-    intercept[Exception] {
-      graft.ops.dedup.MinHashDeduplicateFilter()
-        .checkpointReclaimingOnFailure(df, sc, created)
-    }
-    assert((ShuffleCleanup.liveShuffleIds(sc) intersect created).isEmpty,
-      "failed wave stranded its shuffle scratch")
-  }
-
   test("map-stage death before any shuffle lands: reclamation is a no-op") {
     import org.apache.spark.graftbridge.ShuffleCleanup
     val sc = spark.sparkContext

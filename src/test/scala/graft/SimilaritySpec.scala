@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.ops.sim.Similarity
-import graft.core.Storage
 
 /** Similarity search (`graft.ops.sim`): brute-force, LSH and IVF top-k
   * and the similarity join — exactness against references, the IVF
@@ -125,44 +124,6 @@ class SimilaritySpec extends SparkSuite {
       .select((col("id") % q).as("query_id"), col("id").as("neighbor_id"),
         (round(sin(col("id") * 7919) * 100) / 100).as("cos"))
 
-  /** One shared DataFrame: spark.read.parquet runs an eager
-    * schema-inference job per CALL, which would otherwise be counted
-    * by the probe. Reused, no further scan-infra jobs occur at plan
-    * time. */
-  private lazy val emb: DataFrame =
-    spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-
-  test("top-k aggregation matches window ranking and avoids the window shuffle") {
-    import org.apache.spark.sql.expressions.Window
-    val emb = Storage.table(spark, sf, "embeddings")
-    val queries = emb.filter(col("vec_id") < 5)
-    val got = graft.ops.sim.Similarity
-      .bruteForceTopK(emb, queries, "embedding", "vec_id", k = 7)
-    // reference ranking via window row_number (what the oracle computes)
-    val c = emb.select(col("vec_id").as("neighbor_id"),
-      col("embedding").cast("array<double>").as("ce"))
-    val q = queries.select(col("vec_id").as("query_id"),
-      col("embedding").cast("array<double>").as("qe"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    val want = c.crossJoin(broadcast(q))
-      .where(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", graft.ops.sim.Similarity.cosine(col("qe"), col("ce")))
-      .withColumn("rank", row_number().over(w)).filter(col("rank") <= 7)
-      .select("query_id", "neighbor_id", "rank")
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.as[(Long, Long, Int)].collect().sortBy(r => (r._1, r._3)).toSeq
-    assert(canon(got) == canon(want))
-    // the plan must rank via partial-aggregatable ObjectHashAggregate
-    // (map-side combine bounds the shuffle at k per task per query), with
-    // no Window exchange of the full scored set
-    val plan = got.queryExecution.executedPlan.toString
-    assert(plan.contains("ObjectHashAggregate"), plan.take(600))
-    assert(!plan.contains("Window"), plan.take(600))
-    assert(plan.contains("partial_topkaggregator") ||
-      plan.toLowerCase.contains("partial_topk"), plan.take(600))
-  }
-
   test("partialTopK emits at most k rows per query per task") {
     val k = 5
     val pre = Similarity.partialTopK(scored(300, 40, 8), k)
@@ -215,29 +176,6 @@ class SimilaritySpec extends SparkSuite {
     assert(pre.where(col("query_id").startsWith("q")).count() == pre.count())
   }
 
-  test("IVF top-k with all lists probed equals exact brute force") {
-    // probe-all is centroid-agnostic: every posting list is scanned, so
-    // ranking must match brute force EXACTLY regardless of k-means quality
-    val emb = Storage.table(spark, sf, "embeddings")
-    val queries = emb.filter(col("vec_id") < 5)
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.select("query_id", "neighbor_id", "rank")
-        .as[(Long, Long, Int)].collect().sortBy(r => (r._1, r._3)).toSeq
-    val brute = canon(graft.ops.sim.Similarity
-      .bruteForceTopK(emb, queries, "embedding", "vec_id", k = 5))
-    val ivfAll = canon(graft.ops.sim.Similarity
-      .ivfTopK(emb, queries, "embedding", "vec_id", k = 5,
-        nLists = 8, nProbe = 8))
-    assert(ivfAll == brute)
-    // partial probing returns a subset ranking: every hit it reports must
-    // also be a true brute-force neighbor id for that query
-    val ivf2 = graft.ops.sim.Similarity
-      .ivfTopK(emb, queries, "embedding", "vec_id", k = 5,
-        nLists = 8, nProbe = 2)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect()
-    assert(ivf2.nonEmpty)
-  }
-
   test("ivfTopK exportDir writes one centroid row per list, keyed by corpus count") {
     val dim = 16
     val rows = (0L until 300L).map { i =>
@@ -255,35 +193,6 @@ class SimilaritySpec extends SparkSuite {
     assert(exported.select(size(col("center"))).distinct().as[Int].head() == dim)
   }
 
-  test("IVF centroid export happens only under the verify flag") {
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val nRows = emb.count()
-    val exportPath = java.nio.file.Paths.get(
-      s"/tmp/graft_ivf_centroids/rows_$nRows")
-    def deleteExport(): Unit = if (java.nio.file.Files.exists(exportPath)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(exportPath).iterator().asScala.toSeq
-        .reverse.foreach(java.nio.file.Files.delete)
-    }
-    val run = () => SparkEntry.queries("sim_ivf_topk")(spark, sf).count()
-    val prev = sys.props.remove("graft.ivf.export")
-    try {
-      deleteExport()
-      run() // bench shape: no flag → no export write inside the query
-      assert(!java.nio.file.Files.exists(exportPath),
-        "bench pass wrote the centroid export")
-      sys.props("graft.ivf.export") = "true"
-      run() // verify shape: flag set → oracle input materialized
-      assert(java.nio.file.Files.exists(exportPath),
-        "verify pass did not write the centroid export")
-    } finally {
-      prev match {
-        case Some(v) => sys.props("graft.ivf.export") = v.toString
-        case None    => sys.props.remove("graft.ivf.export")
-      }
-    }
-  }
-
   test("ivfTopK accepts a shuffle-lineage query set on a starved corpus") {
     import graft.ops.sim.Similarity
     val corpus = vecs(400).coalesce(1) // 1 split: gate consults qCount
@@ -297,118 +206,6 @@ class SimilaritySpec extends SparkSuite {
     assert(plan.contains("roundrobin"),
       s"the heal must still fire for a shuffled 1200-row query set:\n$plan")
     assert(res.count() == 1200 * 3)
-  }
-
-  test("lshTopK default (bits=0) equals the old bits=8 below the floor") {
-    import graft.ops.sim.Similarity
-    val emb = core.Storage.table(spark, sf, "embeddings")
-    val q = emb.filter(col("vec_id") < 5)
-    def ranks(bits: Int) =
-      Similarity.lshTopK(emb, q, "embedding", "vec_id", k = 5, bits = bits)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(ranks(0) == ranks(8))
-    assert(ranks(0).nonEmpty)
-  }
-
-  test("explicit bits past the auto cap are honored; negatives refused consistently") {
-    import graft.ops.sim.Similarity
-    import graft.ops.dedup.SemDeduplicateFilter
-    import spark.implicits._
-    val df = (0L until 20L)
-      .map(i => (i, Seq.tabulate(8)(j => (i % 3 + j).toDouble)))
-      .toDF("vec_id", "embedding")
-    // the 24-bit cap bounds the AUTO key space only — a caller may go
-    // wider deliberately (the pre-round-9 accepted surface)
-    val wide = Similarity
-      .similarityJoin(df, "embedding", "vec_id", 0.99, bits = 30, dim = 8)
-      .collect()
-    assert(wide.forall(_.getDouble(2) >= 0.99))
-    intercept[IllegalArgumentException] {
-      Similarity.similarityJoin(df, "embedding", "vec_id", 0.99, bits = -1)
-    }
-    intercept[IllegalArgumentException] {
-      SemDeduplicateFilter("embedding", "vec_id", bits = -1)
-    }
-    intercept[IllegalArgumentException] {
-      Similarity.lshTopK(df, df.limit(1), "embedding", "vec_id", 3, bits = -1)
-    }
-  }
-
-  test("bits >= 64 is refused everywhere; 63 is accepted") {
-    import graft.ops.sim.Similarity
-    import graft.ops.dedup.SemDeduplicateFilter
-    import spark.implicits._
-    val df = (0L until 10L)
-      .map(i => (i, Seq.tabulate(8)(j => (i % 3 + j).toDouble)))
-      .toDF("vec_id", "embedding")
-    intercept[IllegalArgumentException] {
-      Similarity.similarityJoin(df, "embedding", "vec_id", 0.9, bits = 64)
-    }
-    intercept[IllegalArgumentException] {
-      Similarity.lshTopK(df, df.limit(1), "embedding", "vec_id", 3, bits = 64)
-    }
-    intercept[IllegalArgumentException] {
-      SemDeduplicateFilter("embedding", "vec_id", bits = 64)
-    }
-    // kernel boundary guards the SQL-registered surface too
-    intercept[IllegalArgumentException] {
-      graft.functions.kernels.lshBuckets(Seq(1.0, 2.0), 64, 2, 1)
-    }
-    // 63 bits = the full Long width, legal and distinct per table
-    val keys = graft.functions.kernels.lshBuckets(Seq(1.0, -2.0), 63, 2, 2)
-    assert(keys.length == 2 && keys.distinct.length == 2)
-  }
-
-  test("lshTopK past maxBroadcastQueries drops the broadcast and still ranks identically") {
-    import graft.ops.sim.Similarity
-    val emb = core.Storage.table(spark, sf, "embeddings")
-    val q = emb.filter(col("vec_id") < 5)
-    def run(maxB: Long) = Similarity.lshTopK(emb, q, "embedding", "vec_id",
-      k = 5, bits = 8, maxBroadcastQueries = maxB)
-    val guarded = run(2)       // 5 queries > 2 → shuffle fallback
-    val broadcasted = run(100) // default posture for a small query set
-    val planG = guarded.queryExecution.executedPlan.toString
-    val planB = broadcasted.queryExecution.executedPlan.toString
-    assert(!planG.contains("BroadcastHashJoin"),
-      "guarded plan must not broadcast a corpus-sized query side")
-    assert(planB.contains("BroadcastHashJoin"),
-      "small query sets must keep the single-corpus-pass broadcast")
-    def s(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(s(guarded) == s(broadcasted) && s(guarded).nonEmpty)
-  }
-
-  test("lshTopK auto-bits + broadcast gate cost exactly one job") {
-    import graft.ops.sim.Similarity
-    // an exchange-free query side: a global limit would plant a shuffle
-    // INSIDE the counted plan and AQE would materialize it as its own
-    // stage job — a property of the caller's plan, not of the gate
-    val queries = emb.where(col("vec_id") < 20)
-    emb.schema // force any remaining scan infra outside the probe
-    var df: DataFrame = null
-    val n = jobsDuring("r13-lsh-gate") {
-      df = Similarity.lshTopK(emb, queries, "embedding", "vec_id", k = 5)
-    }
-    assert(n == 1, s"expected exactly 1 gate job (combined count), saw $n")
-    assert(df.count() > 0) // the plan the gate produced still runs
-  }
-
-  test("lshTopK explicit bits still gates the broadcast with one query-side job") {
-    import graft.ops.sim.Similarity
-    val queries = emb.where(col("vec_id") < 20)
-    emb.schema
-    val n = jobsDuring("r13-lsh-gate-explicit") {
-      Similarity.lshTopK(emb, queries, "embedding", "vec_id", k = 5, bits = 8)
-    }
-    assert(n == 1, s"expected exactly 1 gate job (query side only), saw $n")
-  }
-
-  test("combined gate count agrees with separate counts (empty query side included)") {
-    import graft.ops.sim.Similarity
-    // 0-row query side: the union carries no side=1 rows, the gate must
-    // read that as qCount=0 (broadcast) and still produce a valid plan
-    val out = Similarity.lshTopK(emb, emb.limit(0), "embedding", "vec_id", k = 3)
-    assert(out.count() == 0)
   }
 
   test("lshTopK auto-bits works over a shuffle-lineage corpus") {
@@ -479,110 +276,5 @@ class SimilaritySpec extends SparkSuite {
     val grouped = vecs(200)
       .groupBy((col("vec_id") % 7).as("g")).count()
     assert(Similarity.oneJobCount(grouped) == 7L)
-  }
-
-  test("similarity join recovers planted near-duplicate pairs") {
-    // 60 well-separated base vectors + 20 planted near-clones (tiny
-    // perturbation -> cos ~ 0.999); multi-table LSH must recover most
-    // planted pairs and the exact verify must admit no false positives
-    val rnd = new scala.util.Random(7)
-    val base = (0 until 60).map(i =>
-      (i.toLong, Array.fill(64)(rnd.nextGaussian())))
-    val clones = (0 until 20).map { i =>
-      val (id, v) = base(i)
-      (100L + id, v.map(x => x + rnd.nextGaussian() * 0.01))
-    }
-    val df = (base ++ clones).map { case (id, v) => (id, v.toSeq) }
-      .toDF("vec_id", "embedding")
-    val pairs = graft.ops.sim.Similarity
-      .similarityJoin(df, "embedding", "vec_id", threshold = 0.98)
-      .select("a", "b").as[(Long, Long)].collect().toSet
-    val planted = (0 until 20).map(i => (i.toLong, 100L + i)).toSet
-    val found = pairs.count(planted.contains)
-    assert(pairs.subsetOf(planted), s"false positives: ${pairs -- planted}")
-    assert(found >= 15, s"recall too low: $found/20") // 8 bits x 4 tables
-  }
-
-  test("similarity join finds real pairs in the synthetic embeddings") {
-    // max pairwise cosine in the synthetic table is ~0.5; at 0.4 there are
-    // ~66 true pairs at sf0.001 — the 6-bit × 8-table configuration must
-    // surface a meaningful (deterministic) subset, and the exact verify
-    // guarantees zero false positives
-    val emb = Storage.table(spark, sf, "embeddings")
-    val pairs = graft.ops.sim.Similarity
-      .similarityJoin(emb, "embedding", "vec_id", threshold = 0.4,
-        bits = 6, tables = 8)
-      .select("a", "b", "cos").as[(Long, Long, Double)].collect()
-    assert(pairs.length > 0, "LSH similarity join found nothing at 0.4")
-    assert(pairs.forall(_._3 >= 0.4))
-  }
-
-  test("similarity join emits each qualifying pair exactly once") {
-    import spark.implicits._
-    // near-identical vectors collide in ALL four tables — under the old
-    // dropDuplicates form each pair reached the pair exchange four times
-    // (~4× the output shuffled, which killed a ×1000 probe on scratch);
-    // emit-once keeps a pair only in its first shared bucket, so the raw
-    // output must already be duplicate-free
-    val df = plantedEmbeddings(clusters = 3, size = 8, loose = 20)
-      .toDF("vec_id", "embedding")
-    val pairs = graft.ops.sim.Similarity
-      .similarityJoin(df, "embedding", "vec_id", threshold = 0.95)
-      .select("a", "b").as[(Long, Long)].collect()
-    assert(pairs.nonEmpty)
-    assert(pairs.length == pairs.toSet.size,
-      s"duplicate pairs in raw output: ${pairs.length} rows, " +
-        s"${pairs.toSet.size} distinct")
-    // and the pair SET is the full planted set within each cluster
-    val expected = (for {
-      c <- 0 until 3; i <- 0 until 8; j <- i + 1 until 8
-    } yield ((c * 8 + i).toLong, (c * 8 + j).toLong)).toSet
-    assert(pairs.toSet == expected,
-      s"missing=${(expected -- pairs.toSet).take(5)} " +
-        s"extra=${(pairs.toSet -- expected).take(5)}")
-  }
-
-  test("CosineLsh bucket arrays are per-row duplicate-free (emit-once invariant)") {
-    // similarityJoin's emit-once pair production assumes a row's bucket
-    // array has one DISTINCT key per table (the "t:code" namespace): a
-    // duplicate key would make "first shared bucket" non-unique and
-    // duplicate (a,b) output pairs with no downstream dedup to catch it.
-    val emb = core.Storage.table(spark, sf, "embeddings")
-    val b = emb.select(
-      graft.ops.sim.CosineLsh.buckets(col("embedding").cast("array<double>"),
-        bits = 8, dim = 64, tables = 4).as("bkts"))
-    val offending = b.filter(size(array_distinct(col("bkts"))) =!= size(col("bkts")))
-    assert(offending.count() == 0)
-    // and the namespace prefix is actually present
-    val prefixes = b.select(explode(col("bkts")).as("k"))
-      .select(split(col("k"), ":").getItem(0).as("t")).distinct()
-      .collect().map(_.getString(0)).toSet
-    assert(prefixes == Set("0", "1", "2", "3"))
-  }
-
-  test("similarityJoin bits=0 auto-sizes buckets and floors at the default") {
-    import graft.ops.sim.Similarity
-    // the formula: constant-occupancy sizing with floor 8 / cap 24
-    assert(Similarity.autoBits(1000) == 8)        // small corpus → floor
-    assert(Similarity.autoBits(200000) == 8)      // ×100 scale → still 8
-    assert(Similarity.autoBits(2000000) == 11)    // ×1000 → ceil(log2(1953))
-    assert(Similarity.autoBits(2000000000L) == 21)
-    assert(Similarity.autoBits(Long.MaxValue) == 24) // cap
-    // below the floor, auto ≡ the bits=8 default: identical pair sets
-    val emb = core.Storage.table(spark, sf, "embeddings")
-    def pairs(bits: Int) =
-      Similarity.similarityJoin(emb, "embedding", "vec_id", 0.4, bits = bits,
-        tables = 16).select("a", "b").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs(0) == pairs(8))
-  }
-
-  test("similarityJoin auto path costs exactly one count job for both knobs") {
-    import graft.ops.sim.Similarity
-    emb.schema
-    val n = jobsDuring("r13-simjoin-gate") {
-      Similarity.similarityJoin(emb, "embedding", "vec_id", 0.4)
-    }
-    assert(n == 1, s"expected exactly 1 ids-only count job, saw $n")
   }
 }

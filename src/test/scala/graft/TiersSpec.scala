@@ -7,11 +7,8 @@ import graft.ops.sim.Similarity
 import graft.ops.text2sql._
 import graft.serving.MockServing
 import graft.streaming.Streaming
-import graft.ops.filter.AlpagasusFilter
-import graft.serving.ServingScorer
 
 class TiersSpec extends SparkSuite {
-  import spark.implicits._
   val mock = MockServing()
 
   test("prompted generator appends deterministic mock output") {
@@ -258,47 +255,5 @@ class TiersSpec extends SparkSuite {
     val out = graft.ops.multimodal.ImageDecodeDouble("payload")(docs)
     val dims = out.select(col("decoded.width"), col("decoded.height")).as[(Int, Int)].collect()
     assert(dims.forall { case (w, h) => w >= 1 && w <= 640 && h >= 1 && h <= 480 })
-  }
-
-  test("model-scored filter keeps rows inside the threshold band") {
-    val df = Seq((1L, "x" * 30), (2L, "y" * 55), (3L, "z" * 99))
-      .toDF("doc_id", "text")
-    // mock score = (len % 100) / 10 → 3.0, 5.5, 9.9
-    val kept = AlpagasusFilter("text", ServingScorer(MockServing()))(df)
-      .select("doc_id").as[Long].collect().sorted
-    assert(kept.toSeq == Seq(1L)) // 3.0 in [3,5]; 5.5 out; 9.9 out
-  }
-
-  test("multi-turn generator unrolls a second turn for incomplete dialogs") {
-    import graft.ops.conversations.MultiTurnConversationGenerator
-    val df = Seq(
-      (0L, "do <final>done</final> now", "fn-0"),   // completes in turn 1
-      (1L, "call <func_call>f1</func_call> go", "fn-1") // loops twice
-    ).toDF("doc_id", "task", "functions")
-    val out = MultiTurnConversationGenerator("task", Seq(), "functions",
-      MockServing(), maxTurns = 2)(df)
-      .select(col("doc_id"), transform(col("conversations"),
-        x => x("role")).as("roles"))
-      .as[(Long, Seq[String])].collect().toMap
-    // final row: user + assistant only, turn 2 discarded
-    assert(out(0L) == Seq("user", "assistant"))
-    // looping row: user + (assistant, tool) × 2
-    assert(out(1L) == Seq("user", "assistant", "tool", "assistant", "tool"))
-  }
-
-  test("stream_dedup_horizon query matches its batch replay") {
-    val q = SparkEntry.queries("stream_dedup_horizon")
-    val got = q(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val events = core.Storage.table(spark, sf, "events")
-    val ns = graft.streaming.Streaming.tsEpochNanos(events)
-    val bounds = events.agg(min(ns), max(ns)).head()
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-    val want = events.withColumn("__ns", ns)
-      .select(expr(s"least((__ns - ${lo}L) * 3 div ${hi - lo + 1}L, 2L)").as("tier"),
-        col("user_id"))
-      .distinct().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == want)
-    assert(got.nonEmpty)
   }
 }
