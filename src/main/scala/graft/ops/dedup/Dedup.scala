@@ -111,6 +111,7 @@ final case class MinHashDeduplicateFilter(inputKey: String = "text",
   private val shingleHashes = {
     val nn = ngram
     udf { ws: Seq[String] => graft.functions.kernels.shingleHashes(ws, nn) }
+      .withName(MinHashDeduplicateFilter.ShingleUdf)
   }
 
   /** Band bucket keys from the hashed shingle set (LSH pruning only) —
@@ -128,91 +129,116 @@ final case class MinHashDeduplicateFilter(inputKey: String = "text",
     udf { hs: Seq[Long] => graft.functions.kernels.minhashBandKeysPacked(hs, np, nb) }
   }
 
-  def apply(df: DataFrame): DataFrame = {
-    // The shingle table feeds the identical-set window, the banding pass,
-    // and BOTH sides of the pair verify — uncached, each consumer re-runs
-    // the shingle hashing over the whole corpus. Persist it, materialize
-    // the duplicate ids eagerly, release. DISK_ONLY, same reasoning as
-    // repsB below: this table is corpus-sized (~8 B × every shingle), so
-    // at the scales where caching matters its MEMORY_AND_DISK batches
-    // crowd the heap while the downstream window-sort + band-key stage
-    // (full-corpus sort pages + UDF churn + cache builders) already runs
-    // near the GC ceiling — a ×1000 (5M-doc, 378M-shingle) probe on an
-    // 8 GiB / 32-thread JVM died of GC-overhead-limit in exactly that
-    // stage. At small SF the OS page cache serves the re-reads at memory
-    // speed anyway, so DISK_ONLY costs nothing locally.
-    //
-    // EXECUTOR SIZING (round-11 probe matrix, ×1000 = 5M docs / 378M
-    // shingles, ParallelGC): the stage's live set is the UNIFIED-POOL
-    // sort pages of the identical-set window (the pool fills to its
-    // cap, ~0.6×heap by default, before spilling) PLUS ~85 MB per
-    // executor thread of UNTRACKED allocations (DISK_ONLY columnar
-    // batch builders, shuffle fetch buffers, window-partition row
-    // copies). GC-overhead death when live exceeds ~90% of heap, i.e.
-    //   heap ≳ 3.3 × threads × 85 MB   (at default memory fraction)
-    // Measured: 8 GiB/32t dies (live 7.3/7.8 GB, 99 back-to-back full
-    // GCs); 12 GiB/32t and 16 GiB/32t complete; 8 GiB/32t ALSO
-    // completes with spark.memory.fraction=0.35 (pool capped at
-    // 2.6 GB → live ~5.4 GB — the escape hatch for heap-starved
-    // executors, at the price of extra window-sort spill I/O). The
-    // old "≥500 MB/thread" rule from round 9 was a coincidence of the
-    // two probed points; the pool term does not scale with threads.
-    // Per-thread overhead grows with document shingle count (~75 here).
-    val withSh = shingled(df)
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    try {
-      val groups = bandGroupCount(withSh)
-      val dups = (
-        if (groups <= 1) duplicateIds(withSh)
-        else groupedDuplicateIds(withSh, groups)
-      ).localCheckpoint() // eager: one id column — lets apply() unpersist
-      df.join(dups, Seq(orderKey), "left_anti")
-    } finally withSh.unpersist(false)
+  /** Single wave ⇒ lazy plan. When the banded table fits the scratch
+    * budget in one wave, the result is `df ⋉̸ duplicateIds(shingled(df))`
+    * (left anti join on `orderKey`): a plan built with no Spark job, no
+    * cache and no checkpoint, so a [[graft.core.Pipeline]] runs it inside
+    * its one action. The wave decision comes from [[bandedBytesBound]]
+    * (file metadata, no job) when the plan can be bounded, and otherwise
+    * from [[bandGroupCount]] (one agg job over the shingle table); a single
+    * measured wave returns the same lazy plan.
+    *
+    * Wave regime only: the shingle table is persisted DISK_ONLY (it feeds
+    * the identical-set collapse and every wave) and
+    * [[groupedDuplicateIds]] materializes the ids wave by wave. Memory
+    * there: the identical-set window's sort pages fill the unified pool
+    * (~0.6 × heap) on top of ~85 MB per executor thread of untracked
+    * buffers (DISK_ONLY batch builders, shuffle fetch buffers), so size
+    * the heap to ≳ 3.3 × threads × 85 MB or cap the pool with
+    * `spark.memory.fraction` (a 5M-doc, 378M-shingle corpus died of GC
+    * overhead at 8 GiB / 32 threads and completed at 12 GiB, or at 8 GiB
+    * with `spark.memory.fraction=0.35`). */
+  def apply(df: DataFrame): DataFrame =
+    if (bandedBytesBound(df, scratchBudget(df.sparkSession)).isDefined)
+      lazyPlan(df)
+    else {
+      val groups = bandGroupCount(shingled(df))
+      if (groups <= 1) lazyPlan(df)
+      else {
+        val withSh = shingled(df)
+          .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+        // the wave ids are checkpointed, so the result outlives the cache
+        try df.join(groupedDuplicateIds(withSh, groups), Seq(orderKey),
+          "left_anti")
+        finally withSh.unpersist(false)
+      }
+    }
+
+  private def lazyPlan(df: DataFrame): DataFrame =
+    df.join(duplicateIds(shingled(df)), Seq(orderKey), "left_anti")
+
+  /** The budget a wave's scratch must fit: `scratchBudgetBytes`, or by
+    * default half the free space of the shuffle disk
+    * ([[MinHashDeduplicateFilter.autoScratchBudget]]) — waves trade wall
+    * for bounded scratch, so the default tracks the disk they protect. */
+  private def scratchBudget(spark: org.apache.spark.sql.SparkSession): Long =
+    if (scratchBudgetBytes > 0) scratchBudgetBytes
+    else MinHashDeduplicateFilter.autoScratchBudget(spark)
+
+  /** On-disk bytes of the banded table: 8 B per shingle hash plus ~48 B
+    * per row of band key, id and row headers, once per band, ×2 because a
+    * wave holds the band exchange's shuffle files and the reduce-side
+    * (band, orderKey) sort's spill of them at once. */
+  private def bandedBytes(shEntries: Long, rows: Long): Long =
+    (shEntries * 8L + rows * 48L) * bands * 2L
+
+  /** An upper bound on [[bandedBytes]] read from the scanned files'
+    * metadata, with no Spark job; None when the plan cannot be bounded or
+    * the bound passes `limit` (the footer reads stop there).
+    *
+    * Plan walk: from `inputKey` down the analyzed plan, through the nodes
+    * that never add rows or values — Project, Filter, Sort, Window,
+    * Repartition, Distinct, Deduplicate, Limit, SubqueryAlias, hints and
+    * the left side of a left-semi/anti join — to one string column of a
+    * parquet scan. A projection on the way may rewrite the key only with a
+    * deterministic expression of that one column and no UDF, `repeat`,
+    * `lpad` or `rpad`. Anything else — a non-file leaf, Generate, Union,
+    * Expand, Aggregate, any other join — cannot be bounded.
+    *
+    * Bound: a row's shingles are at most its words, and a text of c bytes
+    * holds at most (c + 1) / 2 words, so the banded shingles are at most
+    * G × B / 2 + R, where R is the footers' row count and B the column's
+    * uncompressed bytes. G = [[MinHashDeduplicateFilter.TextGrowth]] = 2
+    * is the assumed growth: all rewrites together lengthen the text at
+    * most ×2. The refiners strip, unescape, collapse or case-fold (a
+    * case-fold can double a character's bytes; a contraction expands by
+    * half). Only identical-set representatives are banded, one per
+    * distinct shingle set, and the key is a deterministic function of one
+    * column, so a dictionary page that stores each distinct value once
+    * still covers them. A DELTA_BYTE_ARRAY chunk, which stores shared
+    * prefixes once, cannot be bounded. */
+  private[graft] def bandedBytesBound(df: DataFrame,
+      limit: Long = Long.MaxValue): Option[Long] = {
+    def bound(rows: Long, bytes: Long): Long =
+      bandedBytes(bytes * MinHashDeduplicateFilter.TextGrowth / 2 + rows, rows)
+    MinHashDeduplicateFilter.textSource(df, inputKey)
+      .flatMap { case (fs, c) =>
+        MinHashDeduplicateFilter.parquetTextBytes(fs, c, bound(_, _) > limit)
+      }
+      .map { case (rows, bytes) => bound(rows, bytes) }
   }
 
   /** How many sequential band waves to split the LSH pass into, from the
-    * measured shingle volume. The band exchange replicates each doc's
-    * shingle array once per band, so the banded table is ~bands ×
-    * corpus-shingle bytes — LINEAR in corpus size but with a ×32
-    * constant: a 5M-doc ×1000 probe needed ~105 GB of shuffle scratch
-    * and died on a 70 GB-free disk while the same plan at ×100 (a tenth
-    * the corpus) ran fine. Splitting the band set into waves divides the
-    * PEAK footprint by the wave count at unchanged total bytes: every
-    * band bucket lives wholly inside one wave, so the union of the
-    * waves' verified pairs is EXACTLY the single-pass candidate set
-    * (grouping is a partition of bands, not an approximation).
-    * One small agg over the already-persisted shingle table; corpora
-    * under the budget keep the single-job plan bit for bit.
-    *
-    * The budget governs a wave's PEAK on-disk bytes, which under the
-    * witness walk is ~2× the wave's banded-table slice, not 1×: the wave
-    * holds the band exchange's shuffle files (1×) plus the reduce-side
-    * (__band, orderKey) sort's spill (≤1× — it re-spills the fetched
-    * slice), and neither can be reclaimed until the wave's job finishes. */
+    * measured shingle volume ([[bandedBytes]] over the budget, clamped to
+    * [1, bands]). The band exchange replicates each doc's shingle array
+    * once per band, so the banded table is ~bands × corpus-shingle bytes;
+    * splitting the band set into waves divides the PEAK footprint by the
+    * wave count at unchanged total bytes. Every band bucket lives wholly
+    * inside one wave, so the union of the waves' verified pairs is
+    * EXACTLY the single-pass candidate set. One agg job over `withSh`. */
   private[graft] def bandGroupCount(withSh: DataFrame): Int = {
     val row = withSh.agg(
       sum(size(col("__sh"))).cast("long"), count(lit(1))).first()
     val shEntries = if (row.isNullAt(0)) 0L else row.getLong(0)
     val rows = row.getLong(1)
-    // the budget defends a REAL disk, so by default it tracks that disk:
-    // waves trade wall for bounded scratch (×1000 paid ×23.6 wall at a
-    // 24 GiB constant that ignored the machine), and a constant budget
-    // on a roomier disk serializes waves for no protection at all.
-    // Explicit scratchBudgetBytes overrides for shared-disk deployments.
-    val budget =
-      if (scratchBudgetBytes > 0) scratchBudgetBytes
-      else MinHashDeduplicateFilter.autoScratchBudget(withSh.sparkSession)
-    // 8 B per shingle hash + ~48 B/row of band key, id, and row headers,
-    // ×2 concurrent on-disk copies per wave (band exchange + walk sort
-    // spill — see the scaladoc)
-    val bandedBytes = (shEntries * 8L + rows * 48L) * bands * 2L
-    val g = ((bandedBytes + budget - 1) / budget).toInt
-    val groups = math.max(1, math.min(bands, g))
+    val budget = scratchBudget(withSh.sparkSession)
+    val banded = bandedBytes(shEntries, rows)
+    val groups = math.max(1L, math.min(bands.toLong, (banded + budget - 1) / budget)).toInt
     // scale-evidence breadcrumb: when waves engage, record the estimate
     // that sized them (stdout JSON so bench harnesses that keep only
     // "metric" lines capture it; silent in the common single-pass case)
     if (groups > 1) println(s"""{"metric":"minhash_waves","rows":$rows,""" +
-      s""""shingle_entries":$shEntries,"estimated_scratch_bytes":$bandedBytes,""" +
+      s""""shingle_entries":$shEntries,"estimated_scratch_bytes":$banded,""" +
       s""""budget_bytes":$budget,"groups":$groups}""")
     groups
   }
@@ -221,9 +247,8 @@ final case class MinHashDeduplicateFilter(inputKey: String = "text",
   private[graft] def shingled(df: DataFrame): DataFrame =
     df.select(col(orderKey), shingleHashes(words(col(inputKey))).as("__sh"))
 
-  /** The ids to drop, as a lazily-planned single-column DataFrame —
-    * split from apply() so plan lints can inspect the exchanges before
-    * the eager checkpoint erases them. */
+  /** The ids to drop, as a lazily-planned single-column DataFrame: the
+    * single-wave plan's dup-id side. */
   private[graft] def duplicateIds(withSh: DataFrame): DataFrame = {
     val (identDups, reps) = collapseIdentical(withSh)
     val banded = reps.withColumn("__band", explode(bandKeys(col("__sh"))))
@@ -379,6 +404,104 @@ final case class MinHashDeduplicateFilter(inputKey: String = "text",
 }
 
 object MinHashDeduplicateFilter {
+  import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute,
+    StringLPad, StringRPad, StringRepeat, UserDefinedExpression}
+  import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
+  import org.apache.spark.sql.catalyst.plans.logical.{Deduplicate, Distinct,
+    Filter, GlobalLimit, Join, LocalLimit, LogicalPlan, Project, Repartition,
+    RepartitionByExpression, ResolvedHint, Sort, SubqueryAlias,
+    Window => WindowNode}
+  import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+    LogicalRelation, PartitioningAwareFileIndex}
+  import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+  import org.apache.spark.sql.internal.SQLConf
+  import org.apache.spark.sql.types.StringType
+
+  /** How much the projections between the scan and the dedup may
+    * lengthen the key's text in total, as assumed by
+    * `bandedBytesBound`. */
+  private[graft] val TextGrowth: Long = 2L
+
+  /** The shingle UDF's name in plans. */
+  private[graft] val ShingleUdf = "minhash_shingles"
+
+  /** The parquet relation and data column that `key` of `df` is computed
+    * from, walking the analyzed plan through the nodes `bandedBytesBound`
+    * lists; None when the walk meets any other node. */
+  private def textSource(df: DataFrame,
+      key: String): Option[(HadoopFsRelation, String)] = {
+    val plan = df.queryExecution.analyzed
+    plan.output.find(a => SQLConf.get.resolver(a.name, key))
+      .flatMap(source(plan, _))
+  }
+
+  private def source(plan: LogicalPlan,
+      key: Attribute): Option[(HadoopFsRelation, String)] = plan match {
+    case Project(list, child) => list.find(_.exprId == key.exprId).flatMap {
+      case a: Attribute => source(child, a)
+      case Alias(e, _) if e.deterministic && !e.exists {
+          case _: UserDefinedExpression | _: StringRepeat | _: StringLPad |
+              _: StringRPad => true
+          case _ => false
+        } => e.references.toSeq match {
+          case Seq(a) => source(child, a)
+          case _ => None
+        }
+      case _ => None
+    }
+    case j: Join if j.joinType == LeftSemi || j.joinType == LeftAnti =>
+      through(j.left, key)
+    case _: Filter | _: Sort | _: WindowNode | _: Repartition |
+        _: RepartitionByExpression | _: Distinct | _: Deduplicate |
+        _: GlobalLimit | _: LocalLimit | _: SubqueryAlias | _: ResolvedHint =>
+      through(plan.children.head, key)
+    case r: LogicalRelation => r.relation match {
+      case fs: HadoopFsRelation if fs.fileFormat.isInstanceOf[ParquetFileFormat] &&
+          key.dataType == StringType && r.output.exists(_.exprId == key.exprId) &&
+          !fs.partitionSchema.exists(f => SQLConf.get.resolver(f.name, key.name)) =>
+        Some((fs, key.name))
+      case _ => None
+    }
+    case _ => None
+  }
+
+  private def through(child: LogicalPlan,
+      key: Attribute): Option[(HadoopFsRelation, String)] =
+    if (child.outputSet.contains(key)) source(child, key) else None
+
+  /** (rows, uncompressed bytes of `column`) summed over the footers of
+    * `fs`'s files, read on the driver. None when the file list is not
+    * already in memory, a chunk of the column is DELTA_BYTE_ARRAY-encoded,
+    * or `stop(rows, bytes)` holds for a running total. */
+  private def parquetTextBytes(fs: HadoopFsRelation, column: String,
+      stop: (Long, Long) => Boolean): Option[(Long, Long)] = fs.location match {
+    case index: PartitioningAwareFileIndex =>
+      import scala.jdk.CollectionConverters._
+      val conf = fs.getHadoopConf(fs.sparkSession, fs.options)
+      var rows = 0L
+      var bytes = 0L
+      val files = index.allFiles().iterator
+      var ok = true
+      while (ok && files.hasNext) {
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(files.next(), conf))
+        try reader.getFooter.getBlocks.asScala.foreach { block =>
+          rows += block.getRowCount
+          block.getColumns.asScala.foreach { chunk =>
+            val path = chunk.getPath.toArray
+            if (path.length == 1 && SQLConf.get.resolver(path(0), column)) {
+              if (chunk.getEncodings.contains(
+                  org.apache.parquet.column.Encoding.DELTA_BYTE_ARRAY)) ok = false
+              bytes += chunk.getTotalUncompressedSize
+            }
+          }
+        } finally reader.close()
+        ok = ok && !stop(rows, bytes)
+      }
+      if (ok) Some((rows, bytes)) else None
+    case _ => None
+  }
+
   /** Used when the shuffle-dir free space can't be measured (statfs
     * unavailable, misconfigured dir) — the round-8/9 constant, proven to
     * complete at ×1000. */
@@ -688,13 +811,21 @@ object Dedup {
     * interchangeable under keep-first semantics, so keeping only the
     * representative is exact — any row the walk would drop via a
     * collapsed member it also drops via that member's (earlier)
-    * representative. A null key is one group like any other value. */
+    * representative. A null key is one group like any other value.
+    *
+    * Both outputs filter one marked table, so their plans share one key
+    * computation and one exchange (the second branch reuses it). The
+    * first row is marked by a null `lag`, not by `row_number() === 1`:
+    * Spark adds a group limit below a rank-like filter on that branch
+    * only, the two exchanges then differ, and the key is computed and
+    * shuffled twice. Rows tied on orderKey carry the same id and key, so
+    * which of them is marked first changes neither output. */
   private[graft] def collapseIdentical(df: DataFrame, key: String,
       orderKey: String): (DataFrame, DataFrame) = {
     val w = Window.partitionBy(col(key)).orderBy(col(orderKey))
-    val ranked = df.withColumn("__rn", row_number().over(w))
-    (ranked.filter(col("__rn") > 1).select(col(orderKey)),
-      ranked.filter(col("__rn") === 1).drop("__rn"))
+    val marked = df.withColumn("__first", lag(lit(1), 1).over(w).isNull)
+    (marked.filter(!col("__first")).select(col(orderKey)),
+      marked.filter(col("__first")).drop("__first"))
   }
 
   /** The ids of rows `similar` to an earlier row in a shared bucket — the

@@ -299,8 +299,10 @@ object Similarity {
     * exact-ranked results inside the probed lists; centroid quality only
     * shapes recall at a given `nProbe`. A sample with fewer distinct
     * vectors than `nLists` yields fewer lists; an empty one yields none
-    * (and an empty result). A null corpus vector is never a neighbour and
-    * a null query vector gets no rows.
+    * and an empty result, with no error — as for a corpus whose every
+    * vector is NaN, since non-finite rows never enter the sample. A null
+    * corpus vector is never a neighbour and a null query vector gets no
+    * rows.
     *
     * `exportDir`: when set, the trained centroids are written to
     * `$exportDir/rows_<corpusCount>` as (list_id, center, sf_rows) —
@@ -355,8 +357,9 @@ object Similarity {
     // job, paid only when the corpus is narrow.
     val cProbe = Partitioning.spread("ivfTopK", c.where(col("__ce").isNotNull))(
       oneJobCount(q) >= MinHealQueries)
+    // get, not (0): with no centres the list is empty and the row joins nothing
     val assigned = cProbe.withColumn("__list",
-      nearestLists(col("__ce"), lit(1))(0))
+      get(nearestLists(col("__ce"), lit(1)), lit(0)))
     val probed = q.withColumn("__list",
       explode(nearestLists(col("__qe"), lit(nProbe))))
     val scored = assigned.join(broadcast(probed), Seq("__list"))

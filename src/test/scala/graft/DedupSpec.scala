@@ -1,8 +1,14 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row}
-import graft.ops.dedup.{Dedup, MinHashDeduplicateFilter, SemDeduplicateFilter,
-  SimHashDeduplicateFilter}
+import org.apache.spark.sql.functions._
+import graft.core.{Op, Pipeline}
+import graft.ops.dedup.{Dedup, HashDeduplicateFilter, MinHashDeduplicateFilter,
+  SemDeduplicateFilter, SimHashDeduplicateFilter}
+import graft.ops.filter.{MeanWordLengthFilter, SpecialCharacterFilter,
+  WatermarkFilter, WordNumberFilter}
+import graft.ops.refine.{HtmlEntityRefiner, HtmlUrlRemoverRefiner,
+  LowercaseRefiner, RemoveExtraSpacesRefiner, RemoveStopwordsRefiner}
 
 /** Dedup (`graft.ops.dedup`): the shared witness walk and identical-set
   * collapse in [[Dedup]], and the MinHash, SimHash and semantic filters
@@ -267,6 +273,90 @@ class DedupSpec extends SparkSuite {
       val kept = SemDeduplicateFilter("embedding", "vec_id", mode = mode)(df)
         .select("vec_id").as[Long].collect().sorted.toSeq
       assert(kept == Seq(5L, 5L, 7L), s"mode $mode kept $kept")
+    }
+  }
+
+  /** A parquet corpus with a near-duplicate cluster, exact clones and
+    * unique documents, some with markup the refiners strip; read back so
+    * the dedup sees a file scan. */
+  private lazy val curateInput: DataFrame = {
+    val base = (0 until 80).map(t => s"tok$t")
+    val nearDups = (0L until 60L).map { i =>
+      (i, base.zipWithIndex.collect { case (w, p) if p != (i % 80).toInt => w }
+        .mkString(if (i % 2 == 0) " " else " &amp; "))
+    }
+    val clones = (100L until 140L).map(i =>
+      (i, "the same exact text with http://example.org/x links " * 6))
+    val uniques = (200L until 260L).map(i =>
+      (i, (0 until 30).map(k => s"word${i * 31 + k * 7}").mkString(" ")))
+    val path = tempDir("graft_curate").resolve("docs.parquet").toString
+    (nearDups ++ clones ++ uniques).toDF("doc_id", "text")
+      .coalesce(2).write.parquet(path)
+    spark.read.parquet(path)
+  }
+
+  /** The ops of a pretrain-curation pipeline: refiners, rule filters,
+    * exact, MinHash and SimHash dedup. */
+  private val curateOps: Seq[Op] = Seq(HtmlUrlRemoverRefiner(),
+    HtmlEntityRefiner(), RemoveStopwordsRefiner(), LowercaseRefiner(),
+    RemoveExtraSpacesRefiner(), WordNumberFilter(minWords = 20),
+    WatermarkFilter(), MeanWordLengthFilter(minLen = 3.0, maxLen = 10.0),
+    SpecialCharacterFilter(), HashDeduplicateFilter(Seq("text"), "doc_id"),
+    MinHashDeduplicateFilter("text", "doc_id"),
+    SimHashDeduplicateFilter("text", "doc_id"))
+
+  /** The plan reads a cache or a checkpoint. */
+  private def materialized(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.exists {
+      case _: org.apache.spark.sql.execution.LogicalRDD => true
+      case _: org.apache.spark.sql.execution.columnar.InMemoryRelation => true
+      case _ => false
+    }
+
+  test("minhash single-wave plan builds with no job, alone and in a 12-op pipeline") {
+    val src = curateInput
+    val op = MinHashDeduplicateFilter("text", "doc_id")
+    var out: DataFrame = null
+    assert(jobsDuring("minhash-lazy-op") { out = op(src) } == 0)
+    assert(!materialized(out), out.queryExecution.optimizedPlan)
+    var piped: DataFrame = null
+    assert(jobsDuring("minhash-lazy-pipeline") { piped = Pipeline(curateOps)(src) } == 0)
+    assert(!materialized(piped))
+    assert(keptIds(out).size < 160 && keptIds(piped).nonEmpty)
+    // the footer bound covers the measured banded bytes, raw and refined
+    Seq(src, Pipeline(curateOps.take(9))(src)).foreach { in =>
+      val r = op.shingled(in).agg(sum(size(col("__sh"))).cast("long"),
+        count(lit(1))).first()
+      val measured = (r.getLong(0) * 8L + r.getLong(1) * 48L) * op.bands * 2L
+      val bound = op.bandedBytesBound(in)
+      assert(bound.exists(_ >= measured), s"bound $bound < measured $measured")
+    }
+  }
+
+  test("minhash with a one-byte scratch budget runs the waves and keeps the lazy plan's ids") {
+    val src = curateInput
+    val op = MinHashDeduplicateFilter("text", "doc_id")
+    val lazyKept = keptIds(op(src))
+    val tight = op.copy(scratchBudgetBytes = 1L)
+    var waved: DataFrame = null
+    assert(jobsDuring("minhash-waves") { waved = tight(src) } > tight.bands)
+    assert(materialized(waved), "no wave checkpoint in the plan")
+    assert(keptIds(waved) == lazyKept)
+  }
+
+  test("minhash over an explode or a union upstream measures, stays lazy and keeps the same ids") {
+    val src = curateInput
+    val op = MinHashDeduplicateFilter("text", "doc_id")
+    val lazyKept = keptIds(op(src))
+    val inputs = Seq(
+      "explode" -> src.withColumn("__x", explode(array(lit(1)))).drop("__x"),
+      "union" -> src.union(src.limit(0)))
+    inputs.foreach { case (name, in) =>
+      assert(op.bandedBytesBound(in).isEmpty, name)
+      var out: DataFrame = null
+      assert(jobsDuring(s"minhash-measured-$name") { out = op(in) } >= 1, name)
+      assert(!materialized(out), name)
+      assert(keptIds(out) == lazyKept, name)
     }
   }
 }

@@ -1,6 +1,13 @@
 package graft
 
 import graft.core.Storage
+import graft.ops.dedup.MinHashDeduplicateFilter
+import org.apache.spark.sql.catalyst.expressions.{Expression, ScalaUDF}
+import org.apache.spark.sql.execution.{ProjectExec, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 
 /** Plan-quality assertions: the 100 TB story is only real if the plans
   * hold — pruned scans, pushed filters, broadcast dims, bucketed joins
@@ -40,23 +47,48 @@ class PlanSpec extends SparkSuite {
     assert(exchanges == 1, s"expected 1 shuffle, got $exchanges")
   }
 
-  test("simhash dedup plan has no sort-merge join and hashes text in at most 2 scans") {
-    import org.apache.spark.sql.execution.ProjectExec
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
-    val root = SparkEntry.queries("dedup_simhash")(spark, sf)
-      .queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan // AQE hides its tree
-        case p => p
-      }
-    val smj = root.collect { case j: SortMergeJoinExec => j }
-    assert(smj.isEmpty, s"sort-merge joins in the simhash plan:\n$root")
-    val hashing = root.collect {
-      case p: ProjectExec if p.projectList.exists(
-        _.exists(_.isInstanceOf[graft.functions.SimHash60])) => p
+  /** The nodes of `df`'s final physical plan after running it: through
+    * AQE query stages, but not into a reused exchange, whose work runs
+    * once under its first use. */
+  private def executedNodes(df: org.apache.spark.sql.DataFrame): Seq[SparkPlan] = {
+    df.collect()
+    def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case s: QueryStageExec => walk(s.plan)
+      case _: ReusedExchangeExec => Nil
+      case _ => p.children.flatMap(walk)
+    })
+    walk(df.queryExecution.executedPlan)
+  }
+
+  /** Projections in `nodes` that compute an expression matching `f`. */
+  private def computing(nodes: Seq[SparkPlan])(
+      f: PartialFunction[Expression, Boolean]): Seq[ProjectExec] = nodes.collect {
+    case p: ProjectExec if p.projectList.exists(_.exists(f.applyOrElse(_, (_: Expression) => false))) => p
+  }
+
+  test("simhash dedup plan has no sort-merge join and hashes text once") {
+    val nodes = executedNodes(SparkEntry.queries("dedup_simhash")(spark, sf))
+    val smj = nodes.collect { case j: SortMergeJoinExec => j }
+    assert(smj.isEmpty, s"sort-merge joins in the simhash plan:\n${nodes.head}")
+    val hashing = computing(nodes) { case _: graft.functions.SimHash60 => true }
+    assert(hashing.size == 1,
+      s"simhash60 computed in ${hashing.size} projections:\n${nodes.head}")
+  }
+
+  test("minhash dedup plan shingles text once and reads no cache or checkpoint") {
+    spark.sharedState.cacheManager.clearCache()
+    val nodes = executedNodes(SparkEntry.queries("dedup_minhash")(spark, sf))
+    val shingling = computing(nodes) {
+      case u: ScalaUDF => u.udfName.contains(MinHashDeduplicateFilter.ShingleUdf)
     }
-    assert(hashing.nonEmpty && hashing.size <= 2,
-      s"simhash60 computed in ${hashing.size} scans:\n$root")
+    assert(shingling.size == 1,
+      s"shingles computed in ${shingling.size} projections:\n${nodes.head}")
+    val stored = nodes.collect {
+      case s: InMemoryTableScanExec => s
+      case s: RDDScanExec => s
+    }
+    assert(stored.isEmpty, s"materialized inputs in the minhash plan:\n${nodes.head}")
   }
 
   test("narrow text ops have no shuffle at all") {
@@ -101,7 +133,6 @@ class PlanSpec extends SparkSuite {
   }
 
   test("bucketed tables join without any exchange") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString
     val s2 = spark // same session; tables land in its warehouse
     val li = Storage.table(s2, sf, "lineitem")
     val o = Storage.table(s2, sf, "orders")

@@ -201,7 +201,7 @@ class R3Spec extends SparkSuite {
   }
 
   test("xlsx round-trips typed columns through Storage dispatch") {
-    val dir = java.nio.file.Files.createTempDirectory("xlsx").toString
+    val dir = tempDir("xlsx").toString
     val path = s"$dir/out.xlsx"
     val df = Seq(
       (1L, "alpha", 1.5, true, "x & <y> \"z\""),
@@ -225,7 +225,7 @@ class R3Spec extends SparkSuite {
   }
 
   test("xlsx reader handles nulls, shared-string-free sheets, wide columns") {
-    val dir = java.nio.file.Files.createTempDirectory("xlsx2").toString
+    val dir = tempDir("xlsx2").toString
     val path = s"$dir/nulls.xlsx"
     val df = Seq(
       (Some("a"), Option.empty[Double], 1),
@@ -247,7 +247,7 @@ class R3Spec extends SparkSuite {
   }
 
   test("pickle codec round-trips typed rows with nulls") {
-    val dir = java.nio.file.Files.createTempDirectory("pkl1").toString
+    val dir = tempDir("pkl1").toString
     val df = Seq(
       (1L, Some("alpha"), Some(1.5), Some(true)),
       (2L, None, Some(-0.25), Some(false)),
@@ -272,7 +272,7 @@ class R3Spec extends SparkSuite {
     val python = Seq("/usr/bin/python3", "/usr/local/bin/python3")
       .find(p => new java.io.File(p).exists())
       .getOrElse("python3")
-    val dir = java.nio.file.Files.createTempDirectory("pkl2").toString
+    val dir = tempDir("pkl2").toString
     // Python writes protocols 2 AND 5 (memoized strings, frames); we read
     val script =
       s"""import pickle
@@ -305,7 +305,7 @@ class R3Spec extends SparkSuite {
   }
 
   test("pickle reader refuses object-reconstruction opcodes") {
-    val dir = java.nio.file.Files.createTempDirectory("pkl3").toString
+    val dir = tempDir("pkl3").toString
     val evil = new ProcessBuilder("python3", "-c",
       s"""import pickle, os
          |class Evil:

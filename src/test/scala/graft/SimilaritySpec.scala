@@ -181,7 +181,7 @@ class SimilaritySpec extends SparkSuite {
     val rows = (0L until 300L).map { i =>
       (i, (0 until dim).map(d => math.sin(i * dim + d)))
     }.toDF("vec_id", "embedding")
-    val out = java.nio.file.Files.createTempDirectory("graft_ivf_test").toString
+    val out = tempDir("graft_ivf_test").toString
     graft.ops.sim.Similarity.ivfTopK(rows, rows.filter(col("vec_id") < 3),
       "embedding", "vec_id", k = 3, nLists = 8, nProbe = 2,
       exportDir = Some(out)).count()
@@ -191,6 +191,17 @@ class SimilaritySpec extends SparkSuite {
     assert(exported.select("sf_rows").distinct().as[Long].head() == 300L)
     // centers carry the training dimensionality
     assert(exported.select(size(col("center"))).distinct().as[Int].head() == dim)
+  }
+
+  test("ivfTopK over an all-NaN corpus returns no rows and no error") {
+    // no finite corpus vector → an empty training sample → no centres
+    val corpus = (0L until 50L).map(i => (i, Seq.fill(8)(Double.NaN)))
+      .toDF("vec_id", "embedding")
+    val queries = (100L until 105L).map(i => (i, Seq.tabulate(8)(d => math.sin(i + d))))
+      .toDF("vec_id", "embedding")
+    val out = graft.ops.sim.Similarity.ivfTopK(corpus, queries, "embedding",
+      "vec_id", k = 3, nLists = 4, nProbe = 2)
+    assert(out.collect().isEmpty)
   }
 
   test("ivfTopK accepts a shuffle-lineage query set on a starved corpus") {

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The one local SparkSession every suite in the test JVM shares. */
@@ -16,10 +17,30 @@ object SparkTestSession {
 }
 
 /** Shared fixture of the Spark suites: the session, the sf0.001 test
-  * data, and the helpers more than one suite uses. */
-trait SparkSuite extends AnyFunSuite {
+  * data, a scratch root deleted after the suite, and the helpers more
+  * than one suite uses. */
+trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestSession.spark
   val sf = "/root/testdata/sf0.001"
+
+  private var scratchRoot: java.nio.file.Path = null
+
+  /** A fresh directory under the suite's scratch root. The root is made
+    * on first use and deleted, with everything under it, after the
+    * suite's last test. */
+  def tempDir(prefix: String): java.nio.file.Path = synchronized {
+    if (scratchRoot == null)
+      scratchRoot = java.nio.file.Files.createTempDirectory("graft_suite")
+    java.nio.file.Files.createTempDirectory(scratchRoot, prefix)
+  }
+
+  override protected def afterAll(): Unit =
+    try synchronized {
+      if (scratchRoot != null) {
+        org.apache.commons.io.FileUtils.deleteQuietly(scratchRoot.toFile)
+        scratchRoot = null
+      }
+    } finally super.afterAll()
 
   /** Jobs started inside `body`, attributed via an exclusive job group
     * (gate jobs run eagerly in the calling thread, so they inherit it).
@@ -69,7 +90,7 @@ trait SparkSuite extends AnyFunSuite {
     * JDBC database, so executor-side connection paths run end to end)
     * with `ddl` run in it; returns its JDBC url. */
   def derby(ddl: String*): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_derby")
+    val dir = tempDir("graft_derby")
     val url = s"jdbc:derby:${dir.toString}/db;create=true"
     val conn = java.sql.DriverManager.getConnection(url)
     val st = conn.createStatement()

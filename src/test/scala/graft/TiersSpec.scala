@@ -69,7 +69,7 @@ class TiersSpec extends SparkSuite {
     assert(batch.nonEmpty)
     // streaming run over the same data through a memory sink
     // (file stream source requires a directory → stage a copy)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ev")
+    val dir = tempDir("graft_ev")
     java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
     val schema = events.schema
@@ -86,8 +86,8 @@ class TiersSpec extends SparkSuite {
   }
 
   test("chunked streaming pipeline processes files with checkpointing") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream").toString
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_docs")
+    val tmp = tempDir("graft_stream").toString
+    val srcDir = tempDir("graft_docs")
     java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/documents.parquet"),
       srcDir.resolve("documents.parquet"))
     val docs = Storage.table(spark, sf, "documents")
@@ -124,7 +124,7 @@ class TiersSpec extends SparkSuite {
   }
 
   test("checkpointed pipeline run + resume from step") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val tmp = tempDir("graft_ckpt").toString
     val docs = Storage.table(spark, sf, "documents")
     val pipeline = Pipeline.of(
       graft.ops.refine.LowercaseRefiner("text"),
@@ -175,7 +175,7 @@ class TiersSpec extends SparkSuite {
   }
 
   test("streaming dedup drops cross-chunk duplicates") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sd")
+    val dir = tempDir("graft_sd")
     java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
     val events = Storage.table(spark, sf, "events")
@@ -200,7 +200,7 @@ class TiersSpec extends SparkSuite {
     // the unbounded form (dropDuplicates on the hash alone) state grows
     // monotonically with every distinct key ever seen — exactly the
     // defect this pins: numRowsTotal at the last batch would be ~150.
-    val dir = java.nio.file.Files.createTempDirectory("graft_sdb")
+    val dir = tempDir("graft_sdb")
     val keysPerBatch = 50
     def batch(i: Int) = (0 until keysPerBatch).map { j =>
       (i.toLong * keysPerBatch + j,
@@ -211,7 +211,7 @@ class TiersSpec extends SparkSuite {
     // files, not write-output directories); AvailableNow +
     // maxFilesPerTrigger=1 replays them as ordered micro-batches
     (0 to 2).foreach { i =>
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_sdb_w$i")
+      val tmp = tempDir(s"graft_sdb_w$i")
       batch(i).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp).iterator()
       val it = scala.jdk.CollectionConverters.IteratorHasAsScala(part).asScala
