@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.{CoalesceExec, SparkPlan, UnionExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -13,8 +14,7 @@ import org.apache.spark.sql.functions._
   *
   * AQE (on by default in Spark 4) already handles runtime skew-join
   * splitting and partition coalescing; these helpers cover the cases
-  * AQE can't: deliberate co-partitioning to reuse a partitioning across
-  * stages, salted aggregation for heavy-hitter keys feeding non-join
+  * AQE can't: salted aggregation for heavy-hitter keys feeding non-join
   * operators, and CPU-bound stages whose width AQE sizes by bytes.
   *
   * The parallelism policy: a lazy plan runs a narrow CPU-heavy stage at
@@ -110,13 +110,32 @@ object Partitioning {
       case _ => false
     }
 
-  /** Co-partition both sides on the join key so repeated joins/aggs on
-    * the same key reuse one shuffle (the poor-man's bucketing for
-    * non-table data; for persisted data use `writeBucketed`). */
-  def coPartition(left: DataFrame, right: DataFrame, key: String,
-      numPartitions: Int): (DataFrame, DataFrame) =
-    (left.repartition(numPartitions, col(key)),
-      right.repartition(numPartitions, col(key)))
+  /** Row counts of `dfs`, in order, from ONE Spark job: an ids-only
+    * union tagged by position (`__side`), driven through one `runJob`. A
+    * DataFrame `count()` runs 2+ jobs under AQE (shuffle-stage
+    * materialization, then the final stage), each a ~55 ms scheduling
+    * floor in local mode — the measurable cost of an eager gate at bench
+    * scale. When an input carries shuffle lineage, where `toRdd` would
+    * finalize its exchanges under AQE (see [[exchangeFree]]), the union
+    * is counted by one AQE-managed aggregation instead. */
+  private[graft] def rowCounts(dfs: DataFrame*): IndexedSeq[Long] = {
+    val sides = dfs.length
+    val tagged = dfs.zipWithIndex
+      .map { case (df, i) => df.select(lit(i).as("__side")) }
+      .reduce(_ unionAll _)
+    val parts: Array[Array[Long]] =
+      if (exchangeFree(tagged.queryExecution.executedPlan))
+        tagged.sparkSession.sparkContext.runJob(tagged.queryExecution.toRdd,
+          (it: Iterator[InternalRow]) => {
+            val c = new Array[Long](sides)
+            it.foreach(r => c(r.getInt(0)) += 1L)
+            c
+          })
+      else tagged.groupBy(col("__side")).count().collect().map { r =>
+        val c = new Array[Long](sides); c(r.getInt(0)) = r.getLong(1); c
+      }
+    (0 until sides).map(i => parts.map(_(i)).sum)
+  }
 
   /** Salted two-phase aggregation: groupBy(key, salt) partial → groupBy
     * key final. Caps per-task input for heavy-hitter keys at

@@ -5,8 +5,9 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
-import graft.core.Op
+import graft.core.{Op, Partitioning}
 import graft.functions.text._
+import graft.ops.sim.{CosineLsh, Similarity}
 
 /** Deduplication family — SURVEY §2.3.
   *
@@ -285,23 +286,21 @@ final case class MinHashDeduplicateFilter(inputKey: String = "text",
     * disk-full, a poisoned row). Without this the failed wave's
     * registered shuffle files are stranded until ContextCleaner's
     * eventual GC path — scratch held on the next attempt's disk budget
-    * exactly when the machine is already in trouble (r12 verdict #7:
-    * the happy path of wave budgeting was pinned, the failure path was
-    * not). `created` is scoped to the wave's OWN executed-RDD lineage
-    * (see the caller), so a concurrent query's shuffles are never
-    * swept; the map stages that already completed wrote real files, so
-    * there is real scratch to reclaim even though the action failed.
+    * exactly when the machine is already in trouble. `created` is scoped
+    * to the wave's OWN executed-RDD lineage (see the caller), so a
+    * concurrent query's shuffles are never swept; the map stages that
+    * already completed wrote real files, so there is real scratch to
+    * reclaim even though the action failed.
     *
-    * Coverage boundary (r14, stated honestly): this guards the
-    * CHECKPOINT action. A wave that instead dies during AQE stage
-    * materialization (inside the caller's `toRdd`, BEFORE `created` can
-    * be computed — the lineage walk needs the final RDD) leaves any
-    * earlier completed stages' files to ContextCleaner's eventual GC
-    * path: bounded-scratch degrades for that wave, it does not break,
-    * and a delta-scoped sweep there would re-open the concurrent-query
-    * deletion hazard lineage-scoping exists to close. ShuffleCleanupSpec
-    * pins the map-stage-death case (nothing landed → reclamation is a
-    * no-op). */
+    * Coverage boundary: this guards the CHECKPOINT action. A wave that
+    * instead dies during AQE stage materialization (inside the caller's
+    * `toRdd`, BEFORE `created` can be computed — the lineage walk needs
+    * the final RDD) leaves any earlier completed stages' files to
+    * ContextCleaner's eventual GC path: bounded-scratch degrades for
+    * that wave, it does not break, and a delta-scoped sweep there would
+    * re-open the concurrent-query deletion hazard lineage-scoping exists
+    * to close. ShuffleCleanupSpec pins the map-stage-death case (nothing
+    * landed → reclamation is a no-op). */
   private[graft] def checkpointReclaimingOnFailure(idsDf: DataFrame,
       sc: org.apache.spark.SparkContext, created: Set[Int],
       cleanup: (org.apache.spark.SparkContext, Set[Int]) => Unit =
@@ -503,8 +502,7 @@ object MinHashDeduplicateFilter {
   }
 
   /** Used when the shuffle-dir free space can't be measured (statfs
-    * unavailable, misconfigured dir) — the round-8/9 constant, proven to
-    * complete at ×1000. */
+    * unavailable, misconfigured dir); 24 GiB completes the ×1000 corpus. */
   val FallbackScratchBudgetBytes: Long = 24L << 30
 
   /** LOCAL MODE ONLY: half the usable space of the FIRST spark.local.dir
@@ -649,33 +647,26 @@ final case class SemDeduplicateFilter(embKey: String = "embedding",
     bits: Int = 0, tables: Int = 4, dim: Int = 64,
     maxBucket: Int = 4096) extends Op {
   require(mode == "lsh" || mode == "exact", s"mode $mode")
-  require(bits >= 0 && bits <= 63,
-    s"bits must be in [0, 63] (Long bucket-code width), got $bits")
+  CosineLsh.checkBits(bits)
   require(maxBucket > 0, "maxBucket must be positive")
   val name = "sem_deduplicate_filter"
   val inputKeys = Seq(embKey, orderKey)
   val outputKeys = Nil
   def apply(df: DataFrame): DataFrame = {
     val v = df.select(col(orderKey), col(embKey).cast("array<double>").as("__v"))
-    // bits = 0 (default) → auto-size from the corpus count, same
-    // constant-occupancy reasoning as Similarity.similarityJoin: a fixed
-    // width is linear occupancy growth, and here overflow past maxBucket
-    // silently costs RECALL (rows checked against the capped pool only) —
-    // auto keeps buckets at the density the cap assumes. Floor 8 makes
-    // small corpora identical to the old fixed default.
-    // oneJobCount: v is an exchange-free projection, so the auto-bits
-    // gate costs ONE job, not count()'s 2 AQE jobs (r13 sideCounts rule)
-    val b = if (bits == 0 && mode == "lsh")
-      graft.ops.sim.Similarity.autoBits(
-        graft.ops.sim.Similarity.oneJobCount(v)) else bits
     val dups =
       if (mode == "exact") {
-        val cos = Dedup.cosine(col("vi"), col("vj"))
+        val cos = Similarity.cosine(col("vi"), col("vj"))
         val l = v.select(col(orderKey).as("i"), col("__v").as("vi"))
         val r = v.select(col(orderKey).as("j"), col("__v").as("vj"))
         l.crossJoin(r).where(col("i") < col("j")).where(cos >= 1.0 - eps)
           .select(col("j").as(orderKey)).distinct()
       } else {
+        // bits = 0 (default) → auto-size from the corpus count: a fixed
+        // width is linear occupancy growth, and here overflow past
+        // maxBucket silently costs RECALL (rows checked against the capped
+        // pool only) — auto keeps buckets at the density the cap assumes.
+        val b = CosineLsh.width(bits, Partitioning.rowCounts(v).head)
         // One hash exchange on the bucket key + in-partition sort groups
         // each bucket's members in orderKey order; the walk then streams
         // rows, keeping a pool of the bucket's first maxBucket vectors.
@@ -685,11 +676,10 @@ final case class SemDeduplicateFilter(embKey: String = "embedding",
         // The cosine is the same strict left fold as the codegen'd
         // CosineSimilarity expression — decisions are bit-identical to
         // the SQL oracle's replay.
-        val bucketed = v.withColumn("__bucket", explode(
-          graft.ops.sim.CosineLsh.buckets(col("__v"), b, dim, tables)))
-          .select(col("__bucket"), col(orderKey), col("__v"))
-        val parted = bucketed.repartition(col("__bucket"))
-          .sortWithinPartitions(col("__bucket"), col(orderKey))
+        val bucketed = CosineLsh.explodeKeys(v, col("__v"), b, dim, tables)
+          .select(col(CosineLsh.Key), col(orderKey), col("__v"))
+        val parted = bucketed.repartition(col(CosineLsh.Key))
+          .sortWithinPartitions(col(CosineLsh.Key), col(orderKey))
         val outSchema = StructType(
           Seq(parted.schema(orderKey)))
         val (mb, th) = (maxBucket, 1.0 - eps)
@@ -700,10 +690,10 @@ final case class SemDeduplicateFilter(embKey: String = "embedding",
         parted.mapPartitions { it =>
           val pool = new ArrayBuffer[Array[Double]]()
           val poolIds = new ArrayBuffer[Any]()
-          var cur: String = null
+          var cur: Any = null
           it.flatMap { row =>
-            val b = row.getString(0)
-            if (b != cur) { cur = b; pool.clear(); poolIds.clear() }
+            val key = row.get(0)
+            if (key != cur) { cur = key; pool.clear(); poolIds.clear() }
             val id = row.get(1)
             val vec = row.getSeq[Double](2).toArray
             var dup = false
@@ -922,12 +912,6 @@ object Dedup {
       .filter(col("__rn") === 1)
       .drop("__rn")
   }
-
-  /** Cosine similarity via the native codegen'd expression
-    * ([[graft.functions.CosineSimilarity]]) — strict left fold, so results
-    * are bit-reproducible against SQL oracles that fold the same way. */
-  def cosine(a: Column, b: Column): Column =
-    graft.functions.expressions.cosineSim(a, b)
 
   /** The same strict left fold as [[graft.functions.CosineSimilarity]]
     * (single loop accumulating dot and both norms, then one divide) over

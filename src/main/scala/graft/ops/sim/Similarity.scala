@@ -19,14 +19,14 @@ object Similarity {
     * — the comfortable upper edge for a broadcast build. Above it the
     * join falls back to a shuffle (see the gate in [[lshTopK]]).
     *
-    * This default is a per-deployment tuning surface, and the r14/r15
-    * A/Bs priced both branches (BASELINE.md, digests identical):
-    *   - ×100 (200k vectors, 50k queries, single node): broadcast+spread
-    *     110.7 s vs merge fallback 116.4 s — a wash.
-    *   - ×1000 (2M vectors, 50k queries, single node): broadcast+spread
-    *     434.8 s vs fallback 224.5 s — the FALLBACK wins 1.94× locally
-    *     (shared-heap GC + hash-probe overhead at near-dup match
-    *     multiplicity; the corpus shuffle it pays costs only local disk).
+    * This default is a per-deployment tuning surface. On a single node
+    * (BASELINE.md, digests identical on both branches):
+    *   - 200k vectors, 50k queries: broadcast+spread 110.7 s vs merge
+    *     fallback 116.4 s — a wash.
+    *   - 2M vectors, 50k queries: broadcast+spread 434.8 s vs fallback
+    *     224.5 s — the FALLBACK wins 1.94× locally (shared-heap GC +
+    *     hash-probe overhead at near-dup match multiplicity; the corpus
+    *     shuffle it pays costs only local disk).
     * The default still stands for the 100 TB design point: on a
     * multi-executor cluster the fallback shuffles the ENTIRE corpus
     * across the network while the broadcast ships ~tens of MB of
@@ -67,31 +67,20 @@ object Similarity {
     * the shuffle at k rows per task per query — a window row_number here
     * would shuffle every scored candidate.
     *
-    * Deployment cliff (r16, measured): the typed TopK aggregate plans
-    * as ObjectHashAggregate, and Spark falls back to SORT-BASED
-    * aggregation once a task's hash map exceeds
+    * The typed TopK aggregate plans as ObjectHashAggregate, and Spark
+    * falls back to SORT-BASED aggregation once a task's hash map exceeds
     * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold`
-    * (default 128 distinct keys) — NOT a memory limit. Above ~128
-    * queries per task the partial aggregation therefore sorts the
-    * ENTIRE scored candidate stream on disk even though the TopK
-    * buffers it actually needs are ~200 B per query (10k queries ≈
-    * 2 MB). At ×1000 (2M vectors, 10k queries, nProbe 4/16) the
-    * fallback spilled the 5e9-row candidate stream and died ENOSPC at
-    * 59 GB free; with the threshold raised to 128k the same query
-    * holds the whole aggregation in-memory. Deployments running
-    * large query sets through [[lshTopK]]/[[ivfTopK]] should raise
-    * that conf to their expected per-task query-key count.
-    *
-    * THE r17 STRUCTURAL KILL: [[partialTopK]] pre-reduces each
-    * partition to ≤ k rows per query with a bounded JVM heap BEFORE
-    * this aggregation, so the ObjectHashAggregate — and any sort-based
-    * fallback it takes — sees ≤ k rows per query per task instead of
-    * the raw candidate stream. No session conf can turn this operator
-    * into a corpus-candidate disk sort anymore; the default
-    * fallbackThreshold is now harmless (sorting k×queries-per-task
-    * pre-reduced rows, not billions). Verified at ×1000 on the DEFAULT
-    * threshold with digests bit-identical to the r16 raised-threshold
-    * cells (BASELINE.md Round-17). */
+    * (default 128 distinct keys) — NOT a memory limit. Fed the raw
+    * candidate stream, that fallback sorts every scored candidate on disk
+    * (2M vectors × 10k queries spilled 5e9 rows and died ENOSPC, although
+    * the TopK buffers need only ~200 B per query). Invariant:
+    * [[partialTopK]] pre-reduces each partition to ≤ k rows per query
+    * with a bounded JVM heap BEFORE this aggregation, so the aggregate —
+    * and any sort-based fallback it takes — sees ≤ k rows per query per
+    * task, and no session conf can turn this operator into a
+    * corpus-candidate disk sort. The default threshold is therefore
+    * harmless; at 2M vectors it gives digests bit-identical to a raised
+    * one (BASELINE.md). */
   private[graft] def rankTopK(scored: DataFrame, k: Int): DataFrame =
     partialTopK(scored, k).groupBy("query_id")
       .agg(TopK.column(k, col("cos"), col("neighbor_id")).as("__tk"))
@@ -184,44 +173,39 @@ object Similarity {
     rankTopK(scored, k)
   }
 
-  /** Random-hyperplane LSH bucketing: `bits` sign-bits of dot products
-    * with fixed pseudo-random planes (deterministic seed), OR-amplified
-    * across `tables` independent plane sets — a pair is a candidate when
-    * it collides in ANY table, so recall ≈ 1-(1-p^bits)^tables instead of
-    * single-probe p^bits. Same-bucket candidates then rank exactly.
+  /** LSH top-k over [[CosineLsh]] buckets (`bits` sign bits per table,
+    * OR-amplified across `tables`): same-bucket candidates rank exactly.
     * Recall < 1 by construction — the 100 TB path where brute force is
     * off the table.
     *
     * `bits = 0` (the default) auto-sizes the bucket width from the CORPUS
-    * row count (see [[autoBits]]): with bits held fixed, per-table bucket
-    * occupancy is n/2^bits — linear in corpus size — so every query's
-    * candidate scan grows linearly with the corpus and the corpus side
-    * has no occupancy cap at all. Auto keeps per-bucket density constant;
-    * the floor makes small corpora identical to the old bits=8 default. */
+    * row count (see [[CosineLsh.autoBits]]): with bits held fixed,
+    * per-table bucket occupancy is n/2^bits — linear in corpus size — so
+    * every query's candidate scan grows linearly with the corpus and the
+    * corpus side has no occupancy cap at all. Auto keeps per-bucket
+    * density constant; the floor makes small corpora identical to
+    * bits=8. */
   def lshTopK(corpus: DataFrame, queries: DataFrame, embKey: String,
       idKey: String, k: Int, bits: Int = 0, dim: Int = 64,
       tables: Int = 4,
       maxBroadcastQueries: Long = MaxBroadcastQueries): DataFrame = {
-    require(bits >= 0 && bits <= 63,
-      s"bits must be in [0, 63] (Long bucket-code width), got $bits")
+    CosineLsh.checkBits(bits)
     val q0 = queries.select(col(idKey).as("query_id"),
       col(embKey).cast("array<double>").as("__qe"))
     // The broadcast below is the operator's contract — top-k for a SMALL
     // query set against a big corpus, one narrow corpus pass, no corpus
     // shuffle. A corpus-sized query set would build a multi-GB broadcast
-    // and die on the driver/executors (the r6 band-join hazard class), so
-    // the hint is gated on a cheap ids-only count: above the threshold we
-    // fall back to a shuffle join (merge hint — both sides corpus-scale,
-    // a static-estimate broadcast must not resurface) and say so loudly.
+    // and die on the driver/executors, so the hint is gated on a cheap
+    // ids-only count: above the threshold we fall back to a shuffle join
+    // (merge hint — both sides corpus-scale, a static-estimate broadcast
+    // must not resurface) and say so loudly.
     //
-    // ONE job feeds both auto knobs: a tagged ids-only union counted in
-    // a single runJob (a DataFrame count() is 2 jobs under AQE); when
-    // `bits` is explicit the corpus side isn't scanned at all.
-    val qIds = q0.select(lit(1).as("__side"))
-    val (corpusN, qCount) = sideCounts(
-      if (bits == 0) corpus.select(lit(0).as("__side")).unionAll(qIds)
-      else qIds)
-    val b = if (bits == 0) autoBits(corpusN) else bits
+    // ONE job feeds both auto knobs; when `bits` is explicit the corpus
+    // side isn't scanned at all (and `width` never reads counts.head).
+    val counts = Partitioning.rowCounts(
+      (if (bits == 0) Seq(corpus, q0) else Seq(q0)): _*)
+    val qCount = counts.last
+    val b = CosineLsh.width(bits, counts.head)
     val broadcastPath = qCount <= maxBroadcastQueries
     // On the broadcast path the probe stage runs at the corpus scan's
     // width and its work grows with queries × collisions, so a large
@@ -234,12 +218,8 @@ object Similarity {
     val cPre =
       if (broadcastPath && qCount >= MinHealQueries) Partitioning.spread("lshTopK", c0)(true)
       else c0
-    val c = cPre
-      .withColumn("__ba", CosineLsh.buckets(col("__ce"), b, dim, tables))
-      .withColumn("__bucket", explode(col("__ba")))
-    val q = q0
-      .withColumn("__bb", CosineLsh.buckets(col("__qe"), b, dim, tables))
-      .withColumn("__bucket", explode(col("__bb")))
+    val c = CosineLsh.explodeKeys(cPre, col("__ce"), b, dim, tables, Some("__ba"))
+    val q = CosineLsh.explodeKeys(q0, col("__qe"), b, dim, tables, Some("__bb"))
     val qSide =
       if (broadcastPath) broadcast(q)
       else {
@@ -249,29 +229,13 @@ object Similarity {
             "(broadcast of a corpus-sized query side would OOM)")
         q.hint("merge")
       }
-    // Emit-once instead of pair-dedup (r17 — similarityJoin's trick,
-    // applied to its top-k sibling): both sides carry their full
-    // bucket-key array (tables × ~12 B — noise next to the vector), and
-    // a pair survives only in its FIRST shared bucket in table order,
-    // so every candidate pair leaves the join exactly once and the old
-    // `dropDuplicates(query_id, neighbor_id)` EXCHANGE — which moved
-    // the entire candidate stream (×1000 measured: 5.6 GB shuffle write
-    // in the probe stage) and couldn't map-side-collapse cross-table
-    // dups (they surface in different partitions) — is gone entirely.
-    // The invariant is the same one R9Spec pins for similarityJoin:
-    // bucket keys are namespaced "t:code", so __ba has `tables`
-    // DISTINCT entries and "first shared bucket" is unique per pair.
-    // The intersect check runs BEFORE the cosine: a tables-element
-    // array intersect is cheaper than the 64-dim dot it skips on the
-    // other tables' copies of a multi-collision pair. With rankTopK's
-    // partialTopK pre-reduce below, the broadcast path's ONLY exchange
-    // is now the k-bounded groupBy — nothing candidate-stream-sized
-    // ever shuffles.
-    val scored = c.join(qSide, Seq("__bucket"))
+    // Both sides carry their key array (tables × ~12 B — noise next to
+    // the vector) for the emit-once check, so with rankTopK's partialTopK
+    // pre-reduce the broadcast path's ONLY exchange is the k-bounded
+    // groupBy — nothing candidate-stream-sized ever shuffles.
+    val scored = c.join(qSide, Seq(CosineLsh.Key))
       .where(col("neighbor_id") =!= col("query_id"))
-      .where(element_at(
-        filter(col("__ba"), x => array_contains(col("__bb"), x)), 1)
-        === col("__bucket"))
+      .where(CosineLsh.firstShared(col("__ba"), col("__bb")))
       .withColumn("cos", cosine(col("__qe"), col("__ce")))
       .select("query_id", "neighbor_id", "cos")
     rankTopK(scored, k)
@@ -327,9 +291,9 @@ object Similarity {
     exportDir.foreach { base =>
       val spark = corpus.sparkSession
       import spark.implicits._
-      // oneJobCount, not count(): one job on an exchange-free projection;
+      // rowCounts, not count(): one job on an exchange-free projection;
       // every corpus row counts, matching the oracle's count(*)
-      val nRows = oneJobCount(c)
+      val nRows = Partitioning.rowCounts(c).head
       centers.zipWithIndex.toSeq
         .map { case (ct, i) => (i, ct.toSeq, nRows) }
         .toDF("list_id", "center", "sf_rows")
@@ -356,7 +320,7 @@ object Similarity {
     // large query set spreads a narrow corpus; the query count is one
     // job, paid only when the corpus is narrow.
     val cProbe = Partitioning.spread("ivfTopK", c.where(col("__ce").isNotNull))(
-      oneJobCount(q) >= MinHealQueries)
+      Partitioning.rowCounts(q).head >= MinHealQueries)
     // get, not (0): with no centres the list is empty and the row joins nothing
     val assigned = cProbe.withColumn("__list",
       get(nearestLists(col("__ce"), lit(1)), lit(0)))
@@ -457,125 +421,36 @@ object Similarity {
     cs
   }
 
-  /** Bucket-width auto-sizing for [[similarityJoin]] (`bits = 0`): with
-    * bits held FIXED, per-table bucket occupancy is n/2^bits — linear in
-    * corpus size — so the candidate stream (Σ C(occupancy, 2) per code)
-    * grows QUADRATICALLY with n: the ×1000 probe measured ~1.2e11
-    * candidate rows at the bits=8 default against 2M vectors, where ×100
-    * (200k vectors) was ~1.25e9. Sizing bits ≈ log₂(n / targetBucket)
-    * keeps occupancy — hence per-code candidate work — constant as the
-    * corpus grows; recall per table falls (p_bit^bits), which the
-    * `tables` OR-amplification offsets for high-cosine pairs (a cos 0.95
-    * pair collides per 14-bit table w.p. ~0.63 vs ~0.77 at 8 bits;
-    * across 16 tables both round to ~1). Floor 8 keeps small corpora on
-    * the well-tested default; cap 24 bounds the key space. The cap
-    * applies to the AUTO path only — explicit `bits` values are taken
-    * as given (a caller may deliberately go wider). Shared by
-    * [[similarityJoin]], [[lshTopK]] (corpus side) and
-    * [[graft.ops.dedup.SemDeduplicateFilter]]. */
-  private[graft] def autoBits(n: Long, targetBucket: Int = 1024): Int = {
-    val needed = math.ceil(
-      math.log(math.max(1.0, n.toDouble / targetBucket)) / math.log(2.0)).toInt
-    math.min(24, math.max(8, needed))
-  }
-
-  /** Row count in exactly ONE Spark job when the plan allows it — the
-    * single-side sibling of [[sideCounts]] (same reasoning: a DataFrame
-    * `count()` is 2+ jobs under AQE, each a ~55 ms scheduling floor).
-    * The fast path drives `toRdd` directly, which is only legal on an
-    * [[Partitioning.exchangeFree]] plan; a shuffle-lineage input (e.g.
-    * an ivfTopK query set built by a groupBy) falls back to a plain
-    * AQE-managed `count()` — 2+ jobs, never its exchanges finalized
-    * through `toRdd`. */
-  private[graft] def oneJobCount(df: DataFrame): Long = {
-    val narrow = df.select(lit(1))
-    if (!Partitioning.exchangeFree(narrow.queryExecution.executedPlan)) narrow.count()
-    else narrow.sparkSession.sparkContext
-      .runJob(narrow.queryExecution.toRdd,
-        (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
-          var c = 0L; while (it.hasNext) { it.next(); c += 1L }; c
-        })
-      .sum
-  }
-
-  /** Per-side row counts of a tagged ids-only plan (`__side` int column,
-    * 0 = corpus, 1 = queries) in exactly ONE Spark job. A DataFrame
-    * `count()` runs 2+ jobs under AQE (shuffle-stage materialization,
-    * then the final stage) — each job is a ~55 ms scheduling floor in
-    * local mode, which is the measurable cost of an auto-knob gate at
-    * bench scale. The plan here is a narrow projection (no exchange),
-    * so driving its RDD directly with one `runJob` is one pass, one
-    * job, no AQE staging. When a CALLER's input carries shuffle lineage
-    * (`toRdd` would finalize its exchanges under AQE), fall back to one
-    * AQE-managed aggregation instead. */
-  private def sideCounts(tagged: DataFrame): (Long, Long) = {
-    if (!Partitioning.exchangeFree(tagged.queryExecution.executedPlan)) {
-      val m = tagged.groupBy(col("__side")).count().collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-      return (m.getOrElse(0, 0L), m.getOrElse(1, 0L))
-    }
-    val rdd = tagged.queryExecution.toRdd
-    tagged.sparkSession.sparkContext
-      .runJob(rdd, (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
-        var c0 = 0L; var c1 = 0L
-        it.foreach(r => if (r.getInt(0) == 0) c0 += 1 else c1 += 1)
-        (c0, c1)
-      })
-      .foldLeft((0L, 0L)) { case ((a0, a1), (b0, b1)) => (a0 + b0, a1 + b1) }
-  }
-
   /** Cosine-similarity join: all pairs (a, b) with cos ≥ threshold, via
     * multi-table LSH buckets (candidates only, then exact check).
     * `bits = 0` (the DEFAULT — fixed widths are the measured scale trap:
     * at bits=8 the ×1000 probe's candidate work was ~1.2e11 rows)
     * auto-sizes the bucket width from the corpus row count (see
-    * [[autoBits]]) — the knob that keeps candidate work linear in corpus
-    * size at a fixed per-bucket density. Explicit `bits` values are
-    * honored as given, including > 24, up to 63 (the Long code width —
-    * wider would silently wrap the shift and COARSEN buckets, so it is
-    * rejected at the boundary).
+    * [[CosineLsh.autoBits]]) — the knob that keeps candidate work linear
+    * in corpus size at a fixed per-bucket density. Explicit `bits` values
+    * are honored as given, including > 24, up to 63
+    * ([[CosineLsh.checkBits]]).
     *
-    * Emit-once: each side carries its full bucket-key array (tables ×
-    * ~12 B — noise next to the vector) and a pair survives only in its
-    * FIRST shared bucket in table order, so every qualifying pair leaves
-    * the join exactly once and no pair-dedup exchange exists at all.
-    * The output of this operator IS the pair set — by-construction
-    * quadratic in duplicate-cluster size — and the old
-    * `dropDuplicates(a, b)` shuffled up to tables× that output (pairs
-    * colliding in several tables reach the exchange once per table,
-    * in different partitions, so map-side dedup cannot collapse them):
-    * a ×1000 probe (2M vectors, ~10⁹ qualifying pairs) died writing
-    * ~4×-output shuffle scratch. With emit-once the pairs stream
-    * straight from the join. */
+    * Pairs stream straight from the join: [[CosineLsh.firstShared]]
+    * passes each qualifying pair exactly once, so no pair-dedup exchange
+    * exists. The output of this operator IS the pair set —
+    * by-construction quadratic in duplicate-cluster size — and a pair
+    * dedup would shuffle up to tables× that output (2M vectors with ~10⁹
+    * qualifying pairs die writing that shuffle scratch). */
   def similarityJoin(df: DataFrame, embKey: String, idKey: String,
       threshold: Double, bits: Int = 0, dim: Int = 64,
       tables: Int = 4): DataFrame = {
-    require(bits >= 0 && bits <= 63,
-      s"bits must be in [0, 63] (Long bucket-code width), got $bits")
-    // one ids-only count in one job ([[sideCounts]]) sizes both the key
-    // width (bits = 0) and the enumerate stage's partition count
-    val corpusN = sideCounts(df.select(lit(0).as("__side")))._1
-    // bits = 0 → auto: sizes the key width so bucket occupancy stays
-    // ~constant as the corpus grows
-    val b = if (bits == 0) autoBits(corpusN) else bits
-    val v = df.select(col(idKey), col(embKey).cast("array<double>").as("__v"))
-      .withColumn("__bkts", CosineLsh.buckets(col("__v"), b, dim, tables))
-      .withColumn("__bucket", explode(col("__bkts")))
+    CosineLsh.checkBits(bits)
+    // one ids-only count job sizes both the key width (bits = 0) and the
+    // enumerate stage's partition count
+    val corpusN = Partitioning.rowCounts(df).head
+    val v = CosineLsh.explodeKeys(
+      df.select(col(idKey), col(embKey).cast("array<double>").as("__v")),
+      col("__v"), CosineLsh.width(bits, corpusN), dim, tables, Some("__bkts"))
     val l = v.select(col(idKey).as("a"), col("__v").as("va"),
-      col("__bkts").as("__ba"), col("__bucket"))
+      col("__bkts").as("__ba"), col(CosineLsh.Key))
     val r = v.select(col(idKey).as("b"), col("__v").as("vb"),
-      col("__bkts").as("__bb"), col("__bucket"))
-    // first-shared-bucket check BEFORE the cosine: a 4-element array
-    // intersect is cheaper than the 64-dim dot it skips on the other
-    // tables' copies of a multi-collision pair.
-    // EMIT-ONCE INVARIANT: "first shared bucket is unique per pair"
-    // holds only because CosineLsh namespaces every key "t:code" by
-    // table index, so a row's bucket array has tables DISTINCT entries
-    // (R9Spec pins per-row duplicate-freeness). If the key scheme ever
-    // dropped the namespace, two tables could yield the same key and a
-    // pair would satisfy the first-shared-bucket check in BOTH copies —
-    // duplicate (a,b) rows, with no dropDuplicates left downstream to
-    // catch them.
+      col("__bkts").as("__bb"), col(CosineLsh.Key))
     // merge hint: both sides are corpus-sized and carry the vector — a
     // small static size estimate must never pick a corpus broadcast.
     // The enumerate stage's work is quadratic per bucket while its
@@ -585,24 +460,12 @@ object Similarity {
     // task and bounds the straggler tail by the largest single bucket.
     // Identical subtrees share one exchange (ReusedExchange).
     val width = Partitioning.widthFor(corpusN, df.sparkSession)
-    l.repartition(width, col("__bucket"))
-      .join(r.repartition(width, col("__bucket")).hint("merge"), Seq("__bucket")).where(col("a") < col("b"))
-      .where(element_at(
-        filter(col("__ba"), x => array_contains(col("__bb"), x)), 1)
-        === col("__bucket"))
+    l.repartition(width, col(CosineLsh.Key))
+      .join(r.repartition(width, col(CosineLsh.Key)).hint("merge"), Seq(CosineLsh.Key))
+      .where(col("a") < col("b"))
+      .where(CosineLsh.firstShared(col("__ba"), col("__bb")))
       .withColumn("cos", cosine(col("va"), col("vb")))
       .filter(col("cos") >= threshold)
       .select("a", "b", "cos")
   }
-}
-
-object CosineLsh {
-  /** One bucket key per table, namespaced "t:bucket" so tables never
-    * cross-match; explode + join on the key gives OR-amplification.
-    * Imperative kernel with a cached precomputed weight matrix — the
-    * equivalent expression tree (tables × bits × dim terms) blows up
-    * codegen. Shared with the SQL-registered `cosine_lsh_buckets`
-    * ([[graft.functions.kernels]]). */
-  def buckets(v: Column, bits: Int, dim: Int, tables: Int): Column =
-    graft.functions.hashExpressions.lshBuckets(v, bits, dim, tables)
 }

@@ -276,6 +276,20 @@ class DedupSpec extends SparkSuite {
     }
   }
 
+  test("sem dedup lsh builds with one count job for auto bits and none for explicit bits") {
+    val src = vecs(300)
+    val kept = Seq(0 -> 1, 8 -> 0).map { case (bits, jobs) =>
+      var out: DataFrame = null
+      val n = jobsDuring(s"sem-dedup-gate-bits-$bits") {
+        out = SemDeduplicateFilter("embedding", "vec_id", bits = bits)(src)
+      }
+      assert(n == jobs, s"bits=$bits: expected $jobs build jobs, saw $n")
+      out.select("vec_id").as[Long].collect().sorted.toSeq
+    }
+    // 300 rows auto-size to the 8-bit floor: the same drop set
+    assert(kept(0) == kept(1))
+  }
+
   /** A parquet corpus with a near-duplicate cluster, exact clones and
     * unique documents, some with markup the refiners strip; read back so
     * the dedup sees a file scan. */

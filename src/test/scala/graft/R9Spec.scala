@@ -76,13 +76,13 @@ class R9Spec extends SparkSuite {
   }
 
   test("similarityJoin bits=0 auto-sizes buckets and floors at the default") {
-    import graft.ops.sim.Similarity
+    import graft.ops.sim.{CosineLsh, Similarity}
     // the formula: constant-occupancy sizing with floor 8 / cap 24
-    assert(Similarity.autoBits(1000) == 8)        // small corpus → floor
-    assert(Similarity.autoBits(200000) == 8)      // ×100 scale → still 8
-    assert(Similarity.autoBits(2000000) == 11)    // ×1000 → ceil(log2(1953))
-    assert(Similarity.autoBits(2000000000L) == 21)
-    assert(Similarity.autoBits(Long.MaxValue) == 24) // cap
+    assert(CosineLsh.autoBits(1000) == 8)        // small corpus → floor
+    assert(CosineLsh.autoBits(200000) == 8)      // ×100 scale → still 8
+    assert(CosineLsh.autoBits(2000000) == 11)    // ×1000 → ceil(log2(1953))
+    assert(CosineLsh.autoBits(2000000000L) == 21)
+    assert(CosineLsh.autoBits(Long.MaxValue) == 24) // cap
     // below the floor, auto ≡ the bits=8 default: identical pair sets
     val emb = core.Storage.table(spark, sf, "embeddings")
     def pairs(bits: Int) =

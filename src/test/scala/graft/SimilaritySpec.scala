@@ -224,9 +224,9 @@ class SimilaritySpec extends SparkSuite {
     val narrow = vecs(400)
     val shuffled = vecs(400).repartition(2, col("vec_id"))
     val queries = vecs(20)
-    // bits=0 ⇒ sideCounts sees corpus+queries; the shuffled corpus puts
-    // an exchange in the tagged union, taking the r16 fallback. Same
-    // content ⇒ same auto-bits ⇒ same rows as the narrow corpus.
+    // bits=0 ⇒ the gate counts corpus+queries; the shuffled corpus puts
+    // an exchange in the tagged union, taking the aggregation fallback.
+    // Same content ⇒ same auto-bits ⇒ same rows as the narrow corpus.
     val a = Similarity.lshTopK(narrow, queries, "embedding", "vec_id", k = 3)
       .orderBy("query_id", "rank").collect().toSeq
     val b = Similarity.lshTopK(shuffled, queries, "embedding", "vec_id", k = 3)
@@ -256,36 +256,36 @@ class SimilaritySpec extends SparkSuite {
   }
 
   test("oneJobCount equals count() and costs exactly one job") {
-    import graft.ops.sim.Similarity
+    import graft.core.Partitioning
     val emb: DataFrame =
       spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     emb.schema // scan-infra outside the probe (read() already ran its job)
     val expected = emb.where(col("vec_id") % 3 === 0).count()
     var got = -1L
     val n = jobsDuring("r14-one-job-count") {
-      got = Similarity.oneJobCount(emb.where(col("vec_id") % 3 === 0))
+      got = Partitioning.rowCounts(emb.where(col("vec_id") % 3 === 0)).head
     }
     assert(got == expected, s"oneJobCount $got != count() $expected")
     assert(n == 1, s"expected exactly 1 job, saw $n")
   }
 
   test("oneJobCount costs exactly one job on an exchange-free input") {
-    import graft.ops.sim.Similarity
+    import graft.core.Partitioning
     var c = -1L
     val n = jobsDuring("r16-onejob-narrow") {
-      c = Similarity.oneJobCount(vecs(123))
+      c = Partitioning.rowCounts(vecs(123)).head
     }
     assert(c == 123L)
     assert(n == 1, s"exchange-free fast path must stay one job, saw $n")
   }
 
   test("oneJobCount on a shuffle-lineage input is correct via the fallback") {
-    import graft.ops.sim.Similarity
+    import graft.core.Partitioning
     // groupBy lineage: the narrow projection still carries the exchange,
     // and toRdd would finalize it under AQE — the ivfTopK query-side
     // hazard. The fallback must return the right number.
     val grouped = vecs(200)
       .groupBy((col("vec_id") % 7).as("g")).count()
-    assert(Similarity.oneJobCount(grouped) == 7L)
+    assert(Partitioning.rowCounts(grouped).head == 7L)
   }
 }
